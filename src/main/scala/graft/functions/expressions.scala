@@ -1423,8 +1423,52 @@ case class ArrayDotLong(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** One citation-edge line `<from> <to>` -> array of one (from, to)
+  * struct, NULL for a comment or malformed line (CitationText.edge):
+  * the regex-free replacement for `split(trim(line), "\\s+")` plus two
+  * casts. Meant for `inline`, so the line is tokenized once. */
+case class ParseCitationEdge(child: Expression)
+    extends UnaryExpression {
+  override def dataType: DataType =
+    ArrayType(CitationText.edgeSchema, containsNull = false)
+  override def nullable: Boolean = true
+  override def nullSafeEval(v: Any): Any =
+    CitationText.edge(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c => s"""
+       |${ev.value} = graft.functions.CitationText.edge($c);
+       |if (${ev.value} == null) { ${ev.isNull} = true; }
+     """.stripMargin)
+  override protected def withNewChildInternal(newChild: Expression): ParseCitationEdge =
+    copy(child = newChild)
+}
+
+/** One node-table line `<id> <yyyy-mm-dd>` -> array of one (id, year)
+  * struct, NULL for a comment or malformed line (CitationText.date). */
+case class ParsePublishedDate(child: Expression)
+    extends UnaryExpression {
+  override def dataType: DataType =
+    ArrayType(CitationText.dateSchema, containsNull = false)
+  override def nullable: Boolean = true
+  override def nullSafeEval(v: Any): Any =
+    CitationText.date(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c => s"""
+       |${ev.value} = graft.functions.CitationText.date($c);
+       |if (${ev.value} == null) { ${ev.isNull} = true; }
+     """.stripMargin)
+  override protected def withNewChildInternal(newChild: Expression): ParsePublishedDate =
+    copy(child = newChild)
+}
+
 /** Column wrappers + SQL registration. */
 object GraftFunctions {
+  def parse_citation_edge(line: Column): Column =
+    GraftColumnBridge.column(ParseCitationEdge(GraftColumnBridge.expression(line)))
+
+  def parse_published_date(line: Column): Column =
+    GraftColumnBridge.column(ParsePublishedDate(GraftColumnBridge.expression(line)))
+
   def array_dot(a: Column, b: Column): Column =
     GraftColumnBridge.column(ArrayDot(
       GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))

@@ -6,12 +6,13 @@ import graft.analytics.{CitationAnalytics, ConnectedComponents, HopPlot}
 import graft.sources.CitationLoaders
 
 /** Reference parity on the reference's own toy fixture
-  * (/root/reference/data/testing: 11 nodes, 17 edges, years 1992-1998).
+  * (data/testing, vendored as src/test/resources/reference: 11 nodes,
+  * 17 edges, years 1992-1998).
   * Expected values hand/independently derived (SURVEY.md §5.1).
   */
 class CitationParitySpec extends SparkSpec {
 
-  private val fixtures = "/root/reference/data/testing"
+  private val fixtures = ReferenceFixtures.toyDir
   private lazy val citations =
     CitationLoaders.loadCitations(spark, s"$fixtures/citations.txt")
   private lazy val published =

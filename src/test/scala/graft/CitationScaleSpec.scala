@@ -19,19 +19,25 @@ class CitationScaleSpec extends SparkSpec {
   // deterministic full-scale synthesizer shared with GenGoldens
   private def inDir = SynthCitations.inDir
 
+  /** The three tests that need the golden densities.csv fail on one
+    * message naming it while it is missing. */
+  private def requireDensities(): java.nio.file.Path =
+    ReferenceFixtures.densities.getOrElse(fail(ReferenceFixtures.DensitiesMissing))
+
   test("CLI density at published scale reproduces the golden densities.csv") {
+    val golden = requireDensities()
     val outDir = java.nio.file.Files.createTempDirectory("citescale_out").toString
     Main.runTask(spark, "density", inDir, outDir)
 
     val part = new java.io.File(s"$outDir/densities").listFiles()
       .filter(_.getName.startsWith("part-")).head
     val got = java.nio.file.Files.readAllLines(part.toPath).asScala.toSeq
-    val want = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(
-      "/root/reference/data/output/densities.csv")).asScala.toSeq
+    val want = java.nio.file.Files.readAllLines(golden).asScala.toSeq
     assert(got === want)
   }
 
   test("loaders at published scale: 37201 nodes, 347414 edges") {
+    requireDensities()
     assert(CitationLoaders.loadPublishedDates(spark, s"$inDir/published-dates.txt")
       .count() === 37201L)
     assert(CitationLoaders.loadCitations(spark, s"$inDir/citations.txt")
@@ -41,7 +47,7 @@ class CitationScaleSpec extends SparkSpec {
   test("CLI diameter honors a precomputed nodepairs.csv denominator") {
     // toy fixture + a nodepairs file with the known 1998 total (55 pairs):
     // output must equal the computed-denominator run
-    val fixtures = "/root/reference/data/testing"
+    val fixtures = ReferenceFixtures.toyDir
     val in = java.nio.file.Files.createTempDirectory("np_in")
     for (f <- Seq("citations.txt", "published-dates.txt"))
       java.nio.file.Files.copy(java.nio.file.Paths.get(s"$fixtures/$f"), in.resolve(f))
@@ -61,6 +67,7 @@ class CitationScaleSpec extends SparkSpec {
     // the random wiring gives ~log n diameter, so 90%-coverage BFS at
     // 1995+ carries too many pairs for the test JVM (the REAL graph's
     // published diameter_1995..1997.csv can't be matched: missing blob)
+    requireDensities()
     val outDir = java.nio.file.Files.createTempDirectory("citescale_d").toString
     for (y <- 1992 to 1994) {
       Main.runTask(spark, "diameter", inDir, outDir, Seq(y))

@@ -439,4 +439,27 @@ class DegenerateInputSpec extends SparkSpec {
       graft.pipeline.LangIdModel.withMarkers(one)).collect().head
     assert(r.getAs[Boolean]("correct"))
   }
+
+  private def citationFile(lines: String*): String = {
+    val f = java.nio.file.Files.createTempDirectory("degenerate").resolve("lines.txt")
+    java.nio.file.Files.writeString(f, lines.mkString("", "\n", "\n"))
+    f.toString
+  }
+
+  // a one-token line, a non-numeric field and a leading tab each aborted
+  // the regex loaders under ANSI (INVALID_ARRAY_INDEX_IN_ELEMENT_AT,
+  // CAST_INVALID_INPUT); the loaders drop them like any malformed line
+  test("citations loader drops one-token, non-numeric and leading-tab lines") {
+    assert(spark.conf.get("spark.sql.ansi.enabled") === "true")
+    val path = citationFile("9", "a\tb", "\t7\t8", "1\t2")
+    val got = graft.sources.CitationLoaders.loadCitations(spark, path).collect()
+    assert(got.map(r => (r.getInt(0), r.getInt(1))).toSeq === Seq((1, 2)))
+  }
+
+  test("published-dates loader drops one-token, non-numeric and leading-tab lines") {
+    assert(spark.conf.get("spark.sql.ansi.enabled") === "true")
+    val path = citationFile("9", "a\t1995-01-01", "\t7\t1995-01-01", "3\t1996-02-02")
+    val got = graft.sources.CitationLoaders.loadPublishedDates(spark, path).collect()
+    assert(got.map(r => (r.getInt(0), r.getInt(1))).toSeq === Seq((3, 1996)))
+  }
 }

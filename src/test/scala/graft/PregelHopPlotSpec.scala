@@ -20,7 +20,7 @@ class PregelHopPlotSpec extends SparkSpec {
   }
 
   test("pregel == dataset BFS on the reference toy graph (1998 snapshot)") {
-    val fixtures = "/root/reference/data/testing"
+    val fixtures = ReferenceFixtures.toyDir
     val edges = CitationAnalytics.snapshotEdges(
       CitationLoaders.loadCitations(spark, s"$fixtures/citations.txt"),
       CitationLoaders.loadPublishedDates(spark, s"$fixtures/published-dates.txt"),

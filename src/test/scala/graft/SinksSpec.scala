@@ -9,7 +9,7 @@ import graft.sources.{CitationLoaders, Sinks}
 class SinksSpec extends SparkSpec {
 
   test("saveSortedAsCsv: one part file, header, globally sorted rows") {
-    val fixtures = "/root/reference/data/testing"
+    val fixtures = ReferenceFixtures.toyDir
     val density = CitationAnalytics.density(
       CitationLoaders.loadCitations(spark, s"$fixtures/citations.txt"),
       CitationLoaders.loadPublishedDates(spark, s"$fixtures/published-dates.txt"))

@@ -17,8 +17,9 @@ object SynthCitations {
   /** (year, cumulative nodes, cumulative edges) from the golden file. */
   lazy val golden: Seq[(Int, Long, Long)] =
     java.nio.file.Files
-      .readAllLines(java.nio.file.Paths.get(
-        "/root/reference/data/output/densities.csv")).asScala.toSeq
+      .readAllLines(ReferenceFixtures.densities.getOrElse(
+        throw new IllegalStateException(ReferenceFixtures.DensitiesMissing)))
+      .asScala.toSeq
       .drop(1)
       .map(_.split(",")).map(a => (a(0).toInt, a(1).toLong, a(2).toLong))
 
