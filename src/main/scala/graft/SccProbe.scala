@@ -41,12 +41,12 @@ object SccProbe {
         val n = graft.analytics.Scc.scc(spark,
           graft.graph.CitationGraph.edges(spark, d)).count()
         graft.analytics.CheckpointRegistry.releaseAll(spark)
+        val (outer, fwd, bwd) = graft.analytics.Scc.depths(spark)
+        val trims = graft.analytics.Superstep.runs(spark, "scc.trim")
         println(f"SCCPROBE $d trimOn=$trimOn rows=$n " +
-          f"outer=${graft.analytics.Scc.lastOuterRounds} " +
-          f"fwd=${graft.analytics.Scc.lastMaxFwdRounds} " +
-          f"bwd=${graft.analytics.Scc.lastMaxBwdRounds} " +
-          f"trim=${graft.analytics.Scc.lastTrimRounds} " +
-          f"trimmed=${graft.analytics.Scc.lastTrimmed} " +
+          f"outer=$outer fwd=$fwd bwd=$bwd " +
+          f"trim=${trims.map(_.rounds).sum} " +
+          f"trimmed=${trims.flatMap(_.stats).sum} " +
           f"jobs=${jobCount.get() - j0} " +
           f"${(System.nanoTime() - t0) / 1e9}%.2fs")
       }
@@ -55,14 +55,14 @@ object SccProbe {
         graft.graph.CitationGraph.edges(spark, d)).count()
       graft.analytics.CheckpointRegistry.releaseAll(spark)
       println(f"CONDPROBE $d comps=$nc depthRounds=" +
-        f"${graft.analytics.Condensation.lastDepthRounds} " +
+        f"${graft.analytics.Superstep.stats(spark, "condensation").fold(-1)(_.rounds)} " +
         f"${(System.nanoTime() - t1) / 1e9}%.2fs")
       val t2 = System.nanoTime()
       val nm = graft.analytics.Mst.mst(spark,
         graft.graph.CitationGraph.edges(spark, d)).count()
       graft.analytics.CheckpointRegistry.releaseAll(spark)
-      println(f"MSTPROBE $d edges=$nm rounds=${graft.analytics.Mst.lastRounds} " +
-        f"jumpsOk=${graft.analytics.Mst.lastJumpsConverged} " +
+      val (mstRounds, jumpsOk) = graft.analytics.Mst.convergence(spark)
+      println(f"MSTPROBE $d edges=$nm rounds=$mstRounds jumpsOk=$jumpsOk " +
         f"${(System.nanoTime() - t2) / 1e9}%.2fs")
     }
     spark.stop()

@@ -58,11 +58,16 @@ object CitationAnalytics {
       maxD: Int = 20, coverage: Double = 0.9,
       totalPairs: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    val edges = snapshotEdges(citations, publishedDates, year)
-    val total = totalPairs.orElse(Some(
-      ConnectedComponents.componentSizes(edges)
-        .agg(sum(col("n_pairs"))).head.getLong(0)))
-    HopPlot.hopPlotRows(spark, edges, maxD, coverage, total)
-      .toDF("d", "g(d)", "percent_of_total")
+    // the snapshot's join and text scans run once: both loops read this
+    // checkpoint and are sized from its row count
+    val (snap, n, _) = org.apache.spark.sql.GraftColumnBridge.ckptCounted(
+      snapshotEdges(citations, publishedDates, year))
+    try {
+      val total = totalPairs.orElse(Some(
+        ConnectedComponents.componentSizes(snap, n)
+          .agg(sum(col("n_pairs"))).head.getLong(0)))
+      HopPlot.hopPlotRows(spark, snap, n, maxD, coverage, total)
+        .toDF("d", "g(d)", "percent_of_total")
+    } finally Superstep.release(snap)
   }
 }

@@ -22,8 +22,8 @@ import graft.registry.Q
   * Scale shape: the two corpus-sized joins (edge endpoints → SCC ids)
   * happen ONCE before the loop; the depth loop then runs entirely on
   * the CONDENSED graph (components, not vertices). Scc's pinned loop
-  * and this one run serially — LoopConf is not reentrant, and the
-  * assignment is checkpoint-materialized between them. */
+  * and this one run serially (a session pins one [[Superstep]] at a
+  * time), with the assignment checkpoint-materialized between them. */
 object Condensation {
 
   /** Longest-path unroll depth; measured fixpoint (SccProbe prints it):
@@ -31,8 +31,6 @@ object Condensation {
     * edges), sf0.1 → 2 (2 components), sf1 → 2 (20 components across
     * the 10 copies). ~5x headroom. */
   val DepthUnroll = 10
-
-  @volatile private[graft] var lastDepthRounds: Int = -1
 
   def condensation(spark: SparkSession, edgesRaw: DataFrame): DataFrame = {
     // g_scc's assignment, materialized so its pinned loop fully exits
@@ -48,64 +46,44 @@ object Condensation {
     * g_scc and g_condensation in one session pay the SCC loop once. */
   def condensationWith(spark: SparkSession, assign: DataFrame,
       edgesRaw: DataFrame): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
-
-    def ckpt(df: DataFrame): DataFrame = df.localCheckpoint(true)
-    def free(df: DataFrame): Unit =
-      GraftColumnBridge.checkpointRdd(df).foreach(_.unpersist(false))
     val e = edgesRaw.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct()
-    val ce = ckpt(e
+    // condensed edges, materialized before the loop, which is sized from
+    // their count
+    val (ce, nCe, _) = org.apache.spark.sql.GraftColumnBridge.ckptCounted(e
       .join(assign.select(col("id").as("src"), col("scc_id").as("s1")), "src")
       .join(assign.select(col("id").as("dst"), col("scc_id").as("s2")), "dst")
       .filter(col("s1") =!= col("s2"))
       .select(col("s1").as("src"), col("s2").as("dst")).distinct())
     val sizes = assign.groupBy(col("scc_id")).agg(count(lit(1)).as("size"))
-
-    val out = LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(ce)) {
-      var depthFull = ckpt(assign.select(col("scc_id")).distinct()
+    Superstep.run(spark, "condensation", nCe) { loop =>
+      loop.own(ce)
+      loop.input(nCe)
+      val (depth0, nComp, _) = loop.ckpt(assign.select(col("scc_id")).distinct()
         .select(col("scc_id"), lit(0L).as("depth"), lit(false).as("chg")))
-      var depth = depthFull.select(col("scc_id"), col("depth"))
-      var changed = 1L
-      var rounds = 0
-      // the condensation is a DAG by SCC correctness, so this always
-      // converges — the hard bound turns a (would-be-impossible) cycle
-      // into a loud failure instead of an infinite loop
-      while (changed > 0 && rounds < 64) {
-        rounds += 1
+      // the condensation is a DAG by SCC correctness, so depths settle
+      // within (longest path + 1) <= |components| rounds: reaching the cap
+      // means a cycle, i.e. an SCC assignment bug
+      loop.limit(nComp + 1)
+      val full = loop.iterate(depth0, nComp, "chg") { s =>
+        val depth = s.select(col("scc_id"), col("depth"))
         val relax = depth.join(ce, col("scc_id") === col("src"))
           .groupBy(col("dst")).agg(max(col("depth") + 1L).as("cand"))
           .select(col("dst").as("scc_id"), col("cand"))
-        // relaxation, its changed flag, AND the convergence count in one
-        // fused job (ckptCounted: materialization counts as it caches)
-        val (nextC, _, nChg) = GraftColumnBridge.ckptCounted(
-          depth.join(relax.hint("shuffle_hash"), Seq("scc_id"), "left")
-            .select(col("scc_id"),
-              greatest(col("depth"), coalesce(col("cand"), col("depth")))
-                .as("depth"),
-              (col("cand").isNotNull && col("cand") > col("depth")).as("chg")),
-          "chg")
-        changed = nChg
-        free(depthFull); depthFull = nextC
-        depth = depthFull.select(col("scc_id"), col("depth"))
-      }
-      require(changed == 0,
-        "condensation depth relaxation did not converge in 64 rounds — " +
-          "the contracted graph is not acyclic (SCC assignment bug)")
-      lastDepthRounds = rounds
-      // the result is a projection of depthFull — register the BACKING
-      // checkpoint (checkpointRdd only matches a bare LogicalRDD)
-      CheckpointRegistry.trackFinal(spark, depthFull)
-      depth
+        depth.join(relax.hint("shuffle_hash"), Seq("scc_id"), "left")
+          .select(col("scc_id"),
+            greatest(col("depth"), coalesce(col("cand"), col("depth")))
+              .as("depth"),
+            (col("cand").isNotNull && col("cand") > col("depth")).as("chg"))
+      }((_, _, changed) => changed == 0)
+      // `assign` is NOT kept here: the caller owns its lifetime (the
+      // registry query passes Scc.assignmentFor's session-pinned cache,
+      // which a post-query release would make unrecomputable)
+      loop.keep(full)
+      full.select(col("scc_id"), col("depth"))
+        .join(sizes, "scc_id")
+        .select(col("scc_id"), col("depth"), col("size"))
     }
-    free(ce)
-    val res = out.join(sizes, "scc_id")
-      .select(col("scc_id"), col("depth"), col("size"))
-    // `assign` is NOT tracked here: the caller owns its lifetime (the
-    // registry query passes Scc.assignmentFor's session-pinned cache,
-    // which a post-query release would make unrecomputable)
-    CheckpointRegistry.trackFinal(spark, out)
-    res
   }
 
   // ---- registry entry ---------------------------------------------------
@@ -147,8 +125,9 @@ object Condensation {
       val out = condensationWith(s, Scc.assignmentFor(s, d),
         graft.graph.CitationGraph.edges(s, d))
         .orderBy(col("scc_id"))
-      require(lastDepthRounds <= DepthUnroll,
-        s"g_condensation depth fixpoint took $lastDepthRounds rounds but " +
+      val rounds = Superstep.stats(s, "condensation").get.rounds
+      require(rounds <= DepthUnroll,
+        s"g_condensation depth fixpoint took $rounds rounds but " +
           s"the unrolled oracle is depth $DepthUnroll — raise DepthUnroll")
       out
     })

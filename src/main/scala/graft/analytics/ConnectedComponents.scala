@@ -18,95 +18,44 @@ object ConnectedComponents {
   /** @param edges (src,dst) directed; treated as undirected.
     * @return (id, comp) where comp = min node id of the component. */
   def components(edges: DataFrame): DataFrame =
-    // LoopConf like the other supersteps: partitions sized once from the
-    // graph (the dedup-survivor pair graphs are tiny — paying 32-task
-    // rounds there was most of d_dedup_survivors' cost), AQE pinned off
-    // so state partitioning survives the localCheckpoints. fastCount:
-    // checkpoint-backed callers (IncrementalComponents, survivors) skip
-    // the re-planned aggregate for the sizing count.
-    LoopConf.pinned(edges.sparkSession,
-      org.apache.spark.sql.GraftColumnBridge.fastCount(edges)) {
-      componentsPinned(edges)
-    }
+    components(edges, org.apache.spark.sql.GraftColumnBridge.memoCount(edges))
 
-  private def componentsPinned(edges: DataFrame): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
-    import graft.graph.CitationGraph.bidirectional
-    val spark = edges.sparkSession
-    // dst-partitioned ONCE before the checkpoint: every propagation
-    // round joins bidir on its dst against the id-partitioned label
-    // frame — an un-partitioned checkpoint was reshuffled by dst EVERY
-    // round (guide §2.4 "two operations keyed the same way can share
-    // one exchange"); the checkpoint preserves the partitioning, so
-    // rounds now shuffle only the label/message side.
-    val bidir = bidirectional(edges).repartition(col("dst"))
-      .localCheckpoint(true)
-    var lbl = bidir.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("comp"))
-      .localCheckpoint(true)
-    // each round's checkpoint fully materializes before the prior one is
-    // freed — blocks never accumulate across rounds (VERDICT r5 #2: the
-    // unreleased per-round checkpoints were a linear-in-rounds leak).
-    // NEGATIVE RESULT, measured and kept (round 10): chaining TWO
-    // propagation steps per checkpoint (Scc's stride-2 job cut) made
-    // g_components 2.2x SLOWER here (1.09s -> 2.38s warm at sf0.1):
-    // each step consumes its input twice (state join + neighbor-min
-    // build), so an un-checkpointed inner step re-evaluates its whole
-    // subtree inside the outer one — the doubled propagation work
-    // outweighs the halved scheduler round-trips on this loop's cheap
-    // rounds. Scc keeps stride-2 because its flood rounds are
-    // expensive enough that the job-RT saving wins there; here
-    // one-step-per-checkpoint is the measured optimum.
-    var prevCkpt = lbl
-    var changed = 1L
-    while (changed > 0) {
-      val nbrMin = bidir.join(lbl, bidir("dst") === lbl("id"))
-        .groupBy(bidir("src").as("nid")).agg(min(col("comp")).as("nbComp"))
-      // the convergence flag is computed INTO the checkpointed row and
-      // counted off the materialized RDD (GraftColumnBridge.countTrue):
-      // the former filter(comp2 < comp).count() re-planned a filter +
-      // partial/final aggregate + exchange EVERY round (~100-140 ms of
-      // driver work per round on the bench host, SchedProbe) where one
-      // cached-scan job does the same count in ~30 ms (guide §1.2/§5:
-      // loop-body actions should not re-plan).
-      // checkpoint materialization and the changed-count fuse into ONE
-      // job (GraftColumnBridge.ckptCounted — the eager ckpt + countTrue
-      // pair was two scheduler round-trips per round, guide §1.2)
-      val (upd, _, nChg) = GraftColumnBridge.ckptCounted(
+  /** [[components]] with the loop sized from a known edge count. */
+  private[analytics] def components(edges: DataFrame, rows: Long): DataFrame =
+    Superstep.run(edges.sparkSession, "components", rows) { loop =>
+      import graft.graph.CitationGraph.bidirectional
+      // dst-partitioned once: every round joins bidir on dst against the
+      // id-partitioned labels, so a round shuffles only the label side
+      val (bidir, nPairs, _) = loop.ckpt(bidirectional(edges).repartition(col("dst")))
+      loop.input(nPairs)
+      val (lbl0, nV, _) = loop.ckpt(bidir.select(col("src").as("id")).distinct()
+        .select(col("id"), col("id").as("comp"), lit(false).as("chg")))
+      // labels settle within (component diameter + 1) <= |V| rounds
+      loop.limit(nV + 1)
+      // one propagation step per checkpoint: two per checkpoint measured
+      // 2.2x slower at sf0.1 (round 10), each step reading its input twice
+      val full = loop.iterate(lbl0, nV, "chg") { s =>
+        val lbl = s.select(col("id"), col("comp"))
+        val nbrMin = bidir.join(lbl, bidir("dst") === lbl("id"))
+          .groupBy(bidir("src").as("nid")).agg(min(col("comp")).as("nbComp"))
         lbl.join(nbrMin, col("id") === col("nid"), "left")
           .select(col("id"),
-            least(col("comp"), coalesce(col("nbComp"), col("comp"))).as("comp2"),
-            (coalesce(col("nbComp"), col("comp")) < col("comp")).as("chg")),
-        "chg")
-      changed = nChg
-      GraftColumnBridge.checkpointRdd(prevCkpt).foreach(_.unpersist(false))
-      prevCkpt = upd
-      lbl = upd.select(col("id"), col("comp2").as("comp"))
+            least(col("comp"), coalesce(col("nbComp"), col("comp"))).as("comp"),
+            (coalesce(col("nbComp"), col("comp")) < col("comp")).as("chg"))
+      }((_, _, changed) => changed == 0)
+      loop.keep(full)
+      full.select(col("id"), col("comp"))
     }
-    GraftColumnBridge.checkpointRdd(bidir).foreach(_.unpersist(false))
-    // the final checkpoint backs the lazy result — the runner frees it
-    // after materialization
-    CheckpointRegistry.trackFinal(spark, prevCkpt)
-    lbl
-  }
-
-  /** GraphX alternate (Pregel-based under the hood) — cross-validated
-    * against the DataFrame propagation in CitationParitySpec. */
-  def componentsGraphX(edges: DataFrame): DataFrame = {
-    import graft.graph.CitationGraph.bidirectional
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val tuples = bidirectional(edges).rdd.map(r => (r.getLong(0), r.getLong(1)))
-    org.apache.spark.graphx.Graph.fromEdgeTuples(tuples, defaultValue = 1)
-      .connectedComponents()
-      .vertices
-      .toDF("id", "comp")
-  }
 
   /** Component sizes + the connected-pair count per component
     * (denominator of the hop-plot percentages: sum of C(size,2)). */
-  def componentSizes(edges: DataFrame): DataFrame =
-    components(edges)
+  def componentSizes(edges: DataFrame): DataFrame = sizesOf(components(edges))
+
+  private[analytics] def componentSizes(edges: DataFrame, rows: Long): DataFrame =
+    sizesOf(components(edges, rows))
+
+  private def sizesOf(comps: DataFrame): DataFrame =
+    comps
       .groupBy(col("comp")).agg(count(lit(1)).as("size"))
       .select(col("comp"), col("size"),
         (col("size") * (col("size") - 1) / 2).cast("long").as("n_pairs"))

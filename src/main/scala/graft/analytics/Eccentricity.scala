@@ -41,19 +41,12 @@ object Eccentricity {
   def eccentricity(spark: SparkSession, edgesRaw: DataFrame,
       sourceMax: Long = Stress.SourceMax,
       rounds: Int = Stress.Rounds): DataFrame =
-    LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) {
-      import org.apache.spark.sql.GraftColumnBridge
-      val e = Stress.prep(edgesRaw).localCheckpoint(true)
-      val (reached, _, _) = Stress.forward(spark, e, sourceMax, rounds)
-      val out = aggregateLevels(reached)
-      GraftColumnBridge.checkpointRdd(e).foreach(_.unpersist(false))
-      CheckpointRegistry.trackFinal(spark, reached)
-      out
-    }
+    Stress.aggregateSampled(spark, "eccentricity", edgesRaw, sourceMax,
+      rounds)(aggregateLevels)
 
   /** Registry path: aggregate over the session-cached sampled BFS. */
   def eccentricityFor(spark: SparkSession, dir: String): DataFrame =
-    aggregateLevels(Stress.levelsFor(spark, dir)._2)
+    aggregateLevels(Stress.levelsFor(spark, dir).reached)
 
   // ---- registry entry ---------------------------------------------------
 

@@ -47,22 +47,15 @@ object Harmonic {
       .select(col("v").as("id"), col("harmonic_ppm"))
 
   /** Standalone path (specs, arbitrary edge frames): runs the shared
-    * forward BFS, aggregates, releases the loop's checkpoints. */
+    * forward BFS and aggregates it. */
   def harmonic(spark: SparkSession, edgesRaw: DataFrame,
       sourceMax: Long = SourceMax, rounds: Int = Rounds): DataFrame =
-    LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) {
-      import org.apache.spark.sql.GraftColumnBridge
-      val e = Stress.prep(edgesRaw).localCheckpoint(true)
-      val (reached, _, _) = Stress.forward(spark, e, sourceMax, rounds)
-      val out = aggregateLevels(reached)
-      GraftColumnBridge.checkpointRdd(e).foreach(_.unpersist(false))
-      CheckpointRegistry.trackFinal(spark, reached)
-      out
-    }
+    Stress.aggregateSampled(spark, "harmonic", edgesRaw, sourceMax, rounds)(
+      aggregateLevels)
 
   /** Registry path: aggregate over the session-cached sampled BFS. */
   def harmonicFor(spark: SparkSession, dir: String): DataFrame =
-    aggregateLevels(Stress.levelsFor(spark, dir)._2)
+    aggregateLevels(Stress.levelsFor(spark, dir).reached)
 
   // ---- registry entry ---------------------------------------------------
 

@@ -2,7 +2,6 @@ package graft.analytics
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.registry.Q
 
@@ -26,8 +25,8 @@ import graft.registry.Q
   * (hash(src) and hash(dst)) and persisted; each iteration is two
   * aggregations that reuse those partitionings, state re-keys by id
   * through the vertex left join, and localCheckpoint pins the loop
-  * state per round (AQE off for the loop via LoopConf, so the exchange
-  * count is pinned).
+  * state per round (AQE off for the loop via [[Superstep]], so the
+  * exchange count is pinned).
   */
 object Hits {
 
@@ -39,66 +38,52 @@ object Hits {
 
   def hits(spark: SparkSession, edgesRaw: DataFrame, iters: Int = Iters)
       : DataFrame =
-    LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) {
-      hitsPinned(spark, edgesRaw, iters)
+    Superstep.run(spark, "hits",
+      org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) { loop =>
+      val e = loop.cache(edgesRaw.select(col("src"), col("dst"))
+        .filter(col("src") =!= col("dst")).distinct())
+      val eBySrc = loop.cache(e.repartition(col("src")))
+      val eByDst = loop.cache(e.repartition(col("dst")))
+      val v = loop.cache(e.select(col("src").as("id"))
+        .union(e.select(col("dst").as("id"))).distinct())
+      val n = v.count()
+      if (n == 0) v.select(col("id"), lit(0L).as("hub"), lit(0L).as("auth"))
+      else {
+        eBySrc.count(); eByDst.count(); loop.free(e)
+        var h = v.select(col("id"), lit(Scale).as("s"))
+        var a = v.select(col("id"), lit(Scale).as("s"))
+        var prev: Seq[DataFrame] = Nil
+        for (_ <- 1 to iters) {
+          // the RAW sums are what gets checkpointed (two materializations
+          // per round); the normalized views are constant-depth
+          // projections over them, so nothing recomputes an aggregation
+          val (aRaw, _, _) = loop.ckpt(v.join(
+              eBySrc.join(h.hint("shuffle_hash"), col("src") === col("id"))
+                .groupBy(col("dst").as("aid")).agg(sum(col("s")).as("sr")),
+              col("id") === col("aid"), "left")
+            .select(col("id"), coalesce(col("sr"), lit(0L)).as("s")))
+          val (hRaw, _, _) = loop.step(v.join(
+              eByDst.join(aRaw.hint("shuffle_hash"), col("dst") === col("id"))
+                .groupBy(col("src").as("hid")).agg(sum(col("s")).as("sr")),
+              col("id") === col("hid"), "left")
+            .select(col("id"), coalesce(col("sr"), lit(0L)).as("s")))
+          // joint rescale: a 1-row aggregate frame, broadcast via
+          // crossJoin — no driver-side action inside the loop
+          val m = aRaw.agg(max(col("s")).as("ma"))
+            .crossJoin(hRaw.agg(max(col("s")).as("mh")))
+            .select(expr(s"coalesce(greatest(ma, mh), 0L) div $Scale + 1L").as("d"))
+          loop.free(prev: _*)
+          prev = Seq(aRaw, hRaw)
+          a = aRaw.crossJoin(m).select(col("id"), expr("s div d").as("s"))
+          h = hRaw.crossJoin(m).select(col("id"), expr("s div d").as("s"))
+        }
+        loop.keep(prev: _*)
+        h.select(col("id"), col("s").as("hub"))
+          .join(a.select(col("id").as("id2"), col("s").as("auth")),
+            col("id") === col("id2"))
+          .select(col("id"), col("hub"), col("auth"))
+      }
     }
-
-  private def hitsPinned(spark: SparkSession, edgesRaw: DataFrame,
-      iters: Int): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
-
-    val e = edgesRaw.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val eBySrc = e.repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
-    val eByDst = e.repartition(col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
-    val v = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = v.count()
-    if (n == 0) {
-      Seq(e, eBySrc, eByDst, v).foreach(_.unpersist(false))
-      return v.select(col("id"), lit(0L).as("hub"), lit(0L).as("auth"))
-    }
-    eBySrc.count(); eByDst.count(); e.unpersist(false)
-
-    var h = v.select(col("id"), lit(Scale).as("s"))
-    var a = v.select(col("id"), lit(Scale).as("s"))
-    var prevCkpts: Seq[DataFrame] = Nil
-    for (_ <- 1 to iters) {
-      // the RAW sums are what gets checkpointed (two materializations
-      // per round); the normalized views are constant-depth projections
-      // over them, so nothing in the loop recomputes an aggregation
-      val aRaw = v.join(
-          eBySrc.join(h.hint("shuffle_hash"), col("src") === col("id"))
-            .groupBy(col("dst").as("aid")).agg(sum(col("s")).as("sr")),
-          col("id") === col("aid"), "left")
-        .select(col("id"), coalesce(col("sr"), lit(0L)).as("s"))
-        .localCheckpoint(true)
-      val hRaw = v.join(
-          eByDst.join(aRaw.hint("shuffle_hash"), col("dst") === col("id"))
-            .groupBy(col("src").as("hid")).agg(sum(col("s")).as("sr")),
-          col("id") === col("hid"), "left")
-        .select(col("id"), coalesce(col("sr"), lit(0L)).as("s"))
-        .localCheckpoint(true)
-      // joint rescale: a 1-row aggregate frame, broadcast via crossJoin —
-      // no driver-side action inside the loop, all-integer arithmetic
-      val m = aRaw.agg(max(col("s")).as("ma"))
-        .crossJoin(hRaw.agg(max(col("s")).as("mh")))
-        .select(expr(s"coalesce(greatest(ma, mh), 0L) div $Scale + 1L").as("d"))
-      prevCkpts.foreach(p =>
-        GraftColumnBridge.checkpointRdd(p).foreach(_.unpersist(false)))
-      prevCkpts = Seq(aRaw, hRaw)
-      a = aRaw.crossJoin(m).select(col("id"), expr("s div d").as("s"))
-      h = hRaw.crossJoin(m).select(col("id"), expr("s div d").as("s"))
-    }
-    Seq(eBySrc, eByDst, v).foreach(_.unpersist(false))
-    prevCkpts.foreach(CheckpointRegistry.trackFinal(spark, _))
-    h.select(col("id"), col("s").as("hub"))
-      .join(a.select(col("id").as("id2"), col("s").as("auth")),
-        col("id") === col("id2"))
-      .select(col("id"), col("hub"), col("auth"))
-  }
 
   // ---- registry entry ---------------------------------------------------
 

@@ -1,9 +1,7 @@
 package graft.analytics
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Hop-plot / effective-diameter queries (SURVEY.md §2.12, §7.3;
   * Analytics.scala:152-229): g(d) = number of distinct connected node
@@ -46,63 +44,64 @@ object HopPlot {
       maxD: Int = 20,
       coverage: Double = 1.0,
       totalPairs: Option[Long] = None): Seq[HopRow] = {
-    import graft.graph.CitationGraph.bidirectional
+    // the loop is sized from the ordered-pair count this first
+    // materialization takes anyway, so the BFS runs no count of its own
+    val (pairs, n, _) = org.apache.spark.sql.GraftColumnBridge.ckptCounted(
+      graft.graph.CitationGraph.bidirectional(edges))
+    Superstep.run(spark, "hopplot", n) { loop =>
+      bfs(loop, loop.own(pairs), n, maxD, coverage, totalPairs)
+    }
+  }
 
-    val bidir = bidirectional(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    // src-partitioned neighbor table, persisted once: every BFS level
-    // probes it on m = src; unpartitioned, the full pair list was
-    // reshuffled by m at EVERY level (guide §2.4) — now only the
-    // (shrinking) frontier side shuffles per level
-    val nbr = bidir.select(col("src").as("m"), col("dst").as("nb"))
-      .repartition(col("m")).persist(StorageLevel.MEMORY_AND_DISK)
+  /** [[hopPlotRows]] over `edges` of known size `rows`: the ordered
+    * pairs are materialized inside the pinned loop too. */
+  private[analytics] def hopPlotRows(spark: SparkSession, edges: DataFrame,
+      rows: Long, maxD: Int, coverage: Double,
+      totalPairs: Option[Long]): Seq[HopRow] =
+    Superstep.run(spark, "hopplot", rows) { loop =>
+      val (pairs, n, _) = loop.ckpt(graft.graph.CitationGraph.bidirectional(edges))
+      bfs(loop, pairs, n, maxD, coverage, totalPairs)
+    }
 
-    // ordered pairs (both directions kept: needed to expand frontiers).
-    // Fused checkpoint+count: one job materializes and counts (the eager
-    // ckpt + fastCount pair was two scheduler round-trips — guide §1.2).
-    val (frontier0, newCount0, _) =
-      org.apache.spark.sql.GraftColumnBridge.ckptCounted(bidir)
-    var frontier = frontier0
-    var visited = frontier
+  /** Level-synchronous BFS from the materialized ordered `pairs`. */
+  private def bfs(loop: Superstep.Loop, pairs: DataFrame, nPairs: Long,
+      maxD: Int, coverage: Double, totalPairs: Option[Long]): Seq[HopRow] = {
+    loop.input(nPairs)
+    // src-partitioned neighbor table: every level probes it on m = src,
+    // so per level only the (shrinking) frontier side shuffles
+    val nbr = loop.cache(pairs.select(col("src").as("m"), col("dst").as("nb"))
+      .repartition(col("m")))
+    var frontier = pairs
+    var visited = pairs
     val perD = scala.collection.mutable.ArrayBuffer[(Int, Long)]()
-    var newCount = newCount0
+    var newCount = nPairs
     if (newCount > 0) perD += 1 -> newCount // empty graph → empty hop-plot
     var cum = newCount
     var d = 1
     def coverageReached: Boolean = totalPairs.exists { t =>
       coverage < 1.0 && (cum / 2).toDouble / t.toDouble >= coverage
     }
-    // checkpoint blocks are freed via the backing RDD (plain df.unpersist
-    // is a no-op on a localCheckpoint frame — VERDICT r5 #2's session-long
-    // O(pairs) block leak); every round frees its superseded frontier AND
-    // visited once the successors are materialized
-    import org.apache.spark.sql.GraftColumnBridge
-    def free(df: DataFrame): Unit =
-      GraftColumnBridge.checkpointRdd(df).foreach(_.unpersist(false))
     while (newCount > 0 && d < maxD && !coverageReached) {
       d += 1
       val cand = frontier.join(nbr, col("dst") === col("m"))
         .select(col("src"), col("nb").as("dst"))
         .filter(col("src") =!= col("dst"))
         .distinct()
-      val (fresh, nFresh, _) = GraftColumnBridge.ckptCounted(
+      val (fresh, nFresh, _) = loop.step(
         cand.join(visited, Seq("src", "dst"), "left_anti"))
       newCount = nFresh
       if (newCount > 0) {
-        val nextVisited = visited.union(fresh).localCheckpoint(true)
-        // round 1's frontier and visited are the same checkpoint —
-        // double-unpersist of one RDD is harmless
-        free(frontier); free(visited)
+        val (nextVisited, _, _) = loop.ckpt(visited.union(fresh))
+        // `pairs` (round 1's frontier and visited) stays until the loop
+        // returns: the cached neighbor table recomputes from it
+        if (frontier ne pairs) loop.free(frontier, visited)
         frontier = fresh
         visited = nextVisited
         perD += d -> newCount
         cum += newCount
-      } else free(fresh)
+      } else loop.free(fresh)
     }
-    // all results are driver-side counts by now — no lazy frame keeps
-    // these blocks alive, so the finals are freed here, not registered
-    free(frontier); free(visited)
-    nbr.unpersist(false)
-    bidir.unpersist(false)
+    if (newCount > 0) loop.unconverged()
 
     val total = totalPairs.getOrElse(perD.map(_._2).sum / 2) // unordered
     var c = 0L

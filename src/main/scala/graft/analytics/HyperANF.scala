@@ -1,8 +1,8 @@
 package graft.analytics
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.GraftColumnBridge.Sum
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** HyperANF-style approximate neighborhood function (Boldi/Rosa/Vigna,
   * WWW'11) over Spark's native Datasketches HLL functions — THE scale
@@ -46,116 +46,85 @@ object HyperANF {
     rowsCache.keySet.removeIf(k => k._1 == sid)
   }
 
-  /** Exchange count of the latest superstep's merged-state plan —
-    * test hook for the co-partitioning contract below (exactly one
-    * shuffle per superstep: the message aggregation; the two state
-    * joins reuse existing hash partitionings). */
-  @volatile private[graft] var lastSuperstepExchanges: Int = -1
-
   /** @param lgK  HLL register count = 2^lgK (12 → ~1.6% rsd, 4 KiB/vertex).
     * @param maxD hard cap on supersteps, like the exact BFS. */
   def approxHopPlotRows(
       spark: SparkSession,
       edges: DataFrame,
       maxD: Int = 20,
-      lgK: Int = 12): Seq[ApproxHopRow] = {
-    // Iterative co-partitioning contract (below) requires partitionings
-    // that survive across supersteps — AQE off, shuffle partitions sized
-    // once from the edge count (LoopConf scaladoc has the full why).
-    LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edges) * 2) {
-      approxHopPlotRowsPinned(spark, edges, maxD, lgK)
-    }
-  }
+      lgK: Int = 12): Seq[ApproxHopRow] =
+    Superstep.run(spark, "hyperanf",
+      org.apache.spark.sql.GraftColumnBridge.memoCount(edges) * 2) { loop =>
+      import graft.graph.CitationGraph.bidirectional
 
-  private def approxHopPlotRowsPinned(
-      spark: SparkSession,
-      edges: DataFrame,
-      maxD: Int,
-      lgK: Int): Seq[ApproxHopRow] = {
-    import org.apache.spark.sql.GraftColumnBridge
-    import graft.graph.CitationGraph.bidirectional
+      // Edges-by-dst layout, shuffled ONCE and reused every superstep
+      // (VERDICT r2 #9): state is hash-partitioned on `id` (groupBy /
+      // join outputs, preserved through localCheckpoint via LogicalRDD's
+      // outputPartitioning), so the per-round state⋈edges and
+      // state⋈messages joins are co-partitioned and EnsureRequirements
+      // inserts no exchange — the only per-round shuffle is the message
+      // aggregation by `m`, the Pregel minimum (the loop's `exchanges`
+      // stat). Merge hints pin sort-merge so the planner never
+      // "optimizes" into broadcasting the per-vertex state (a driver
+      // collect of O(V) sketches — wrong at 100 TB).
+      val bidir = bidirectional(edges)
+      val nbr = loop.cache(bidir.select(col("src").as("m"), col("dst").as("nb"))
+        .repartition(col("nb")))
 
-    // Edges-by-dst layout, shuffled ONCE and reused every superstep
-    // (VERDICT r2 #9): state is hash-partitioned on `id` (groupBy /
-    // join outputs, preserved through localCheckpoint via LogicalRDD's
-    // outputPartitioning), so the per-round state⋈edges and
-    // state⋈messages joins are co-partitioned and EnsureRequirements
-    // inserts no exchange — the only per-round shuffle is the message
-    // aggregation by `m`, the Pregel minimum. Merge hints pin sort-merge
-    // so the planner never "optimizes" into broadcasting the per-vertex
-    // state (a driver collect of O(V) sketches — wrong at 100 TB).
-    val bidir = bidirectional(edges)
-    val nbr = bidir.select(col("src").as("m"), col("dst").as("nb"))
-      .repartition(col("nb"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // ball(v, 0) = {v}: a 1-element sketch per vertex. Fused
-    // checkpoint+count (ckptCounted): one job materializes and counts.
-    val (st0, n, _) = GraftColumnBridge.ckptCounted(
-      bidir.select(col("src").as("id")).distinct()
-        .groupBy(col("id")).agg(hll_sketch_agg(col("id"), lit(lgK)).as("sk")))
-    var st = st0
-    var stCkpt = st0 // the LogicalRDD backing `st`, for explicit release
-    if (n == 0) { nbr.unpersist(false); return Seq.empty }
-
-    val rows = scala.collection.mutable.ArrayBuffer[(Int, Long)]()
-    var last = n // N(0): every ball is exactly its own vertex
-    var d = 0
-    var stale = 0 // consecutive supersteps with no estimated growth
-    val plateau = scala.collection.mutable.ArrayBuffer[Int]()
-    while (stale < 2 && d < maxD) {
-      d += 1
-      val nbrAgg = nbr.hint("merge").join(st, col("nb") === col("id"))
-        .groupBy(col("m"))
-        .agg(hll_union_agg(col("sk"), lit(false)).as("nsk"))
-      val mergedDs = st.hint("merge").join(nbrAgg, col("id") === col("m"), "left")
-        .select(col("id"),
-          when(col("nsk").isNull, col("sk"))
-            .otherwise(hll_union(col("sk"), col("nsk"))).as("sk"))
-      // tree-collect, not string matching: a cached relation's STORED
-      // plan (materialized once, not per round) prints exchanges too
-      lastSuperstepExchanges = mergedDs.queryExecution.executedPlan.collect {
-        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
-      }.size
-      // ONE job per superstep: the estimate is computed INTO the
-      // checkpointed row and summed as the materialization caches it
-      // (ckptSummed) — the former eager checkpoint + a re-planned
-      // sum(estimate) aggregate were two jobs per superstep (guide
-      // §1.2). The est column stays out of the next round's joins via
-      // the (id, sk) projection below.
-      val (mergedFull, _, tot) = GraftColumnBridge.ckptSummed(
-        mergedDs.withColumn("est", hll_sketch_estimate(col("sk"))), "est")
-      // superseded frame is fully materialized into `merged`; free its
-      // blocks now instead of waiting on the ContextCleaner (ADVICE r2)
-      GraftColumnBridge.checkpointRdd(stCkpt).foreach(_.unpersist(false))
-      stCkpt = mergedFull
-      st = mergedFull.select(col("id"), col("sk"))
-      if (tot > last) {
-        // a plateaued estimate followed by growth means the sketch was
-        // noisy, not that the balls stopped growing — backfill the
-        // skipped hop(s) with the carried estimate to keep d consecutive
-        plateau.foreach(pd => rows += pd -> ((last - n) / 2))
-        plateau.clear()
-        last = tot
-        rows += d -> ((tot - n) / 2) // unordered pair estimate
-        stale = 0
-      } else {
-        // don't stop on one flat estimate (ADVICE r2): advance state and
-        // peek one more superstep; trailing plateau rows are dropped
-        plateau += d
-        stale += 1
+      // ball(v, 0) = {v}: a 1-element sketch per vertex
+      val (st0, n, _) = loop.ckpt(
+        bidir.select(col("src").as("id")).distinct()
+          .groupBy(col("id")).agg(hll_sketch_agg(col("id"), lit(lgK)).as("sk")))
+      loop.input(n)
+      val rows = scala.collection.mutable.ArrayBuffer[(Int, Long)]()
+      var stFull = st0
+      var st = st0
+      var last = n // N(0): every ball is exactly its own vertex
+      var d = 0
+      var stale = if (n == 0) 2 else 0 // consecutive supersteps with no estimated growth
+      val plateau = scala.collection.mutable.ArrayBuffer[Int]()
+      while (stale < 2 && d < maxD) {
+        d += 1
+        val nbrAgg = nbr.hint("merge").join(st, col("nb") === col("id"))
+          .groupBy(col("m"))
+          .agg(hll_union_agg(col("sk"), lit(false)).as("nsk"))
+        val mergedDs = st.hint("merge").join(nbrAgg, col("id") === col("m"), "left")
+          .select(col("id"),
+            when(col("nsk").isNull, col("sk"))
+              .otherwise(hll_union(col("sk"), col("nsk"))).as("sk"))
+        // the estimate is computed into the checkpointed row and summed
+        // as the materialization caches it; the (id, sk) projection keeps
+        // it out of the next round's joins
+        val (mergedFull, _, tot) = loop.step(
+          mergedDs.withColumn("est", hll_sketch_estimate(col("sk"))), "est", Sum)
+        loop.free(stFull)
+        stFull = mergedFull
+        st = mergedFull.select(col("id"), col("sk"))
+        if (tot > last) {
+          // a plateaued estimate followed by growth means the sketch was
+          // noisy, not that the balls stopped growing — backfill the
+          // skipped hop(s) with the carried estimate to keep d consecutive
+          plateau.foreach(pd => rows += pd -> ((last - n) / 2))
+          plateau.clear()
+          last = tot
+          rows += d -> ((tot - n) / 2) // unordered pair estimate
+          stale = 0
+        } else {
+          // don't stop on one flat estimate (ADVICE r2): advance state and
+          // peek one more superstep; trailing plateau rows are dropped
+          plateau += d
+          stale += 1
+        }
       }
-    }
-    GraftColumnBridge.checkpointRdd(stCkpt).foreach(_.unpersist(false))
-    nbr.unpersist(false)
+      if (stale < 2) loop.unconverged()
 
-    val total = if (rows.isEmpty) 1L else math.max(rows.last._2, 1L)
-    rows.map { case (dd, g) =>
-      val pct = BigDecimal(g.toDouble / total.toDouble)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      ApproxHopRow(dd, g, pct)
-    }.toSeq
-  }
+      val total = if (rows.isEmpty) 1L else math.max(rows.last._2, 1L)
+      rows.map { case (dd, g) =>
+        val pct = BigDecimal(g.toDouble / total.toDouble)
+          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+        ApproxHopRow(dd, g, pct)
+      }.toSeq
+    }
 
   def approxHopPlot(spark: SparkSession, edges: DataFrame,
       maxD: Int = 20, lgK: Int = 12): DataFrame = {

@@ -36,10 +36,6 @@ import graft.registry.Q
   */
 object IncrementalComponents {
 
-  /** Bench-visible contract quantities: the merge's cost drivers. */
-  @volatile private[graft] var lastLabelEdges: Long = -1L
-  @volatile private[graft] var lastTouched: Long = -1L
-
   /** Merge a batch of new edges into a standing (id, comp) assignment.
     *
     * @param assignment standing state: (id BIGINT, comp BIGINT), comp =
@@ -63,8 +59,6 @@ object IncrementalComponents {
     val lblAll = lblOf.union(newVerts.select(col("id"), col("id").as("comp")))
     // 2. contract batch edges to label pairs (both lookups broadcast:
     // lblAll is O(|batch|) rows)
-    // fused checkpoint+count (ckptCounted): the contract count rides the
-    // materialization job instead of a second cached scan (guide §1.2)
     val (labelEdges, nLabelEdges, _) =
       org.apache.spark.sql.GraftColumnBridge.ckptCounted(batch
         .join(broadcast(lblAll.withColumnRenamed("id", "src")
@@ -74,18 +68,24 @@ object IncrementalComponents {
         .select(col("lsrc").as("src"), col("ldst").as("dst"))
         .filter(col("src") =!= col("dst"))
         .distinct())
-    lastLabelEdges = nLabelEdges
     // 3. min-label superstep on the contracted graph only
     val mergedLbl =
-      if (lastLabelEdges == 0L)
+      if (nLabelEdges == 0L)
         assignment.sparkSession.emptyDataFrame
           .select(lit(0L).as("id"), lit(0L).as("comp")).limit(0)
-      else ConnectedComponents.components(labelEdges)
+      else ConnectedComponents.components(labelEdges, nLabelEdges)
     val (mapping, nMapping, _) = org.apache.spark.sql.GraftColumnBridge
       .ckptCounted(mergedLbl
         .filter(col("id") =!= col("comp"))
         .select(col("id").as("old_comp"), col("comp").as("new_comp")))
-    lastTouched = nMapping
+    Superstep.release(labelEdges)
+    // the mapping backs the lazy result
+    CheckpointRegistry.trackFinal(assignment.sparkSession, mapping)
+    // the merge's cost drivers, for Bench: one round over the contracted
+    // graph's edges, touching nMapping components
+    Superstep.record(assignment.sparkSession, "components_incremental",
+      Superstep.LoopStats(rounds = 1, stats = Vector(nMapping),
+        input = nLabelEdges, converged = true, exchanges = 0))
     // 4. one narrow pass over the standing assignment applies the
     // broadcast mapping; batch-only vertices append with their merged
     // label

@@ -2,7 +2,6 @@ package graft.analytics
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.registry.Q
 
@@ -13,7 +12,7 @@ import graft.registry.Q
   * Degrees are exact BIGINT counts, so the peel is bit-deterministic
   * across engines and layouts.
   *
-  * Loop shape (LoopConf-pinned like the other supersteps): edges live
+  * Loop shape (a pinned [[Superstep]] like the other loops): edges live
   * bidirectionalized and hash-partitioned by src; each round is one
   * co-partitioned degree aggregation plus two semi-joins against the
   * survivor set (the dst-side semi is the round's unavoidable exchange
@@ -30,9 +29,6 @@ object KCore {
   val K = 15
   val Rounds = 6
 
-  /** Peel `rounds` times; `rounds = Int.MaxValue` runs to the fixpoint
-    * (true k-core), early-stopping when an entire round removes no edge.
-    * Returns surviving (id, deg) with degrees in the FINAL edge set. */
   /** Checkpoint/early-stop-check cadence: peel `ckptEvery` rounds per
     * materialization. Correct at any value (the peel is deterministic;
     * convergence detected at a batch boundary is still the fixpoint —
@@ -45,71 +41,46 @@ object KCore {
     * costs more than the per-round materialization saves. Stays 1. */
   val CkptEvery = 1
 
-  /** Rounds the last `kcore` call actually peeled before stopping (the
-    * loop runs eagerly, so this is set by the time the DataFrame is
-    * returned). The fixpoint query's oracle is unrolled to a FIXED
-    * depth, so the registered query asserts this against
-    * FixpointOracleDepth — without the assert, a dataset converging in
-    * more rounds would make the oracle silently wrong and the query fail
-    * verification with no hint why (ADVICE r6 #3). */
-  @volatile private[graft] var lastConvergenceRound: Int = -1
-
-  /** Bidirectionalized edge count of the last `kcore` input — with
-    * [[lastConvergenceRound]] this is the CONTRACT QUANTITY the wall
-    * time is linear in (cost = O(peel rounds × E)); Bench emits both in
-    * the bench JSON so the "linear in contract" claim is checkable per
-    * round (VERDICT r7 next #6). */
-  @volatile private[graft] var lastInputEdges: Long = -1
-
+  /** Peel `rounds` times; `rounds = Int.MaxValue` runs to the fixpoint
+    * (true k-core), early-stopping when an entire round removes no edge.
+    * Returns surviving (id, deg) with degrees in the FINAL edge set. */
   def kcore(spark: SparkSession, edgesRaw: DataFrame, k: Int = K,
       rounds: Int = Rounds, ckptEvery: Int = CkptEvery): DataFrame =
-    LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) {
-      kcorePinned(spark, edgesRaw, k, rounds, ckptEvery)
-    }
-
-  private def kcorePinned(spark: SparkSession, edgesRaw: DataFrame,
-      k: Int, rounds: Int, ckptEvery: Int): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
-    import graft.graph.CitationGraph.bidirectional
-
-    // fused checkpoint+count: one job materializes and counts (the eager
-    // ckpt + fastCount pair was two scheduler round-trips — guide §1.2)
-    val (e0, nE0, _) = GraftColumnBridge.ckptCounted(
-      bidirectional(edgesRaw).repartition(col("src")))
-    var e = e0
-    var prev = e
-    var nEdges = nE0
-    lastInputEdges = nEdges
-    var r = 0
-    var changed = true
-    while (r < rounds && changed && nEdges > 0) {
-      val batch = math.min(ckptEvery, rounds - r)
-      var cur = e
-      for (_ <- 1 to batch) {
-        val keep = cur.groupBy(col("src")).agg(count(lit(1)).as("d"))
-          .filter(col("d") >= k)
-          .select(col("src").as("id"))
-        cur = cur
-          .join(keep, cur("src") === keep("id"), "left_semi")
-          .join(keep.select(col("id").as("id2")), cur("dst") === col("id2"), "left_semi")
+    Superstep.run(spark, "kcore",
+      org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) { loop =>
+      import graft.graph.CitationGraph.bidirectional
+      // the bidirectionalized edge count is the contract quantity the
+      // wall time is linear in (O(peel rounds x E)), so Bench reports it
+      val (e0, nE0, _) = loop.ckpt(bidirectional(edgesRaw).repartition(col("src")))
+      loop.input(nE0)
+      // a round that changes anything removes at least one edge
+      loop.limit(nE0 + 1)
+      var e = e0
+      var nEdges = nE0
+      var r = 0
+      var changed = true
+      while (r < rounds && changed && nEdges > 0) {
+        val batch = math.min(ckptEvery, rounds - r)
+        var cur = e
+        for (_ <- 1 to batch) {
+          val keep = cur.groupBy(col("src")).agg(count(lit(1)).as("d"))
+            .filter(col("d") >= k)
+            .select(col("src").as("id"))
+          cur = cur
+            .join(keep, cur("src") === keep("id"), "left_semi")
+            .join(keep.select(col("id").as("id2")), cur("dst") === col("id2"), "left_semi")
+        }
+        val (next, nNext, _) = loop.step(cur, advance = batch)
+        changed = nNext != nEdges
+        nEdges = nNext
+        loop.free(e)
+        e = next
+        r += batch
       }
-      val (next, nNext, _) = GraftColumnBridge.ckptCounted(cur)
-      changed = nNext != nEdges
-      nEdges = nNext
-      GraftColumnBridge.checkpointRdd(prev).foreach(_.unpersist(false))
-      prev = next
-      e = next
-      r += batch
+      if (changed && nEdges > 0) loop.unconverged()
+      loop.keep(e)
+      e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
     }
-    lastConvergenceRound = r
-    // the final edge checkpoint backs the lazy result (ADVICE r5:
-    // repeated invocations otherwise accumulate pinned blocks for the
-    // session lifetime); the runner releases it via CheckpointRegistry
-    // after materializing
-    CheckpointRegistry.trackFinal(spark, e)
-    val out = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-    out
-  }
 
   // ---- registry entry ---------------------------------------------------
 
@@ -175,8 +146,9 @@ object KCore {
       // round is known here — fail LOUDLY if the fixed-depth oracle
       // can't cover it, instead of hash-mismatching with no hint
       // (measured max is 12 at sf0.1; 16 gives headroom)
-      require(lastConvergenceRound <= FixpointOracleDepth,
-        s"g_kcore_fixpoint converged in $lastConvergenceRound peel rounds but " +
+      val rounds = Superstep.stats(s, "kcore").get.rounds
+      require(rounds <= FixpointOracleDepth,
+        s"g_kcore_fixpoint converged in $rounds peel rounds but " +
           s"the unrolled oracle is depth $FixpointOracleDepth — raise " +
           "KCore.FixpointOracleDepth to at least the convergence round")
       out

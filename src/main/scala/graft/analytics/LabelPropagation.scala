@@ -17,7 +17,7 @@ import graft.registry.Q
   * (neighbor-label counts, map-side combinable) + one argmax
   * aggregation via max(struct(count, -label)) — no window over the
   * vertex set. Edges are shuffled onto src once before the loop
-  * (LoopConf-pinned).
+  * (a pinned [[Superstep]]).
   */
 object LabelPropagation {
 
@@ -34,48 +34,37 @@ object LabelPropagation {
   def labelProp(spark: SparkSession, edgesRaw: DataFrame,
       rounds: Int = Rounds, ckptEvery: Int = CkptEvery): DataFrame = {
     // rounds=0 would return a lazy frame over the edge checkpoint that
-    // the loop epilogue has already unpersisted — reject it up front
+    // the loop releases on return — reject it up front
     require(rounds >= 1, s"labelProp needs at least 1 round, got $rounds")
-    LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) {
-      labelPropPinned(spark, edgesRaw, rounds, ckptEvery)
+    Superstep.run(spark, "labelprop",
+      org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) { loop =>
+      val (e, _, _) = loop.ckpt(graft.graph.CitationGraph.bidirectional(edgesRaw)
+        .repartition(col("src")))
+      var lab = e.select(col("src").as("id")).distinct()
+        .select(col("id"), col("id").as("lab"))
+      var last = lab // latest checkpoint
+      var since = 0
+      for (r <- 1 to rounds) {
+        val hist = lab.join(e, col("id") === col("src"))
+          .groupBy(col("dst"), col("lab"))
+          .agg(count(lit(1)).as("c"))
+        val nextDs = hist
+          .groupBy(col("dst"))
+          .agg(max(struct(col("c").as("c"), (-col("lab")).as("nl"))).as("m"))
+          .select(col("dst").as("id"), (-col("m.nl")).as("lab"))
+        since += 1
+        if (since == ckptEvery || r == rounds) {
+          val (next, _, _) = loop.step(nextDs, advance = since)
+          loop.free(last)
+          last = next
+          lab = next
+          since = 0
+        } else lab = nextDs
+      }
+      // the final checkpoint backs the lazy result
+      loop.keep(last)
+      lab
     }
-  }
-
-  private def labelPropPinned(spark: SparkSession, edgesRaw: DataFrame,
-      rounds: Int, ckptEvery: Int): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
-    import graft.graph.CitationGraph.bidirectional
-
-    val e = bidirectional(edgesRaw)
-      .repartition(col("src"))
-      .localCheckpoint(true)
-    var lab = e.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("lab"))
-    var prevCkpt: Option[DataFrame] = None
-    var since = 0
-    for (r <- 1 to rounds) {
-      val hist = lab.join(e, col("id") === col("src"))
-        .groupBy(col("dst"), col("lab"))
-        .agg(count(lit(1)).as("c"))
-      val nextDs = hist
-        .groupBy(col("dst"))
-        .agg(max(struct(col("c").as("c"), (-col("lab")).as("nl"))).as("m"))
-        .select(col("dst").as("id"), (-col("m.nl")).as("lab"))
-      since += 1
-      if (since == ckptEvery || r == rounds) {
-        val next = nextDs.localCheckpoint(true)
-        prevCkpt.foreach(p =>
-          GraftColumnBridge.checkpointRdd(p).foreach(_.unpersist(false)))
-        prevCkpt = Some(next)
-        lab = next
-        since = 0
-      } else lab = nextDs
-    }
-    GraftColumnBridge.checkpointRdd(e).foreach(_.unpersist(false))
-    // final checkpoint backs the lazy result; the runner releases it via
-    // CheckpointRegistry once the result is materialized
-    prevCkpt.foreach(CheckpointRegistry.trackFinal(spark, _))
-    lab
   }
 
   // ---- registry entry ---------------------------------------------------
@@ -126,8 +115,7 @@ object LabelPropagation {
     while (it.hasNext) {
       val e = it.next()
       if (e.getKey._1 == sid) {
-        org.apache.spark.sql.GraftColumnBridge.checkpointRdd(e.getValue)
-          .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
+        Superstep.release(e.getValue)
         it.remove()
       }
     }

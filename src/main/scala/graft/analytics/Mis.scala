@@ -21,8 +21,8 @@ import graft.registry.Q
   * the randomness from the data, then both engines agree bit-for-bit).
   *
   * Loop shape (KCore's discipline): bidirectionalized edges and the
-  * active-vertex frame are hash-partitioned and localCheckpoint'ed per
-  * round, superseded checkpoints freed eagerly; each round is one
+  * active-vertex frame are hash-partitioned and checkpointed per round
+  * by the [[Superstep]] skeleton; each round is one
   * co-partitioned min-aggregation (neighbor minimum priority), a
   * left-join winner filter, and two anti/semi joins to shrink state.
   * Rounds-to-empty is tracked and asserted against the unrolled oracle
@@ -37,76 +37,59 @@ object Mis {
     * headroom the k-core fixpoint oracle carries. */
   val FixpointOracleDepth = 12
 
-  @volatile private[graft] var lastConvergenceRound: Int = -1
-
   def mis(spark: SparkSession, edgesRaw: DataFrame): DataFrame =
-    LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) { misPinned(spark, edgesRaw) }
-
-  private def misPinned(spark: SparkSession, edgesRaw: DataFrame): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
-    import graft.graph.CitationGraph.bidirectional
-
-    // dst-partitioned: every round's FIRST join (the neighbor-priority
-    // build) keys edges on dst, and the per-round shrink's final semi
-    // join leaves the next round's edges dst-partitioned too — with the
-    // former src partitioning the first round reshuffled the full edge
-    // list for nothing (guide §2.4)
-    val e0 = bidirectional(edgesRaw)
-      .repartition(col("dst"))
-      .localCheckpoint(true)
-    var edges = e0
-    // fused checkpoint+count (ckptCounted): one job materializes AND
-    // counts — the eager ckpt + fastCount pair was two scheduler
-    // round-trips per step (guide §1.2)
-    val (active0, nActive0, _) = GraftColumnBridge.ckptCounted(
-      e0.select(col("src").as("id")).distinct()
-        .withColumn("h", md5(col("id").cast("string")))
-        .repartition(col("id")))
-    var active = active0
-    var prevEdges = edges
-    var prevActive = active
-    val winnerFrames = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var nActive = nActive0
-    var r = 0
-    while (nActive > 0) {
-      r += 1
-      // `edges` is already active x active, so the dst side's priority
-      // join needs no extra activity filter
-      val nmin = edges
-        .join(active.select(col("id").as("dst"), col("h").as("hd")), "dst")
-        .groupBy(col("src")).agg(min(col("hd")).as("nh"))
-        .select(col("src").as("id"), col("nh"))
-      val winners = active.join(nmin, Seq("id"), "left")
-        .filter(col("nh").isNull || col("h") < col("nh"))
-        .select(col("id"), lit(r.toLong).as("round"))
-        .localCheckpoint(true)
-      winnerFrames += winners
-      // winners' checkpoints back the final result until it is consumed
-      CheckpointRegistry.trackFinal(spark, winners)
-      val nbrs = edges
-        .join(winners.select(col("id").as("src")), Seq("src"), "left_semi")
-        .select(col("dst").as("id"))
-      val removed = winners.select(col("id")).union(nbrs).distinct()
-      val (nextActive, nNextActive, _) = GraftColumnBridge.ckptCounted(
-        active.join(removed, Seq("id"), "left_anti"))
-      val nextEdges = edges
-        .join(nextActive.select(col("id").as("src")), Seq("src"), "left_semi")
-        .join(nextActive.select(col("id").as("dst")), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst"))
-        .localCheckpoint(true)
-      nActive = nNextActive
-      GraftColumnBridge.checkpointRdd(prevActive).foreach(_.unpersist(false))
-      GraftColumnBridge.checkpointRdd(prevEdges).foreach(_.unpersist(false))
-      active = nextActive; prevActive = nextActive
-      edges = nextEdges; prevEdges = nextEdges
+    Superstep.run(spark, "mis",
+      org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) { loop =>
+      import graft.graph.CitationGraph.bidirectional
+      // dst-partitioned: every round's FIRST join (the neighbor-priority
+      // build) keys edges on dst, and the per-round shrink's final semi
+      // join leaves the next round's edges dst-partitioned too (guide §2.4)
+      val (e0, nE0, _) = loop.ckpt(bidirectional(edgesRaw).repartition(col("dst")))
+      loop.input(nE0)
+      val (active0, nActive0, _) = loop.ckpt(
+        e0.select(col("src").as("id")).distinct()
+          .withColumn("h", md5(col("id").cast("string")))
+          .repartition(col("id")))
+      // the active vertex of lowest priority wins every round
+      loop.limit(nActive0)
+      var edges = e0
+      var active = active0
+      var nActive = nActive0
+      val winnerFrames = scala.collection.mutable.ArrayBuffer[DataFrame]()
+      var r = 0
+      while (nActive > 0) {
+        r += 1
+        // `edges` is already active x active, so the dst side's priority
+        // join needs no extra activity filter
+        val nmin = edges
+          .join(active.select(col("id").as("dst"), col("h").as("hd")), "dst")
+          .groupBy(col("src")).agg(min(col("hd")).as("nh"))
+          .select(col("src").as("id"), col("nh"))
+        val (winners, _, _) = loop.ckpt(active.join(nmin, Seq("id"), "left")
+          .filter(col("nh").isNull || col("h") < col("nh"))
+          .select(col("id"), lit(r.toLong).as("round")))
+        // winners' checkpoints back the result until it is consumed
+        loop.keep(winners)
+        winnerFrames += winners
+        val nbrs = edges
+          .join(winners.select(col("id").as("src")), Seq("src"), "left_semi")
+          .select(col("dst").as("id"))
+        val removed = winners.select(col("id")).union(nbrs).distinct()
+        val (nextActive, nNextActive, _) = loop.step(
+          active.join(removed, Seq("id"), "left_anti"))
+        val (nextEdges, _, _) = loop.ckpt(edges
+          .join(nextActive.select(col("id").as("src")), Seq("src"), "left_semi")
+          .join(nextActive.select(col("id").as("dst")), Seq("dst"), "left_semi")
+          .select(col("src"), col("dst")))
+        nActive = nNextActive
+        loop.free(active, edges)
+        active = nextActive
+        edges = nextEdges
+      }
+      if (winnerFrames.isEmpty)
+        spark.range(0).select(col("id"), col("id").as("round"))
+      else winnerFrames.reduce(_ union _)
     }
-    lastConvergenceRound = r
-    GraftColumnBridge.checkpointRdd(prevActive).foreach(_.unpersist(false))
-    GraftColumnBridge.checkpointRdd(prevEdges).foreach(_.unpersist(false))
-    if (winnerFrames.isEmpty)
-      spark.range(0).select(col("id"), col("id").as("round"))
-    else winnerFrames.reduce(_ union _)
-  }
 
   // ---- registry entry ---------------------------------------------------
 
@@ -148,8 +131,9 @@ object Mis {
     (s, d) => {
       val out = mis(s, graft.graph.CitationGraph.edges(s, d))
         .orderBy(col("id"))
-      require(lastConvergenceRound <= FixpointOracleDepth,
-        s"g_mis converged in $lastConvergenceRound rounds but the unrolled " +
+      val rounds = Superstep.stats(s, "mis").get.rounds
+      require(rounds <= FixpointOracleDepth,
+        s"g_mis converged in $rounds rounds but the unrolled " +
           s"oracle is depth $FixpointOracleDepth — raise Mis.FixpointOracleDepth")
       out
     })

@@ -45,11 +45,6 @@ object Mst {
   val RoundsUnroll = 12
   val JumpsUnroll = 6
 
-  @volatile private[graft] var lastRounds: Int = -1
-  /** True iff every round's pointer table was provably at its fixpoint
-    * after JumpsUnroll jumps (one extra jump moved nothing). */
-  @volatile private[graft] var lastJumpsConverged: Boolean = false
-
   /** Canonical undirected weighted edges from a directed edge list. */
   def canonical(edgesRaw: DataFrame): DataFrame =
     edgesRaw.select(
@@ -59,148 +54,93 @@ object Mst {
       .select(col("u"), col("v"),
         (lit(1L) + (col("u") + col("v")) % lit(10L)).as("w"))
 
+  /** The loop self-joins its checkpoints (the jump step is p ⋈ p), so it
+    * composes from stats-clean rewraps: a LogicalRDD's propagated
+    * sizeInBytes would square per jump and compound per round until the
+    * driver livelocks in BigInteger stats math (the g_truss_decomp
+    * lesson; the sf0.01 probe wedged at 100% driver CPU without it). */
   def mst(spark: SparkSession, edgesRaw: DataFrame): DataFrame =
-    LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) { pinned(spark, edgesRaw) }
-
-  private def pinned(spark: SparkSession, edgesRaw: DataFrame): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
-    // checkpoint, then compose from a STATS-CLEAN rewrap: this loop
-    // self-joins its checkpoints (the jump step is p ⋈ p), and a
-    // LogicalRDD's propagated sizeInBytes would square per jump and
-    // compound per round until the driver livelocks in BigInteger stats
-    // math — the g_truss_decomp lesson, hit again here live (the sf0.01
-    // probe wedged at 100% driver CPU before this rewrap).
-    val ckpts = scala.collection.mutable.Map[DataFrame, DataFrame]()
-    def ckpt(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint(true)
-      val clean = GraftColumnBridge.statsClean(c)
-      ckpts(clean) = c
-      clean
-    }
-    // fused checkpoint+count: ONE job materializes the frame AND returns
-    // the row / true-flag count (the eager-ckpt + fastCount/countTrue
-    // pair was two scheduler round-trips per loop step — guide §1.2,
-    // VERDICT r13 next-round #1: cut jobs-per-round in the loops)
-    def ckptN(df: DataFrame, boolCol: String = null): (DataFrame, Long, Long) = {
-      val (c, n, t) = GraftColumnBridge.ckptCounted(df, boolCol)
-      val clean = GraftColumnBridge.statsClean(c)
-      ckpts(clean) = c
-      (clean, n, t)
-    }
-    def free(df: DataFrame): Unit =
-      ckpts.remove(df).foreach(c =>
-        GraftColumnBridge.checkpointRdd(c).foreach(_.unpersist(false)))
-
-    // live edges in component space, carrying original endpoints
-    var (live, nLive, _) = ckptN(canonical(edgesRaw)
-      .select(col("u").as("ca"), col("v").as("cb"),
-        col("w"), col("u").as("ou"), col("v").as("ov")))
-    val picked = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    // per-round selection checkpoints, kept alive until the RESULT is
-    // consumed (picked reads them lazily); registered with the
-    // CheckpointRegistry below so the runners release them post-query
-    val keptSels = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var rounds = 0
-    var jumpsConverged = true
-    while (nLive > 0) {
-      rounds += 1
-      // min outgoing edge per component, under the (w, ou, ov) total
-      // order, from BOTH endpoints' perspectives
-      val fromA = live.select(col("ca").as("c"), col("cb").as("other"),
-        col("w"), col("ou"), col("ov"))
-      val fromB = live.select(col("cb").as("c"), col("ca").as("other"),
-        col("w"), col("ou"), col("ov"))
-      val sel = ckpt(fromA.union(fromB)
-        .groupBy(col("c"))
-        .agg(min(struct(col("w"), col("ou"), col("ov"), col("other")))
-          .as("m"))
-        .select(col("c"), col("m.other").as("partner"),
-          col("m.w").as("w"), col("m.ou").as("ou"), col("m.ov").as("ov")))
-      keptSels += sel
-      // selected ORIGINAL edges: served LAZILY from the sel checkpoint
-      // (kept alive until the result is consumed) — the per-round
-      // distinct+checkpoint was one extra job per round whose only
-      // reader is the final union, which dedups globally anyway
-      picked += sel.select(col("ou"), col("ov"), col("w"))
-      // pointer: partner, except the smaller side of a mutual pair roots
-      val mutual = sel.select(col("c").as("c2"), col("partner").as("p2"))
-      val p0 = sel.join(mutual,
-          col("partner") === col("c2") && col("p2") === col("c"), "left")
-        .select(col("c"),
-          when(col("c2").isNotNull && col("c") < col("partner"), col("c"))
-            .otherwise(col("partner")).as("p"))
-      // pointer jumping, one CHECKPOINTED level per jump with an
-      // early-stop on the moved count. (A lazily-composed fixed-depth
-      // variant was measured 2.3x SLOWER: 2^J duplicated join leaves
-      // re-plan and re-execute per level; a round-8 two-levels-per-
-      // checkpoint attempt was ALSO slower — 11.8s vs 8.9s min —
-      // because jump(jump(p)) evaluates the inner join on both sides
-      // of the outer one, and the extra shuffles cost more than the
-      // saved materialization latency. One checkpointed level per jump
-      // stands as the measured optimum.)
-      // the jump join COMPUTES the moved flag in the same join (the x
-      // side already carries the pre-jump pointer, so the former extra
-      // `join(p, "c")` to fetch `old` was a second shuffle join per
-      // jump doing no new work — guide §2.4 remove shuffles outright)
-      def jump(q: DataFrame): DataFrame =
-        q.as("x").join(
-          q.select(col("c").as("pc"), col("p").as("pp")).as("y"),
-          col("p") === col("pc"))
-          .select(col("c"), col("pp").as("p"),
-            (col("pp") =!= col("p")).as("chg"))
-      // p0 is NOT checkpointed: the first jump composes it lazily (its
-      // two sides each re-evaluate the cheap sel⋈sel rooting join over
-      // the checkpointed sel), trading that duplicated small join for
-      // one fewer materialization job per round. This differs from the
-      // recorded stride-2 negative result, which chained two PROPAGATION
-      // steps (each consuming the full state twice); p0 is a single
-      // rooting join over an already-materialized, component-sized sel.
-      var pFull: DataFrame = null
-      var p = p0
-      var jumping = true
-      var jumps = 0
-      while (jumping && jumps < JumpsUnroll) {
-        jumps += 1
-        // ONE job per jump: the checkpoint materialization counts the
-        // moved flags as it caches (ckptCounted) — previously the eager
-        // checkpoint job + a countTrue cached-scan job per jump
-        val (nextFull, _, moved) = ckptN(jump(p), "chg")
-        if (pFull != null) free(pFull)
-        pFull = nextFull
-        p = pFull.select(col("c"), col("p"))
-        if (moved == 0) jumping = false
-      }
-      // the loop only exits converged (moved == 0) or at the unroll
-      // bound — the latter without proof of fixpoint fails the gate
-      if (jumping) jumpsConverged = false
-      // relabel live edges into merged-component space; drop loops.
-      // Materialization and the live-edge count fuse into one job.
-      val (nextLive, nNext, _) = ckptN(live
-        .join(p.select(col("c").as("ca"), col("p").as("na")), Seq("ca"), "left")
-        .join(p.select(col("c").as("cb"), col("p").as("nb")), Seq("cb"), "left")
-        .select(coalesce(col("na"), col("ca")).as("ca"),
-          coalesce(col("nb"), col("cb")).as("cb"),
+    Superstep.run(spark, "mst",
+      org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw),
+      statsClean = true) { loop =>
+      // live edges in component space, carrying original endpoints
+      var (live, nLive, _) = loop.ckpt(canonical(edgesRaw)
+        .select(col("u").as("ca"), col("v").as("cb"),
+          col("w"), col("u").as("ou"), col("v").as("ov")))
+      loop.input(nLive)
+      // a round drops at least the edges it selects
+      loop.limit(nLive)
+      val picked = scala.collection.mutable.ArrayBuffer[DataFrame]()
+      while (nLive > 0) {
+        // min outgoing edge per component, under the (w, ou, ov) total
+        // order, from BOTH endpoints' perspectives
+        val fromA = live.select(col("ca").as("c"), col("cb").as("other"),
           col("w"), col("ou"), col("ov"))
-        .filter(col("ca") =!= col("cb"))
-        .distinct())
-      if (pFull != null) free(pFull)
-      free(live)
-      live = nextLive
-      nLive = nNext
+        val fromB = live.select(col("cb").as("c"), col("ca").as("other"),
+          col("w"), col("ou"), col("ov"))
+        val (sel, _, _) = loop.ckpt(fromA.union(fromB)
+          .groupBy(col("c"))
+          .agg(min(struct(col("w"), col("ou"), col("ov"), col("other")))
+            .as("m"))
+          .select(col("c"), col("m.other").as("partner"),
+            col("m.w").as("w"), col("m.ou").as("ou"), col("m.ov").as("ov")))
+        // selected ORIGINAL edges are served lazily from the sel
+        // checkpoint, kept until the result is consumed; the final union
+        // dedups globally
+        loop.keep(sel)
+        picked += sel.select(col("ou"), col("ov"), col("w"))
+        // pointer: partner, except the smaller side of a mutual pair roots
+        val mutual = sel.select(col("c").as("c2"), col("partner").as("p2"))
+        val p0 = sel.join(mutual,
+            col("partner") === col("c2") && col("p2") === col("c"), "left")
+          .select(col("c"),
+            when(col("c2").isNotNull && col("c") < col("partner"), col("c"))
+              .otherwise(col("partner")).as("p"))
+        // the jump join computes the moved flag itself: the x side
+        // already carries the pre-jump pointer (guide §2.4)
+        def jump(q: DataFrame): DataFrame =
+          q.as("x").join(
+            q.select(col("c").as("pc"), col("p").as("pp")).as("y"),
+            col("p") === col("pc"))
+            .select(col("c"), col("pp").as("p"),
+              (col("pp") =!= col("p")).as("chg"))
+        // pointer jumping, one checkpointed level per jump, early-stopped
+        // on the moved count: a lazily composed fixed depth measured 2.3x
+        // slower and two levels per checkpoint 11.8s vs 8.9s (round 8).
+        // p0 is not checkpointed: the first jump composes the cheap
+        // rooting join over the materialized sel lazily. Stopping at
+        // JumpsUnroll while still moving marks the jumps unconverged.
+        val pFull = loop.nested("jumps") { j =>
+          val out = j.iterate(p0, 0L, "chg", maxRounds = JumpsUnroll)(
+            q => jump(q.select(col("c"), col("p"))))((_, _, moved) => moved == 0)
+          j.keep(out)
+          out
+        }
+        val p = pFull.select(col("c"), col("p"))
+        // relabel live edges into merged-component space; drop loops
+        val (nextLive, nNext, _) = loop.step(live
+          .join(p.select(col("c").as("ca"), col("p").as("na")), Seq("ca"), "left")
+          .join(p.select(col("c").as("cb"), col("p").as("nb")), Seq("cb"), "left")
+          .select(coalesce(col("na"), col("ca")).as("ca"),
+            coalesce(col("nb"), col("cb")).as("cb"),
+            col("w"), col("ou"), col("ov"))
+          .filter(col("ca") =!= col("cb"))
+          .distinct())
+        loop.free(pFull, live)
+        live = nextLive
+        nLive = nNext
+      }
+      if (picked.isEmpty)
+        spark.range(0).select(col("id").as("ou"), col("id").as("ov"),
+          col("id").as("w"))
+      else picked.reduce(_ union _).distinct()
     }
-    free(live)
-    // the kept selection checkpoints back the lazy picked frames —
-    // hand them to the registry (runners release after materializing)
-    keptSels.foreach { s =>
-      ckpts.remove(s).foreach(c => CheckpointRegistry.trackFinal(spark, c))
-    }
-    lastRounds = rounds
-    lastJumpsConverged = jumpsConverged
-    if (picked.isEmpty)
-      spark.range(0).select(col("id").as("ou"), col("id").as("ov"),
-        col("id").as("w"))
-    else picked.reduce(_ union _).distinct()
-  }
+
+  /** This session's latest [[mst]] run: (Borůvka rounds, whether every
+    * round's pointer jumping reached its fixpoint within JumpsUnroll). */
+  private[graft] def convergence(spark: SparkSession): (Int, Boolean) =
+    (Superstep.stats(spark, "mst").fold(-1)(_.rounds),
+      Superstep.runs(spark, "mst.jumps").forall(_.converged))
 
   // ---- registry entry ---------------------------------------------------
 
@@ -267,8 +207,9 @@ object Mst {
       val out = mst(s, graft.graph.CitationGraph.edges(s, d))
         .select(col("ou").as("u"), col("ov").as("v"), col("w"))
         .orderBy(col("u"), col("v"))
-      require(lastRounds <= RoundsUnroll && lastJumpsConverged,
-        s"g_mst converged in (rounds=$lastRounds, jumpsOk=$lastJumpsConverged) " +
+      val (rounds, jumpsOk) = convergence(s)
+      require(rounds <= RoundsUnroll && jumpsOk,
+        s"g_mst converged in (rounds=$rounds, jumpsOk=$jumpsOk) " +
           s"but the unrolled oracle is ($RoundsUnroll, $JumpsUnroll) — " +
           "raise Mst unroll depths")
       out

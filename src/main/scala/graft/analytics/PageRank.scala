@@ -2,7 +2,6 @@ package graft.analytics
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.registry.Q
 
@@ -22,7 +21,7 @@ import graft.registry.Q
   *
   * Scale shape mirrors HyperANF's pinned superstep layout: edges are
   * shuffled by src ONCE, state keeps id-partitioning through
-  * localCheckpoint, AQE is disabled for the loop's duration, so each
+  * localCheckpoint, AQE is off for the loop ([[Superstep]]), so each
   * iteration carries exactly one exchange — the contribution aggregation
   * by dst (asserted in PageRankSpec).
   */
@@ -48,13 +47,9 @@ object PageRank {
     * 1 wins. */
   val CkptEvery = 1
 
-  @volatile private[graft] var lastIterationExchanges: Int = -1
-
   def pageRank(spark: SparkSession, edgesRaw: DataFrame,
       iters: Int = 10, ckptEvery: Int = CkptEvery): DataFrame =
-    LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) {
-      pageRankPinned(spark, edgesRaw, iters, ckptEvery, seedMax = None)
-    }
+    ranks(spark, edgesRaw, iters, ckptEvery, seedMax = None)
 
   /** Personalized PageRank: teleport mass restarts at the SEED SET
     * (id < seedMax) instead of uniformly — the locality-scoring variant
@@ -67,9 +62,7 @@ object PageRank {
     * PageRankSpec). */
   def personalizedPageRank(spark: SparkSession, edgesRaw: DataFrame,
       seedMax: Long, iters: Int = 10, ckptEvery: Int = CkptEvery): DataFrame =
-    LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) {
-      pageRankPinned(spark, edgesRaw, iters, ckptEvery, seedMax = Some(seedMax))
-    }
+    ranks(spark, edgesRaw, iters, ckptEvery, seedMax = Some(seedMax))
 
   /** Warm-start PageRank: run `iters` rounds of the SAME exact-integer
     * recurrence on `edgesRaw`, but initialize from `init` (id, r) ranks
@@ -86,101 +79,83 @@ object PageRank {
     * into a false claim. Per-round cost and plan shape are unchanged. */
   def pageRankWarm(spark: SparkSession, edgesRaw: DataFrame,
       init: DataFrame, iters: Int, ckptEvery: Int = CkptEvery): DataFrame =
-    LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) {
-      pageRankPinned(spark, edgesRaw, iters, ckptEvery, seedMax = None,
-        warmFrom = Some(init))
-    }
+    ranks(spark, edgesRaw, iters, ckptEvery, seedMax = None,
+      warmFrom = Some(init))
 
-  private def pageRankPinned(spark: SparkSession, edgesRaw: DataFrame,
+  private def ranks(spark: SparkSession, edgesRaw: DataFrame,
       iters: Int, ckptEvery: Int, seedMax: Option[Long],
-      warmFrom: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
+      warmFrom: Option[DataFrame] = None): DataFrame =
+    Superstep.run(spark, "pagerank",
+      org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) { loop =>
+      val e = loop.cache(edgesRaw.select(col("src"), col("dst"))
+        .filter(col("src") =!= col("dst")).distinct()
+        .repartition(col("src")))
+      val v = loop.cache(e.select(col("src").as("id"))
+        .union(e.select(col("dst").as("id"))).distinct())
+      // deg and e are BOTH loop-static, so join them ONCE before the loop
+      // (r4→r6 regression root cause: the loop re-did r ⋈ deg ⋈ e every
+      // iteration — 10 redundant vertex joins per run, VERDICT r6 #1).
+      // groupBy(src) reuses e's partitioning, the join is co-partitioned,
+      // and the persisted (src, dst, d) frame keeps hash(src) partitioning
+      // so the per-iteration rank join needs no exchange.
+      val deg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("d"))
+      val ed = loop.cache(e.join(deg, col("src") === deg("id"))
+        .select(col("src"), col("dst"), col("d")))
 
-    val e = edgesRaw.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val v = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // deg and e are BOTH loop-static, so join them ONCE before the loop
-    // (r4→r6 regression root cause: the loop re-did r ⋈ deg ⋈ e every
-    // iteration — 10 redundant vertex joins per run, VERDICT r6 #1).
-    // groupBy(src) reuses e's partitioning, the join is co-partitioned,
-    // and the persisted (src, dst, d) frame keeps hash(src) partitioning
-    // so the per-iteration rank join needs no exchange.
-    val deg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("d"))
-    val ed = e.join(deg, col("src") === deg("id"))
-      .select(col("src"), col("dst"), col("d"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      val n = v.count()
+      if (n == 0) v.select(col("id"), lit(0L).as("r"))
+      else {
+        ed.count() // materialize, then drop the raw-edge cache early
+        loop.free(e)
+        // driver-side Long division == Spark `div` == DuckDB `//` on positives
+        val (r0Col, baseCol) = seedMax match {
+          case None =>
+            (lit(Scale / n),
+              lit(((100L - DampPct) * Scale) / (100L * n)))
+          case Some(sm) =>
+            // seed count is a driver-side decision like n, one cheap count
+            val nS = v.filter(col("id") < sm).count()
+            require(nS > 0, s"personalized PageRank: no vertices with id < $sm")
+            (when(col("id") < sm, lit(Scale / nS)).otherwise(lit(0L)),
+              when(col("id") < sm,
+                lit(((100L - DampPct) * Scale) / (100L * nS))).otherwise(lit(0L)))
+        }
 
-    val n = v.count()
-    if (n == 0) {
-      e.unpersist(false); v.unpersist(false); ed.unpersist(false)
-      return v.select(col("id"), lit(0L).as("r"))
+        var r = warmFrom match {
+          case None => v.select(col("id"), r0Col.as("r"))
+          case Some(init) =>
+            // standing ranks where known; the new graph's uniform mass for
+            // new vertices — one |V|-keyed join, before the loop
+            v.join(init.select(col("id"), col("r").as("r0")), Seq("id"), "left")
+              .select(col("id"), coalesce(col("r0"), lit(Scale / n)).as("r"))
+        }
+        var last = r // latest checkpoint
+        var since = 0
+        for (k <- 1 to iters) {
+          // shuffle-hash, build side = the vertex-sized frame, on BOTH loop
+          // joins: the r6 merge-hint shape re-sorted rank state and the
+          // static edge table every iteration; hash builds keep exactly one
+          // shuffle per superstep (the loop's `exchanges`, PageRankSpec)
+          val contrib = r.hint("shuffle_hash").join(ed, col("id") === col("src"))
+            .groupBy(col("dst"))
+            .agg(sum(expr("r div d")).as("contrib"))
+          val nextDs = v.join(contrib.hint("shuffle_hash"), col("id") === col("dst"), "left")
+            .select(col("id"),
+              (baseCol + expr(s"($DampPct * coalesce(contrib, 0L)) div 100")).as("r"))
+          since += 1
+          if (since == ckptEvery || k == iters) {
+            val (next, _, _) = loop.step(nextDs, advance = since)
+            loop.free(last)
+            last = next
+            r = next
+            since = 0
+          } else r = nextDs
+        }
+        // the final checkpoint backs the lazy result
+        loop.keep(last)
+        r
+      }
     }
-    ed.count() // materialize, then drop the raw-edge cache early
-    e.unpersist(false)
-    // driver-side Long division == Spark `div` == DuckDB `//` on positives
-    val (r0Col, baseCol) = seedMax match {
-      case None =>
-        (lit(Scale / n),
-          lit(((100L - DampPct) * Scale) / (100L * n)))
-      case Some(sm) =>
-        // seed count is a driver-side decision like n, one cheap count
-        val nS = v.filter(col("id") < sm).count()
-        require(nS > 0, s"personalized PageRank: no vertices with id < $sm")
-        (when(col("id") < sm, lit(Scale / nS)).otherwise(lit(0L)),
-          when(col("id") < sm,
-            lit(((100L - DampPct) * Scale) / (100L * nS))).otherwise(lit(0L)))
-    }
-
-    var r = warmFrom match {
-      case None => v.select(col("id"), r0Col.as("r"))
-      case Some(init) =>
-        // standing ranks where known; the new graph's uniform mass for
-        // new vertices — one |V|-keyed join, before the loop
-        v.join(init.select(col("id"), col("r").as("r0")), Seq("id"), "left")
-          .select(col("id"), coalesce(col("r0"), lit(Scale / n)).as("r"))
-    }
-    var prevCkpt: Option[DataFrame] = None
-    var sinceCkpt = 0
-    for (k <- 1 to iters) {
-      // shuffle-hash, build side = the vertex-sized frame, on BOTH loop
-      // joins: the r6 merge-hint shape re-sorted rank state and the
-      // static edge table every iteration (SMJ sorts are per-iteration
-      // work; hash builds on |V|-sized sides are cheaper and leave the
-      // co-partitioned exchange count unchanged — still exactly one
-      // shuffle per superstep, asserted below and in PageRankSpec).
-      val contrib = r.hint("shuffle_hash").join(ed, col("id") === col("src"))
-        .groupBy(col("dst"))
-        .agg(sum(expr("r div d")).as("contrib"))
-      val nextDs = v.join(contrib.hint("shuffle_hash"), col("id") === col("dst"), "left")
-        .select(col("id"),
-          (baseCol + expr(s"($DampPct * coalesce(contrib, 0L)) div 100")).as("r"))
-      // capture the per-superstep exchange count on rounds that start
-      // from materialized state (a nested round's plan embeds the prior
-      // rounds' exchanges, so its count is the batch's, not one round's)
-      if (sinceCkpt == 0)
-        lastIterationExchanges = nextDs.queryExecution.executedPlan.collect {
-          case x: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => x
-        }.size
-      sinceCkpt += 1
-      if (sinceCkpt == ckptEvery || k == iters) {
-        val next = nextDs.localCheckpoint(true)
-        prevCkpt.foreach(p =>
-          GraftColumnBridge.checkpointRdd(p).foreach(_.unpersist(false)))
-        prevCkpt = Some(next)
-        r = next
-        sinceCkpt = 0
-      } else r = nextDs
-    }
-    v.unpersist(false); ed.unpersist(false)
-    // final checkpoint backs the lazy result; the runner releases it via
-    // CheckpointRegistry once the result is materialized
-    prevCkpt.foreach(CheckpointRegistry.trackFinal(spark, _))
-    r
-  }
 
   // ---- registry entry ---------------------------------------------------
 

@@ -31,7 +31,8 @@ import graft.registry.Q
   * Scale shape: each flood round is one co-partitioned max/any
   * aggregation over the edge frame + a join back to state (the PageRank
   * exchange budget); subgraph shrink is two semi-joins; state and edges
-  * localCheckpoint per round with eager release (Mis's layout). Rounds
+  * are checkpointed per round by the [[Superstep]] skeleton (Mis's
+  * layout). Rounds
   * measured on the citation graph: see the require gates.
   */
 object Scc {
@@ -46,194 +47,142 @@ object Scc {
   val FwdDepth = 14
   val BwdDepth = 12
 
-  @volatile private[graft] var lastOuterRounds: Int = -1
-  @volatile private[graft] var lastMaxFwdRounds: Int = -1
-  @volatile private[graft] var lastMaxBwdRounds: Int = -1
-  @volatile private[graft] var lastTrimRounds: Int = -1
-  @volatile private[graft] var lastTrimmed: Long = -1L
-  @volatile private[graft] var lastInputEdges: Long = -1L
-
   def scc(spark: SparkSession, edgesRaw: DataFrame): DataFrame =
-    LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) { sccPinned(spark, edgesRaw) }
+    Superstep.run(spark, "scc",
+      org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) { loop =>
+      val (edges0, nEdges0, _) = loop.ckpt(
+        edgesRaw.select(col("src"), col("dst"))
+          .filter(col("src") =!= col("dst")).distinct()
+          .repartition(col("dst")))
+      loop.input(nEdges0)
+      var edges = edges0
+      // src-partitioned twin of the live edge list: the forward flood
+      // joins edges on src every round, so one extra checkpoint per
+      // shrink buys zero edge exchanges in all fwd rounds (guide §2.4:
+      // partition edges once, route only messages); bwd keeps dst
+      var edgesSrc = loop.ckpt(edges.repartition(col("src")))._1
+      val (verts0, nVerts0, _) = loop.ckpt(
+        edges.select(col("src").as("id"))
+          .union(edges.select(col("dst").as("id"))).distinct()
+          .repartition(col("id")))
+      var verts = verts0
+      var nActive = nVerts0
+      // every outer round assigns at least its roots
+      loop.limit(nVerts0)
+      val sccFrames = scala.collection.mutable.ArrayBuffer[DataFrame]()
 
-  private def sccPinned(spark: SparkSession, edgesRaw: DataFrame): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
-
-    def ckpt(df: DataFrame): DataFrame = df.localCheckpoint(true)
-    // fused checkpoint+count (GraftColumnBridge.ckptCounted): one job
-    // materializes AND counts — the eager ckpt + fastCount/countTrue
-    // pair was two scheduler round-trips per loop step (guide §1.2,
-    // VERDICT r13 next-round #1)
-    def ckptN(df: DataFrame): (DataFrame, Long) = {
-      val (c, n, _) = GraftColumnBridge.ckptCounted(df)
-      (c, n)
-    }
-    def free(df: DataFrame): Unit =
-      GraftColumnBridge.checkpointRdd(df).foreach(_.unpersist(false))
-
-    val (edges0, nEdges0) = ckptN(
-      edgesRaw.select(col("src"), col("dst"))
-        .filter(col("src") =!= col("dst")).distinct()
-        .repartition(col("dst")))
-    var edges = edges0
-    // src-partitioned twin of the live edge list: the forward flood
-    // joins edges on src every round, and with only the dst-partitioned
-    // copy the FULL edge list was reshuffled by src per flood round
-    // (guide §2.4 share the exchange / Pregel practice: partition edges
-    // once, route only messages). One extra checkpoint per trim/shrink
-    // buys zero edge exchanges in all fwd rounds; bwd keeps the dst copy.
-    var edgesSrc = ckpt(edges.repartition(col("src")))
-    val (verts0, nVerts0) = ckptN(
-      edges.select(col("src").as("id"))
-        .union(edges.select(col("dst").as("id"))).distinct()
-        .repartition(col("id")))
-    var verts = verts0
-
-    val sccFrames = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var nActive = nVerts0
-    lastInputEdges = nEdges0
-    var outer = 0
-    var maxFwd = 0
-    var maxBwd = 0
-    var trimRounds = 0
-    var trimmed = 0L
-
-    // Trim phase (Hong et al. 2013, "On Fast Parallel Detection of
-    // Strongly Connected Components": FW-BW-Trim): a live vertex with
-    // no in-edge or no out-edge in the live subgraph lies on no cycle —
-    // it is its own singleton SCC — and peeling it can expose more.
-    // Each trim round is two cheap semi-joins + a shrink (no flood),
-    // and running trim before every coloring round means the expensive
-    // fwd/bwd fixpoint floods only ever run on the 2-core-like residue
-    // that actually contains cycles; on the citation graph the
-    // post-giant-SCC residue is pure DAG, so trim eliminates the entire
-    // second outer round's 14+ flood rounds (the r9 job-count cut).
-    // scc_id = id for a singleton — identical to what the coloring
-    // round would assign (the root is the max member id), so the
-    // unrolled no-trim oracle still matches value for value.
-    def trim(): Unit = {
-      // A/B kill-switch for SccProbe measurement only (on by default)
-      if (!sys.props.getOrElse("graft.scc.trim", "true").toBoolean) return
-      var go = nActive > 0
-      while (go) {
-        val (nextVerts, nNext) = ckptN(verts
-          .join(edges.select(col("src").as("id")), Seq("id"), "left_semi")
-          .join(edges.select(col("dst").as("id")), Seq("id"), "left_semi"))
-        if (nNext == nActive) { free(nextVerts); go = false }
-        else {
-          trimRounds += 1
-          val assigned = ckpt(verts.join(nextVerts, Seq("id"), "left_anti")
-            .select(col("id"), col("id").as("scc_id")))
-          sccFrames += assigned
-          CheckpointRegistry.trackFinal(spark, assigned)
-          trimmed += nActive - nNext
-          val nextEdges = ckpt(edges
-            .join(nextVerts.select(col("id").as("src")), Seq("src"), "left_semi")
-            .join(nextVerts.select(col("id").as("dst")), Seq("dst"), "left_semi")
-            .select(col("src"), col("dst")))
-          free(verts); free(edges); free(edgesSrc)
-          verts = nextVerts; edges = nextEdges
-          edgesSrc = ckpt(edges.repartition(col("src")))
-          nActive = nNext
-          go = nActive > 0
-        }
+      def assign(members: DataFrame): Unit = {
+        sccFrames += members
+        loop.keep(members)
       }
-    }
 
-    trim()
-    while (nActive > 0) {
-      outer += 1
-      // 1. forward max flood to fixpoint. NEGATIVE RESULT, measured
-      // and kept (round 10): chaining TWO flood steps per checkpoint
-      // cut jobs 79 -> 74 but RAISED warm wall 6.9s -> 8.2s at sf0.1 —
-      // each step consumes its input twice (incoming build + state
-      // join), so the un-checkpointed inner step re-evaluates its
-      // whole subtree inside the outer one, and the doubled
-      // propagation work outweighs the halved scheduler round-trips.
-      // One step per checkpoint is the measured optimum; the job-RT
-      // exposure is attributed instead (contract rounds x host
-      // job_rt_ms).
-      def fwdStep(color: DataFrame): DataFrame = {
-        val incoming = color.join(edgesSrc, col("id") === col("src"))
-          .groupBy(col("dst")).agg(max(col("c")).as("mc"))
-          .select(col("dst").as("id"), col("mc"))
-        color.join(incoming.hint("shuffle_hash"), Seq("id"), "left")
-          .select(col("id"),
-            greatest(col("c"), coalesce(col("mc"), col("c"))).as("c"),
-            (col("mc").isNotNull && col("mc") > col("c")).as("chg"))
+      // restrict the live subgraph to `nextVerts`
+      def shrinkTo(nextVerts: DataFrame, nNext: Long): Unit = {
+        val (nextEdges, _, _) = loop.ckpt(edges
+          .join(nextVerts.select(col("id").as("src")), Seq("src"), "left_semi")
+          .join(nextVerts.select(col("id").as("dst")), Seq("dst"), "left_semi")
+          .select(col("src"), col("dst")))
+        loop.free(verts, edges, edgesSrc)
+        verts = nextVerts
+        edges = nextEdges
+        edgesSrc = loop.ckpt(edges.repartition(col("src")))._1
+        nActive = nNext
       }
-      var colorFull = ckpt(verts.select(col("id"), col("id").as("c"),
-        lit(false).as("chg")))
-      var color = colorFull.select(col("id"), col("c"))
-      var changed = 1L
-      var fwd = 0
-      while (changed > 0) {
-        fwd += 1
-        // ONE job per flood round: materialization counts the changed
-        // flags as it caches (previously ckpt + countTrue = two jobs)
-        val (nextFull, _, nChg) = GraftColumnBridge.ckptCounted(fwdStep(color), "chg")
-        changed = nChg
-        free(colorFull); colorFull = nextFull
-        color = colorFull.select(col("id"), col("c"))
-      }
-      maxFwd = math.max(maxFwd, fwd)
-      // 2+3. backward flood inside color classes from the roots
-      // u joins when some edge u->w has w a member and color(u)==color(w);
-      // one membership step per checkpoint (the stride-2 negative
-      // result above applies here identically — member is consumed
-      // twice per step)
-      def bwdStep(member: DataFrame): DataFrame = {
-        val newFrontier = member.select(col("id").as("dst"), col("c"))
-          .join(edges, "dst")
-          .select(col("src").as("id"), col("c"))
-          .join(color.withColumnRenamed("c", "uc"), "id")
-          .filter(col("c") === col("uc"))
-          .select(col("id"), col("c"))
-        member.union(newFrontier).distinct()
-      }
-      val (member0, nMember0) = ckptN(color.filter(col("id") === col("c"))
-        .select(col("id"), col("c")))
-      var member = member0
-      var nMember = nMember0
-      changed = 1L
-      var bwd = 0
-      while (changed > 0) {
-        bwd += 1
-        // one fused job per membership round; the previous count is
-        // carried in a var (re-counting the cached previous checkpoint
-        // was one more scheduler round-trip per round)
-        val (nextM, nNext) = ckptN(bwdStep(member))
-        changed = nNext - nMember
-        nMember = nNext
-        free(member); member = nextM
-      }
-      maxBwd = math.max(maxBwd, bwd)
-      val assigned = ckpt(member.select(col("id"), col("c").as("scc_id")))
-      sccFrames += assigned
-      CheckpointRegistry.trackFinal(spark, assigned)
-      free(member); free(colorFull)
-      // 4. shrink the live subgraph (vertex materialization + count fused)
-      val (nextVerts, nNextVerts) = ckptN(verts.join(assigned.select(col("id")),
-        Seq("id"), "left_anti"))
-      val nextEdges = ckpt(edges
-        .join(nextVerts.select(col("id").as("src")), Seq("src"), "left_semi")
-        .join(nextVerts.select(col("id").as("dst")), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst")))
-      free(verts); free(edges); free(edgesSrc)
-      verts = nextVerts; edges = nextEdges
-      edgesSrc = ckpt(edges.repartition(col("src")))
-      nActive = nNextVerts
+
+      // Trim phase (Hong et al. 2013, FW-BW-Trim): a live vertex with no
+      // in-edge or no out-edge in the live subgraph lies on no cycle, so
+      // it is its own singleton SCC, and peeling it can expose more. Each
+      // trim round is two cheap semi-joins and a shrink, so the fwd/bwd
+      // floods only run on the residue that contains cycles; on the
+      // citation graph that removes the whole second outer round (the r9
+      // job-count cut). scc_id = id for a singleton is what the coloring
+      // would assign, so the unrolled no-trim oracle still matches.
+      // `graft.scc.trim=false` is SccProbe's A/B switch.
+      def trim(): Unit =
+        if (sys.props.getOrElse("graft.scc.trim", "true").toBoolean)
+          loop.nested("trim") { t =>
+            // every counted round trims at least one vertex
+            t.limit(nActive)
+            var go = nActive > 0
+            while (go) {
+              val (nextVerts, nNext, _) = loop.ckpt(verts
+                .join(edges.select(col("src").as("id")), Seq("id"), "left_semi")
+                .join(edges.select(col("dst").as("id")), Seq("id"), "left_semi"))
+              if (nNext == nActive) { loop.free(nextVerts); go = false }
+              else {
+                t.round(nActive - nNext)
+                assign(loop.ckpt(verts.join(nextVerts, Seq("id"), "left_anti")
+                  .select(col("id"), col("id").as("scc_id")))._1)
+                shrinkTo(nextVerts, nNext)
+                go = nActive > 0
+              }
+            }
+          }
+
       trim()
+      while (nActive > 0) {
+        // 1. forward max flood to fixpoint, one step per checkpoint: two
+        // per checkpoint cut jobs 79 -> 74 but raised warm wall 6.9s ->
+        // 8.2s at sf0.1 (round 10), each step reading its input twice
+        def fwdStep(color: DataFrame): DataFrame = {
+          val incoming = color.join(edgesSrc, col("id") === col("src"))
+            .groupBy(col("dst")).agg(max(col("c")).as("mc"))
+            .select(col("dst").as("id"), col("mc"))
+          color.join(incoming.hint("shuffle_hash"), Seq("id"), "left")
+            .select(col("id"),
+              greatest(col("c"), coalesce(col("mc"), col("c"))).as("c"),
+              (col("mc").isNotNull && col("mc") > col("c")).as("chg"))
+        }
+        val colorFull = loop.nested("fwd") { f =>
+          // colors settle within (longest path + 1) <= |V| rounds
+          f.limit(nActive + 1)
+          val (c0, _, _) = f.ckpt(verts.select(col("id"), col("id").as("c"),
+            lit(false).as("chg")))
+          val out = f.iterate(c0, nActive, "chg")(
+            s => fwdStep(s.select(col("id"), col("c"))))((_, _, chg) => chg == 0)
+          f.keep(out)
+          out
+        }
+        val color = colorFull.select(col("id"), col("c"))
+        // 2+3. backward flood inside color classes from the roots: u
+        // joins when some edge u->w has w a member and color(u)==color(w)
+        def bwdStep(member: DataFrame): DataFrame = {
+          val newFrontier = member.select(col("id").as("dst"), col("c"))
+            .join(edges, "dst")
+            .select(col("src").as("id"), col("c"))
+            .join(color.withColumnRenamed("c", "uc"), "id")
+            .filter(col("c") === col("uc"))
+            .select(col("id"), col("c"))
+          member.union(newFrontier).distinct()
+        }
+        val member = loop.nested("bwd") { b =>
+          b.limit(nActive + 1)
+          val (m0, nM0, _) = b.ckpt(color.filter(col("id") === col("c"))
+            .select(col("id"), col("c")))
+          val out = b.iterate(m0, nM0)(bwdStep)((n, prev, _) => n == prev)
+          b.keep(out)
+          out
+        }
+        val (assigned, _, _) = loop.ckpt(member.select(col("id"), col("c").as("scc_id")))
+        assign(assigned)
+        loop.free(member, colorFull)
+        // 4. shrink the live subgraph: the outer round's counted step
+        val (nextVerts, nNextVerts, _) = loop.step(
+          verts.join(assigned.select(col("id")), Seq("id"), "left_anti"))
+        shrinkTo(nextVerts, nNextVerts)
+        trim()
+      }
+      if (sccFrames.isEmpty)
+        spark.range(0).select(col("id"), col("id").as("scc_id"))
+      else sccFrames.reduce(_ union _)
     }
-    free(verts); free(edges); free(edgesSrc)
-    lastOuterRounds = outer
-    lastMaxFwdRounds = maxFwd
-    lastMaxBwdRounds = maxBwd
-    lastTrimRounds = trimRounds
-    lastTrimmed = trimmed
-    if (sccFrames.isEmpty)
-      spark.range(0).select(col("id"), col("id").as("scc_id"))
-    else sccFrames.reduce(_ union _)
+
+  /** Depths of this session's latest [[scc]] run: (outer rounds, most
+    * forward rounds, most backward rounds in one outer round). */
+  private[graft] def depths(spark: SparkSession): (Int, Int, Int) = {
+    def most(loop: String): Int =
+      Superstep.runs(spark, s"scc.$loop").map(_.rounds).maxOption.getOrElse(0)
+    (Superstep.stats(spark, "scc").fold(-1)(_.rounds), most("fwd"), most("bwd"))
   }
 
   // ---- registry entry ---------------------------------------------------
@@ -313,10 +262,10 @@ object Scc {
     assignCache.computeIfAbsent((graft.SessionKey(spark), dir), _ => {
       val a = scc(spark, graft.graph.CitationGraph.edges(spark, dir))
         .localCheckpoint(true)
-      require(lastOuterRounds <= OuterDepth &&
-        lastMaxFwdRounds <= FwdDepth && lastMaxBwdRounds <= BwdDepth,
-        s"g_scc converged in (outer=$lastOuterRounds, fwd=$lastMaxFwdRounds, " +
-          s"bwd=$lastMaxBwdRounds) but the unrolled oracle is " +
+      val (outer, fwd, bwd) = depths(spark)
+      require(outer <= OuterDepth && fwd <= FwdDepth && bwd <= BwdDepth,
+        s"g_scc converged in (outer=$outer, fwd=$fwd, bwd=$bwd) but the " +
+          "unrolled oracle is " +
           s"($OuterDepth, $FwdDepth, $BwdDepth) — raise Scc depths")
       a
     })
@@ -329,8 +278,7 @@ object Scc {
     while (it.hasNext) {
       val e = it.next()
       if (e.getKey._1 == sid) {
-        org.apache.spark.sql.GraftColumnBridge.checkpointRdd(e.getValue)
-          .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
+        Superstep.release(e.getValue)
         it.remove()
       }
     }

@@ -2,7 +2,6 @@ package graft.analytics
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.registry.Q
 
@@ -13,7 +12,7 @@ import graft.registry.Q
   * reproduces exactly (distances are BIGINT sums of BIGINT weights —
   * no float accumulation, bit-identical across engines and layouts).
   *
-  * Same pinned layout as PageRank (LoopConf): edges shuffled onto src
+  * Same pinned layout as PageRank ([[Superstep]]): edges shuffled onto src
   * once, state id-partitioned, one exchange per round (the relaxation
   * min-aggregation), checkpoint cadence measured per-operator (CkptEvery).
   */
@@ -37,56 +36,45 @@ object ShortestPaths {
 
   def sssp(spark: SparkSession, edgesRaw: DataFrame, source: Long,
       rounds: Int = 10, ckptEvery: Int = CkptEvery): DataFrame =
-    LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) {
-      ssspPinned(spark, edgesRaw, source, rounds, ckptEvery)
+    Superstep.run(spark, "sssp",
+      org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) { loop =>
+      val e = loop.cache(weighted(
+        edgesRaw.select(col("src"), col("dst"))
+          .filter(col("src") =!= col("dst")).distinct())
+        .repartition(col("src")))
+      val v = loop.cache(e.select(col("src").as("id"))
+        .union(e.select(col("dst").as("id"))).distinct())
+      v.count()
+
+      // dist is NULL while unreached; min() ignores NULLs on both engines
+      var st = v.select(col("id"),
+        when(col("id") === source, lit(0L)).as("dist"))
+      var last = st // latest checkpoint
+      var since = 0
+      for (k <- 1 to rounds) {
+        val cand = st.join(e, col("id") === col("src"))
+          .groupBy(col("dst"))
+          .agg(min(col("dist") + col("w")).as("cand"))
+        val nextDs = st.hint("merge").join(cand, col("id") === col("dst"), "left")
+          .select(col("id"),
+            when(col("dist").isNull, col("cand"))
+              .when(col("cand").isNull, col("dist"))
+              .otherwise(least(col("dist"), col("cand"))).as("dist"))
+        since += 1
+        if (since == ckptEvery || k == rounds) {
+          val (next, _, _) = loop.step(nextDs, advance = since)
+          loop.free(last)
+          last = next
+          st = next
+          since = 0
+        } else st = nextDs
+      }
+      // the final checkpoint backs the lazy result
+      loop.keep(last)
+      // only reached vertices: NULL-bearing numeric output would break the
+      // strict gate, and an unreached vertex has no distance to report
+      st.filter(col("dist").isNotNull)
     }
-
-  private def ssspPinned(spark: SparkSession, edgesRaw: DataFrame,
-      source: Long, rounds: Int, ckptEvery: Int): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
-
-    val e = weighted(
-      edgesRaw.select(col("src"), col("dst"))
-        .filter(col("src") =!= col("dst")).distinct())
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val v = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    v.count()
-
-    // dist is NULL while unreached; min() ignores NULLs on both engines
-    var st = v.select(col("id"),
-      when(col("id") === source, lit(0L)).as("dist"))
-    var prevCkpt: Option[DataFrame] = None
-    var sinceCkpt = 0
-    for (k <- 1 to rounds) {
-      val cand = st.join(e, col("id") === col("src"))
-        .groupBy(col("dst"))
-        .agg(min(col("dist") + col("w")).as("cand"))
-      val nextDs = st.hint("merge").join(cand, col("id") === col("dst"), "left")
-        .select(col("id"),
-          when(col("dist").isNull, col("cand"))
-            .when(col("cand").isNull, col("dist"))
-            .otherwise(least(col("dist"), col("cand"))).as("dist"))
-      sinceCkpt += 1
-      if (sinceCkpt == ckptEvery || k == rounds) {
-        val next = nextDs.localCheckpoint(true)
-        prevCkpt.foreach(p =>
-          GraftColumnBridge.checkpointRdd(p).foreach(_.unpersist(false)))
-        prevCkpt = Some(next)
-        st = next
-        sinceCkpt = 0
-      } else st = nextDs
-    }
-    e.unpersist(false); v.unpersist(false)
-    // final checkpoint backs the lazy result; the runner releases it via
-    // CheckpointRegistry once the result is materialized
-    prevCkpt.foreach(CheckpointRegistry.trackFinal(spark, _))
-    // only reached vertices: NULL-bearing numeric output would break the
-    // strict gate, and an unreached vertex has no distance to report
-    st.filter(col("dist").isNotNull)
-  }
 
   // ---- registry entry ---------------------------------------------------
 

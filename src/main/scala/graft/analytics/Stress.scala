@@ -1,6 +1,7 @@
 package graft.analytics
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.GraftColumnBridge.Max
 import org.apache.spark.sql.functions._
 
 import graft.registry.Q
@@ -42,15 +43,6 @@ object Stress {
     * depth+1. 10 carries the SSSP headroom convention. */
   val Rounds = 10
 
-  @volatile private[graft] var lastMaxSigma: Long = -1
-  @volatile private[graft] var lastMaxTail: Long = -1
-
-  private def ckpt(df: DataFrame): DataFrame = df.localCheckpoint(true)
-  private def free(df: DataFrame): Unit = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.checkpointRdd(df).foreach(_.unpersist(false))
-  }
-
   /** Deduped, self-loop-free, src-repartitioned edge frame — the layout
     * every phase joins against. NOT checkpointed here (callers decide
     * whether it is transient or session-pinned). */
@@ -59,85 +51,86 @@ object Stress {
       .filter(col("src") =!= col("dst")).distinct()
       .repartition(col("src"))
 
-  /** Forward level-synchronous BFS from the id < sourceMax sample over
-    * a prepped (checkpointed) edge frame: returns the checkpointed
-    * (s, v, d, sig) level frame, the max depth reached, and whether the
-    * frontier DRAINED before the round cap (true = fixpoint reached —
-    * the flag that decides which eccentricity bounds are certified, see
-    * [[Eccentricity]]). Shared by stress (which continues with the
-    * backward phase) and harmonic centrality (which only needs the
-    * levels) — one implementation, one session-cached materialization
-    * ([[levelsFor]]). */
-  private[analytics] def forward(spark: SparkSession, e: DataFrame,
-      sourceMax: Long, rounds: Int): (DataFrame, Int, Boolean) = {
-    val verts = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
+  /** One materialized sampled BFS: the prepped edges, the (s, v, d, sig)
+    * level frame, the max depth reached, the edge count the loops are
+    * sized from, whether the frontier DRAINED before the round cap (the
+    * flag that certifies eccentricity bounds, see [[Eccentricity]]), and
+    * max(sig) for the overflow gate. */
+  private[analytics] final case class Levels(edges: DataFrame,
+      reached: DataFrame, maxDepth: Int, edgeCount: Long, drained: Boolean,
+      maxSigma: Long)
 
-    // reached (s, v, d, sig); frontier = rows at depth k-1.
-    // Fused checkpoint+count (ckptCounted): materialization counts as it
-    // caches, and the per-level comparison carries the previous count in
-    // a var — the former fastCount pair was two extra cached-scan jobs
-    // per BFS level (guide §1.2).
-    val (reached0, nReached0, _) = org.apache.spark.sql.GraftColumnBridge
-      .ckptCounted(verts.filter(col("id") < sourceMax)
-        .select(col("id").as("s"), col("id").as("v"),
-          lit(0L).as("d"), lit(1L).as("sig")))
-    var reached = reached0
-    var nReached = nReached0
-    // early-stop on an empty frontier: rounds past the BFS fixpoint are
-    // idempotent (the unrolled oracle runs all of them and matches);
-    // maxDepth then bounds the backward iterations needed (T_i is exact
-    // for DAG height <= i, and height <= maxDepth)
-    var maxDepth = 0
-    var k = 1
-    var frontierEmpty = false
-    while (k <= rounds && !frontierEmpty) {
-      val frontier = reached.filter(col("d") === (k - 1).toLong)
-      val cand = frontier.join(e, col("v") === col("src"))
-        .groupBy(col("s"), col("dst"))
-        .agg(sum(col("sig")).as("nsig"))
-        .select(col("s"), col("dst").as("v"), col("nsig"))
-      val fresh = cand.join(reached.select(col("s"), col("v")),
-          Seq("s", "v"), "left_anti")
-        .select(col("s"), col("v"), lit(k.toLong).as("d"),
-          col("nsig").as("sig"))
-      val (next, nNext, _) = org.apache.spark.sql.GraftColumnBridge
-        .ckptCounted(reached.union(fresh))
-      if (nNext == nReached) frontierEmpty = true
-      else maxDepth = k
-      free(reached); reached = next; nReached = nNext
-      k += 1
+  /** Forward level-synchronous BFS from the id < sourceMax sample over a
+    * prepped, checkpointed edge frame, as nested loop `forward`: returns
+    * (reached, maxDepth, drained, maxSigma) with `reached` owned by
+    * `loop`. Shared by stress (which continues with the backward phase)
+    * and harmonic centrality and eccentricity (which only need the
+    * levels). Rounds past the BFS fixpoint are idempotent, so the
+    * unrolled oracle runs all of them and matches; maxDepth bounds the
+    * backward rounds needed (T_i is exact for DAG height <= i). */
+  private[analytics] def forward(loop: Superstep.Loop, e: DataFrame,
+      sourceMax: Long, rounds: Int): (DataFrame, Int, Boolean, Long) =
+    loop.nested("forward") { f =>
+      val verts = e.select(col("src").as("id"))
+        .union(e.select(col("dst").as("id"))).distinct()
+      // the per-round stat is max(sig) over the reached rows
+      val (reached0, nReached0, sig0) = f.ckpt(
+        verts.filter(col("id") < sourceMax)
+          .select(col("id").as("s"), col("id").as("v"),
+            lit(0L).as("d"), lit(1L).as("sig")), "sig", Max)
+      var k = 0
+      var drained = false
+      var maxSigma = sig0
+      val reached = f.iterate(reached0, nReached0, "sig", Max, rounds) { r =>
+        k += 1
+        val frontier = r.filter(col("d") === (k - 1).toLong)
+        val cand = frontier.join(e, col("v") === col("src"))
+          .groupBy(col("s"), col("dst"))
+          .agg(sum(col("sig")).as("nsig"))
+          .select(col("s"), col("dst").as("v"), col("nsig"))
+        val fresh = cand.join(r.select(col("s"), col("v")),
+            Seq("s", "v"), "left_anti")
+          .select(col("s"), col("v"), lit(k.toLong).as("d"),
+            col("nsig").as("sig"))
+        r.union(fresh)
+      } { (n, prev, sig) =>
+        maxSigma = sig
+        drained = n == prev
+        drained
+      }
+      f.keep(reached)
+      (reached, if (drained) k - 1 else k, drained, maxSigma)
     }
-    (reached, maxDepth, frontierEmpty)
-  }
 
   def stress(spark: SparkSession, edgesRaw: DataFrame,
       sourceMax: Long = SourceMax, rounds: Int = Rounds): DataFrame =
-    LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) {
-      val e = ckpt(prep(edgesRaw))
-      val (reached, maxDepth, _) = forward(spark, e, sourceMax, rounds)
-      val out = backward(spark, e, reached, maxDepth, rounds)
-      free(e)
-      CheckpointRegistry.trackFinal(spark, reached)
-      out
+    Superstep.run(spark, "stress",
+      org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) { loop =>
+      val (e, _, _) = loop.ckpt(prep(edgesRaw))
+      val (reached, maxDepth, _, maxSigma) = forward(loop, e, sourceMax, rounds)
+      loop.keep(reached)
+      backward(loop, e, reached, maxDepth, rounds, maxSigma)
     }
 
-  /** DAG derivation + backward tail accumulation + overflow gate. The
-    * level frame is read, never freed, here — the caller owns it (it
-    * may be the session-pinned cache). */
-  private def backward(spark: SparkSession, e: DataFrame,
-      reached: DataFrame, maxDepth: Int, rounds: Int): DataFrame = {
+  /** DAG derivation + backward tail accumulation + overflow gate, on
+    * `loop` itself (its per-round stat is max(T)). The level frame is
+    * read, never freed, here — the caller owns it (it may be the
+    * session-pinned cache). */
+  private def backward(loop: Superstep.Loop, e: DataFrame,
+      reached: DataFrame, maxDepth: Int, rounds: Int,
+      maxSigma: Long): DataFrame = {
     // shortest-path DAG: (s, u, w) with d(w) = d(u) + 1
     val rFrom = reached.select(col("s"), col("v").as("u"), col("d").as("du"))
     val rTo = reached.select(col("s").as("s2"), col("v").as("w"),
       col("d").as("dw"))
-    val dag2 = ckpt(rFrom.join(e, col("u") === col("src"))
+    val (dag2, _, _) = loop.ckpt(rFrom.join(e, col("u") === col("src"))
       .join(rTo, col("s") === col("s2") && col("dst") === col("w"))
       .filter(col("dw") === col("du") + 1L)
       .select(col("s"), col("u"), col("w")))
 
     // backward: T_0 = 1; T_i(v) = 1 + sum over DAG successors T_{i-1}(w)
-    var tail = ckpt(reached.select(col("s"), col("v"), lit(1L).as("t")))
+    var (tail, _, maxTail) = loop.ckpt(
+      reached.select(col("s"), col("v"), lit(1L).as("t")), "t", Max)
     for (_ <- 1 to math.min(rounds, maxDepth + 1)) {
       // join DAG successors' current T onto each u
       val ss = dag2.join(
@@ -145,57 +138,65 @@ object Stress {
         col("s") === col("ts") && col("w") === col("tw"))
         .groupBy(col("s"), col("u")).agg(sum(col("t")).as("st"))
         .select(col("s"), col("u").as("v"), col("st"))
-      val next = ckpt(reached.select(col("s"), col("v"))
+      val (next, _, m) = loop.step(reached.select(col("s"), col("v"))
         .join(ss.hint("shuffle_hash"), Seq("s", "v"), "left")
         .select(col("s"), col("v"),
-          (lit(1L) + coalesce(col("st"), lit(0L))).as("t")))
-      free(tail); tail = next
+          (lit(1L) + coalesce(col("st"), lit(0L))).as("t")), "t", Max)
+      loop.free(tail)
+      tail = next
+      maxTail = m
     }
-
-    val joined = reached.select(col("s"), col("v"), col("sig"))
-      .join(tail, Seq("s", "v"))
-    val bounds = joined.agg(max(col("sig")).as("ms"), max(col("t")).as("mt"))
-      .head
-    // empty source set (no vertex under SourceMax / empty graph): max()
-    // is NULL and there is nothing to overflow
-    lastMaxSigma = if (bounds.isNullAt(0)) 0L else bounds.getLong(0)
-    lastMaxTail = if (bounds.isNullAt(1)) 0L else bounds.getLong(1)
-    require(lastMaxSigma < (1L << 31) && lastMaxTail < (1L << 31),
+    // path counts near 2^62 would wrap in Spark's BIGINT sum while DuckDB
+    // widens to HUGEINT; the gate keeps both inside BIGINT where they agree
+    require(maxSigma < (1L << 31) && maxTail < (1L << 31),
       s"stress centrality path counts near overflow (maxSigma=" +
-        s"$lastMaxSigma, maxTail=$lastMaxTail) — results would wrap in " +
+        s"$maxSigma, maxTail=$maxTail) — results would wrap in " +
         "BIGINT; shrink the source sample or the round count")
-
-    val out = joined
+    loop.keep(tail)
+    reached.select(col("s"), col("v"), col("sig"))
+      .join(tail, Seq("s", "v"))
       .groupBy(col("v")).agg(sum(col("sig") * col("t")).as("stress"))
       .select(col("v").as("id"), col("stress"))
-    free(dag2)
-    CheckpointRegistry.trackFinal(spark, tail)
-    out
   }
 
   /** Session-scoped sampled-BFS cache, keyed (session, dataset):
     * g_stress and g_harmonic both consume the (s, v, d, sig) level
     * frame, and a session composing several centrality analytics
     * should pay the BFS ONCE (the [[Scc.assignmentFor]] discipline).
-    * Both frames are eager localCheckpoints — |sample| × |V| rows of
-    * four longs plus the deduped edges — small enough to pin for the
+    * Both frames are localCheckpoints — |sample| × |V| rows of four
+    * longs plus the deduped edges — small enough to pin for the
     * session, and deliberately NOT CheckpointRegistry-tracked (the
     * registry releases after every query; a released truncated
     * checkpoint would be unrecomputable for the next caller). */
-  private val levelsCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (DataFrame, DataFrame, Int, Long, Boolean)]()
+  private val levelsCache =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), Levels]()
 
-  private[analytics] def levelsFor(spark: SparkSession,
-      dir: String): (DataFrame, DataFrame, Int, Long, Boolean) =
+  private[analytics] def levelsFor(spark: SparkSession, dir: String): Levels =
     levelsCache.computeIfAbsent((graft.SessionKey(spark), dir), _ => {
       val raw = graft.graph.CitationGraph.edges(spark, dir)
       val eCnt = raw.count()
-      LoopConf.pinned(spark, eCnt) {
-        val e = ckpt(prep(raw))
-        val (reached, maxDepth, drained) = forward(spark, e, SourceMax, Rounds)
-        (e, reached, maxDepth, eCnt, drained)
+      Superstep.run(spark, "bfs_levels", eCnt) { loop =>
+        val (e, _, _) = loop.ckpt(prep(raw))
+        val (reached, maxDepth, drained, maxSigma) =
+          forward(loop, e, SourceMax, Rounds)
+        loop.detach(e, reached)
+        Levels(e, reached, maxDepth, eCnt, drained, maxSigma)
       }
     })
+
+  /** The sampled levels over an arbitrary edge frame (specs, standalone
+    * paths), aggregated by `agg` as loop `name`; the level frame backs
+    * the lazy result. */
+  private[analytics] def aggregateSampled(spark: SparkSession, name: String,
+      edgesRaw: DataFrame, sourceMax: Long, rounds: Int)(
+      agg: DataFrame => DataFrame): DataFrame =
+    Superstep.run(spark, name,
+      org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) { loop =>
+      val (e, _, _) = loop.ckpt(prep(edgesRaw))
+      val (reached, _, _, _) = forward(loop, e, sourceMax, rounds)
+      loop.keep(reached)
+      agg(reached)
+    }
 
   /** Whether the session-cached sampled BFS for `dir` reached fixpoint
     * (frontier drained before the Rounds cap). Consumed by
@@ -203,7 +204,7 @@ object Stress {
     * when this is true — a truncated BFS underestimates eccentricities
     * (ADVICE r7 #4). */
   def bfsDrainedFor(spark: SparkSession, dir: String): Boolean =
-    levelsFor(spark, dir)._5
+    levelsFor(spark, dir).drained
 
   /** Standalone drained probe over an arbitrary edge frame (same
     * forward phase, nothing cached) — the flag callers of
@@ -211,11 +212,10 @@ object Stress {
     * bound. */
   def bfsDrained(spark: SparkSession, edgesRaw: DataFrame,
       sourceMax: Long = SourceMax, rounds: Int = Rounds): Boolean =
-    LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) {
-      val e = ckpt(prep(edgesRaw))
-      val (reached, _, drained) = forward(spark, e, sourceMax, rounds)
-      free(e); free(reached)
-      drained
+    Superstep.run(spark, "bfs_drained",
+      org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) { loop =>
+      val (e, _, _) = loop.ckpt(prep(edgesRaw))
+      forward(loop, e, sourceMax, rounds)._3
     }
 
   /** Warm the session BFS cache for `dir` — Bench times this as its own
@@ -235,7 +235,7 @@ object Stress {
     while (it.hasNext) {
       val e = it.next()
       if (e.getKey._1 == sid) {
-        free(e.getValue._1); free(e.getValue._2)
+        Superstep.release(e.getValue.edges, e.getValue.reached)
         it.remove()
       }
     }
@@ -243,9 +243,9 @@ object Stress {
 
   /** Registry path: backward phase over the session-cached levels. */
   def stressFor(spark: SparkSession, dir: String): DataFrame = {
-    val (e, reached, maxDepth, eCnt, _) = levelsFor(spark, dir)
-    LoopConf.pinned(spark, eCnt) {
-      backward(spark, e, reached, maxDepth, Rounds)
+    val lv = levelsFor(spark, dir)
+    Superstep.run(spark, "stress", lv.edgeCount) { loop =>
+      backward(loop, lv.edges, lv.reached, lv.maxDepth, Rounds, lv.maxSigma)
     }
   }
 

@@ -2,7 +2,6 @@ package graft.analytics
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.registry.Q
 
@@ -21,7 +20,7 @@ import graft.registry.Q
   * the unrolled DuckDB twin reproduces exactly (arrivals are BIGINT day
   * numbers, min() is order-independent: bit-identical across engines).
   *
-  * Superstep layout is the SSSP discipline (LoopConf pinning, temporal
+  * Superstep layout is the SSSP discipline ([[Superstep]] pinning, temporal
   * edges shuffled onto src once, state id-partitioned, one exchange per
   * round = the min-arrival aggregation, per-round localCheckpoint with
   * eager release of the superseded one). Temporal multiplicity is kept:
@@ -32,52 +31,39 @@ object TemporalReach {
 
   def earliestArrival(spark: SparkSession, tEdges: DataFrame, source: Long,
       rounds: Int = 10): DataFrame =
-    LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(tEdges)) {
-      pinned(spark, tEdges, source, rounds)
+    Superstep.run(spark, "temporal_reach",
+      org.apache.spark.sql.GraftColumnBridge.memoCount(tEdges)) { loop =>
+      val e = loop.cache(tEdges.select(col("src"), col("dst"), col("t"))
+        .filter(col("src") =!= col("dst")).distinct()
+        .repartition(col("src")))
+      val v = loop.cache(e.select(col("src").as("id"))
+        .union(e.select(col("dst").as("id"))).distinct())
+      v.count()
+
+      // arrival is NULL while unreached; the source is reached at day 0
+      // (all activation days are >= 0: the corpus dates start at the epoch)
+      var st = v.select(col("id"),
+        when(col("id") === source, lit(0L)).as("arr"))
+      for (_ <- 1 to rounds) {
+        // time-respecting relaxation: only edges activating at or after
+        // the current arrival extend a journey; NULL arrivals drop in the
+        // filter on both engines
+        val cand = st.join(e, col("id") === col("src"))
+          .filter(col("t") >= col("arr"))
+          .groupBy(col("dst"))
+          .agg(min(col("t")).as("cand"))
+        val (next, _, _) = loop.step(st.join(cand.hint("shuffle_hash"),
+            col("id") === col("dst"), "left")
+          .select(col("id"),
+            when(col("arr").isNull, col("cand"))
+              .when(col("cand").isNull, col("arr"))
+              .otherwise(least(col("arr"), col("cand"))).as("arr")))
+        loop.free(st)
+        st = next
+      }
+      loop.keep(st)
+      st.filter(col("arr").isNotNull)
     }
-
-  private def pinned(spark: SparkSession, tEdges: DataFrame,
-      source: Long, rounds: Int): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
-
-    val e = tEdges.select(col("src"), col("dst"), col("t"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val v = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    v.count()
-
-    // arrival is NULL while unreached; the source is reached at day 0
-    // (all activation days are >= 0: the corpus dates start at the epoch)
-    var st = v.select(col("id"),
-      when(col("id") === source, lit(0L)).as("arr"))
-    var prevCkpt: Option[DataFrame] = None
-    for (k <- 1 to rounds) {
-      // time-respecting relaxation: only edges activating at or after
-      // the current arrival extend a journey; NULL arrivals drop in the
-      // filter on both engines
-      val cand = st.join(e, col("id") === col("src"))
-        .filter(col("t") >= col("arr"))
-        .groupBy(col("dst"))
-        .agg(min(col("t")).as("cand"))
-      val nextDs = st.join(cand.hint("shuffle_hash"),
-          col("id") === col("dst"), "left")
-        .select(col("id"),
-          when(col("arr").isNull, col("cand"))
-            .when(col("cand").isNull, col("arr"))
-            .otherwise(least(col("arr"), col("cand"))).as("arr"))
-      val next = nextDs.localCheckpoint(true)
-      prevCkpt.foreach(p =>
-        GraftColumnBridge.checkpointRdd(p).foreach(_.unpersist(false)))
-      prevCkpt = Some(next)
-      st = next
-    }
-    e.unpersist(false); v.unpersist(false)
-    prevCkpt.foreach(CheckpointRegistry.trackFinal(spark, _))
-    st.filter(col("arr").isNotNull)
-  }
 
   // ---- registry entry ---------------------------------------------------
 

@@ -39,10 +39,6 @@ object Truss {
   val Depth3 = 6
   val Depth4 = 20
 
-  @volatile private[graft] var lastRounds3: Int = -1
-  @volatile private[graft] var lastRounds4: Int = -1
-  @volatile private[graft] var lastConverged: Boolean = false
-
   private def bidirOf(e: DataFrame): DataFrame =
     e.select(col("a").as("src"), col("b").as("dst"))
       .union(e.select(col("b").as("src"), col("a").as("dst")))
@@ -61,69 +57,53 @@ object Truss {
       .select(col("ed.a").as("a"), col("ed.b").as("b"))
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("sup"))
 
-  /** Peel `e` (canonical a<b edges) to the k-truss fixpoint; returns
-    * the surviving edge set and reports (rounds, converged) via the
-    * callback. A loop that exhausts `maxRounds` while still shrinking
-    * reports converged = false — the registered query fails LOUDLY
-    * rather than shipping a non-fixpoint the oracle can't match. */
-  private def peel(spark: SparkSession, e0: DataFrame, k: Int,
-      maxRounds: Int)(report: (Int, Boolean) => Unit): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
-    var e = e0
-    var prev = e0
-    var n = GraftColumnBridge.fastCount(e)
-    var r = 0
-    var changed = n > 0
-    while (changed && r < maxRounds) {
-      r += 1
-      // fused checkpoint+count: one job materializes and counts (the
-      // eager ckpt + fastCount pair was two round-trips — guide §1.2)
-      val (next, nNext, _) = GraftColumnBridge.ckptCounted(
-        supportOf(e)
-          .filter(col("sup") >= k - 2)
-          .select(col("a"), col("b")))
-      changed = nNext != n
-      n = nNext
-      // e0 belongs to the caller — only free checkpoints this loop made
-      if (prev ne e0) GraftColumnBridge.checkpointRdd(prev).foreach(_.unpersist(false))
-      prev = next
-      // compose next round from a stats-clean rewrap: the checkpoint's
-      // propagated size estimate would otherwise compound through this
-      // round's 5-way inner join until the driver livelocks in
-      // BigInteger stats math (see GraftColumnBridge.statsClean)
-      e = GraftColumnBridge.statsClean(next)
+  /** Peel `e` (`n` canonical a<b edges) to the k-truss fixpoint as
+    * nested loop `name`; returns the surviving edges and their count. A
+    * loop that exhausts `maxRounds` while still shrinking stops
+    * unconverged, and the registered query then fails LOUDLY rather than
+    * shipping a non-fixpoint the oracle can't match. Each round composes
+    * from a stats-clean rewrap: the checkpoint's propagated size
+    * estimate would otherwise compound through the round's 5-way inner
+    * join until the driver livelocks in BigInteger stats math. */
+  private def peel(loop: Superstep.Loop, name: String, e: DataFrame, n: Long,
+      k: Int, maxRounds: Int): (DataFrame, Long) =
+    if (n == 0) (e, 0L) // an empty edge set is its own fixpoint
+    else loop.nested(name, statsClean = true) { p =>
+      var rows = n
+      val out = p.iterate(e, n, maxRounds = maxRounds)(
+        supportOf(_).filter(col("sup") >= k - 2).select(col("a"), col("b")))(
+        (m, prev, _) => { rows = m; m == prev })
+      p.keep(out)
+      (out, rows)
     }
-    report(r, !changed)
-    // prev is the actual checkpoint backing `e` (a stats-clean rewrap
-    // has no checkpoint in its own plan for the registry to find)
-    CheckpointRegistry.trackFinal(spark, prev)
-    e
-  }
 
   /** Decomposition over any directed edge frame: (src, dst, trussness)
     * for every edge of the 3-truss, labeled 4 when it survives the
     * nested 4-peel. */
   def decompose(spark: SparkSession, edgesRaw: DataFrame): DataFrame =
-    LoopConf.pinned(spark, org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) {
-      val e0 = graft.graph.CitationGraph.bidirectional(edgesRaw)
+    Superstep.run(spark, "truss",
+      org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) { loop =>
+      val (e0, n0, _) = loop.ckpt(graft.graph.CitationGraph.bidirectional(edgesRaw)
         .filter(col("src") < col("dst"))
         .select(col("src").as("a"), col("dst").as("b"))
-        .repartition(col("a"))
-        .localCheckpoint(true)
-      var conv3 = false
-      var conv4 = false
-      val s3 = peel(spark, e0, 3, Depth3) { (r, c) => lastRounds3 = r; conv3 = c }
-      val s4 = peel(spark, s3, 4, Depth4) { (r, c) => lastRounds4 = r; conv4 = c }
-      lastConverged = conv3 && conv4
-      import org.apache.spark.sql.GraftColumnBridge
-      // an empty graph's peel is the identity (loop never runs): s3/s4
-      // ARE e0 then, and freeing it would strand the result's blocks
-      if ((s3 ne e0) && (s4 ne e0))
-        GraftColumnBridge.checkpointRdd(e0).foreach(_.unpersist(false))
+        .repartition(col("a")))
+      loop.input(n0)
+      val (s3, n3) = peel(loop, "peel3", e0, n0, 3, Depth3)
+      val (s4, _) = peel(loop, "peel4", s3, n3, 4, Depth4)
+      // both survivor sets back the lazy result
+      loop.keep(s3, s4)
       s3.join(s4.withColumn("t4", lit(true)), Seq("a", "b"), "left")
         .select(col("a").as("src"), col("b").as("dst"),
           when(col("t4").isNotNull, 4L).otherwise(3L).as("trussness"))
     }
+
+  /** This session's latest [[decompose]] run: (k=3 peel rounds, k=4 peel
+    * rounds, whether both peels reached their fixpoints). */
+  private[graft] def convergence(spark: SparkSession): (Int, Int, Boolean) = {
+    val peels = Seq("peel3", "peel4").map(p => Superstep.stats(spark, s"truss.$p"))
+    (peels(0).fold(0)(_.rounds), peels(1).fold(0)(_.rounds),
+      peels.flatten.forall(_.converged))
+  }
 
   // ---- registry entry ---------------------------------------------------
 
@@ -161,9 +141,10 @@ object Truss {
     (s, d) => {
       val out = decompose(s, graft.graph.CitationGraph.edges(s, d))
         .orderBy(col("src"), col("dst"))
-      require(lastConverged,
+      val (rounds3, rounds4, converged) = convergence(s)
+      require(converged,
         s"g_truss_decomp did NOT reach its fixpoints within " +
-          s"($Depth3, $Depth4) rounds (ran $lastRounds3, $lastRounds4) — " +
+          s"($Depth3, $Depth4) rounds (ran $rounds3, $rounds4) — " +
           "raise Truss.Depth3/Depth4 to at least the convergence rounds")
       out
     })

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 import graft.Tables
-import graft.analytics.CheckpointRegistry
+import graft.analytics.Superstep
 import graft.functions.GraftFunctions.array_dot_long
 import graft.registry.Q
 
@@ -56,61 +56,57 @@ object Coreset {
     * of the chosen point to the previously-selected set, monotone
     * non-increasing); the seed's radius is -1 (no prior set). Stops
     * early when fewer than k distinct vectors exist. */
-  def kcenter(spark: SparkSession, emb: DataFrame, k: Int = K): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
-    def ckpt(df: DataFrame): DataFrame = df.localCheckpoint(true)
-    def free(df: DataFrame): Unit =
-      GraftColumnBridge.checkpointRdd(df).foreach(_.unpersist(false))
-
-    val base = fixedPoint(emb)
-    val seed = base.agg(min(col("vec_id")).as("cid"))
-    // fused checkpoint+count (ckptCounted): the emptiness probe rides
-    // the materialization job instead of a second cached scan
-    val (seedRow, nSeed, _) = GraftColumnBridge.ckptCounted(
-      base.join(broadcast(seed), col("vec_id") === col("cid"))
-        .select(col("cid"), col("q").as("cq"), col("l2").as("cl2"),
-          lit(-1L).as("radius")))
-    var selected = List(seedRow.select(lit(0L).as("rnd"),
-      col("cid").as("vec_id"), col("radius")))
-
-    // state: one row per vector; mindist = exact d² to the closest
-    // selected center so far
-    var state = ckpt(base.crossJoin(broadcast(seedRow))
-      .select(col("vec_id"), col("q"), col("l2"),
-        (col("l2") + col("cl2")
-          - lit(2L) * array_dot_long(col("q"), col("cq"))).as("mindist"),
-        (col("vec_id") === col("cid")).as("sel")))
-
-    var r = 1
-    var exhausted = nSeed == 0L
-    while (r < k && !exhausted) {
-      val cand = state.filter(!col("sel"))
-      val maxd = cand.agg(max(col("mindist")).as("maxd"))
-      val pick = cand.join(broadcast(maxd), col("mindist") === col("maxd"))
-        .agg(min(col("vec_id")).as("cid"), max(col("maxd")).as("radius"))
-      val (centerRow, nCenter, _) = GraftColumnBridge.ckptCounted(
-        state.join(broadcast(pick), col("vec_id") === col("cid"))
+  def kcenter(spark: SparkSession, emb: DataFrame, k: Int = K): DataFrame =
+    // every join is against a broadcast 1-row center and every aggregate
+    // is global, so no keyed shuffle depends on the partition count
+    Superstep.run(spark, "coreset", rows = 0L) { loop =>
+      val base = fixedPoint(emb)
+      val seed = base.agg(min(col("vec_id")).as("cid"))
+      val (seedRow, nSeed, _) = loop.ckpt(
+        base.join(broadcast(seed), col("vec_id") === col("cid"))
           .select(col("cid"), col("q").as("cq"), col("l2").as("cl2"),
-            col("radius")))
-      if (nCenter == 0L) { exhausted = true; free(centerRow) }
-      else {
-        selected ::= centerRow.select(lit(r.toLong).as("rnd"),
-          col("cid").as("vec_id"), col("radius"))
-        val next = ckpt(state.crossJoin(broadcast(centerRow))
-          .select(col("vec_id"), col("q"), col("l2"),
-            least(col("mindist"),
-              col("l2") + col("cl2")
-                - lit(2L) * array_dot_long(col("q"), col("cq"))).as("mindist"),
-            (col("sel") || col("vec_id") === col("cid")).as("sel")))
-        free(state); state = next
-        CheckpointRegistry.trackFinal(spark, centerRow)
+            lit(-1L).as("radius")))
+      loop.keep(seedRow)
+      var selected = List(seedRow.select(lit(0L).as("rnd"),
+        col("cid").as("vec_id"), col("radius")))
+
+      // state: one row per vector; mindist = exact d² to the closest
+      // selected center so far
+      var (state, _, _) = loop.ckpt(base.crossJoin(broadcast(seedRow))
+        .select(col("vec_id"), col("q"), col("l2"),
+          (col("l2") + col("cl2")
+            - lit(2L) * array_dot_long(col("q"), col("cq"))).as("mindist"),
+          (col("vec_id") === col("cid")).as("sel")))
+
+      var r = 1
+      var exhausted = nSeed == 0L
+      while (r < k && !exhausted) {
+        val cand = state.filter(!col("sel"))
+        val maxd = cand.agg(max(col("mindist")).as("maxd"))
+        val pick = cand.join(broadcast(maxd), col("mindist") === col("maxd"))
+          .agg(min(col("vec_id")).as("cid"), max(col("maxd")).as("radius"))
+        val (centerRow, nCenter, _) = loop.step(
+          state.join(broadcast(pick), col("vec_id") === col("cid"))
+            .select(col("cid"), col("q").as("cq"), col("l2").as("cl2"),
+              col("radius")))
+        if (nCenter == 0L) exhausted = true
+        else {
+          loop.keep(centerRow)
+          selected ::= centerRow.select(lit(r.toLong).as("rnd"),
+            col("cid").as("vec_id"), col("radius"))
+          val (next, _, _) = loop.ckpt(state.crossJoin(broadcast(centerRow))
+            .select(col("vec_id"), col("q"), col("l2"),
+              least(col("mindist"),
+                col("l2") + col("cl2")
+                  - lit(2L) * array_dot_long(col("q"), col("cq"))).as("mindist"),
+              (col("sel") || col("vec_id") === col("cid")).as("sel")))
+          loop.free(state)
+          state = next
+        }
+        r += 1
       }
-      r += 1
+      selected.reverse.reduce(_ union _)
     }
-    CheckpointRegistry.trackFinal(spark, seedRow)
-    CheckpointRegistry.trackFinal(spark, state)
-    selected.reverse.reduce(_ union _)
-  }
 
   // ---- registry entry ---------------------------------------------------
 

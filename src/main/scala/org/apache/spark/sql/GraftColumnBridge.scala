@@ -53,24 +53,9 @@ object GraftColumnBridge {
       ds.queryExecution.toRdd, ds.schema)
   }
 
-  /** Row count of a localCheckpoint-backed frame via its MATERIALIZED
-    * RDD: one cached-scan job — no re-analysis, no partial/final
-    * aggregate pair, no exchange. The superstep loops call a
-    * convergence count every round; `Dataset.count()` plans a fresh
-    * aggregate each time (measured ~100-140 ms per call on the bench
-    * host vs ~30 ms for the raw RDD count — graft.SchedProbe,
-    * OPTIMIZATION_r13.md §Scheduler). Falls back to `Dataset.count()`
-    * when the frame is not checkpoint-backed, so callers can use it
-    * unconditionally on loop state. */
-  def fastCount(df: DataFrame): Long =
-    analyzed(df) match {
-      case lr: execution.LogicalRDD => lr.rdd.count()
-      case _ => df.count()
-    }
-
   /** Exact row count, memoized per (session, canonical plan) — for the
-    * superstep loops' partition-sizing count (LoopConf.pinned): every
-    * loop query counted its raw edge frame on entry, a full scan +
+    * superstep loops' partition-sizing count (analytics.Superstep.run):
+    * every loop query counted its raw edge frame on entry, a full scan +
     * aggregate whose value is identical across the ~25 loop queries
     * reading the same frame in one session. Checkpoint-backed frames
     * short-circuit to the materialized RDD (no memo needed); everything
@@ -119,27 +104,35 @@ object GraftColumnBridge {
         }
     }.mkString(";")
 
+  /** What [[ckptCounted]] folds over its stat column. */
+  sealed trait Fold
+  /** Rows whose BOOLEAN column is true; NULL counts as false, matching
+    * `filter(col)`. */
+  case object CountTrue extends Fold
+  /** Sum of a LONG column; NULL adds nothing. */
+  case object Sum extends Fold
+  /** Max of a LONG column; Long.MinValue when it has no non-NULL value. */
+  case object Max extends Fold
+
   /** Lazily localCheckpoint `df`, then materialize it with ONE job that
-    * simultaneously counts its rows and (when `boolCol` is non-null) the
-    * rows whose BOOLEAN `boolCol` is true — fusing the eager-checkpoint
-    * materialization job with the superstep loops' convergence-count job
-    * (previously two scheduler round-trips per loop step: the eager
-    * `localCheckpoint(true)` runs an internal count it throws away, then
-    * fastCount/countTrue runs a second cached-scan job; on the bench
-    * host each job round-trip is ~30 ms — SchedProbe, guide §1.2).
+    * also counts its rows and folds `statCol` (when non-null) per
+    * partition: the superstep loops' convergence count rides the
+    * materialization instead of costing a second scheduler round-trip
+    * (~30 ms each on the bench host, SchedProbe).
     *
-    * Counts are returned from `runJob` per partition (exactly-once per
-    * successful task — no accumulator retry double-count), and the job
-    * both caches the local-checkpoint blocks and truncates lineage
-    * exactly as the eager path does (SparkContext.runJob ends with
-    * rdd.doCheckpoint(), the same hook `count()` uses). NULL counts as
-    * false, matching `filter(col)`. */
-  def ckptCounted(df: DataFrame, boolCol: String = null): (DataFrame, Long, Long) = {
+    * Per-partition results come back from `runJob` (exactly once per
+    * successful task, unlike an accumulator), and the job caches the
+    * checkpoint blocks and truncates lineage as the eager path does
+    * (SparkContext.runJob ends with rdd.doCheckpoint()). Returns
+    * (checkpoint, rows, stat). */
+  def ckptCounted(df: DataFrame, statCol: String = null,
+      fold: Fold = CountTrue): (DataFrame, Long, Long) = {
     val c = df.localCheckpoint(false)
-    val idx = Option(boolCol).map { n =>
+    val idx = Option(statCol).map { n =>
+      val want = if (fold == CountTrue) types.BooleanType else types.LongType
       val f = c.schema(n)
-      require(f.dataType == types.BooleanType,
-        s"ckptCounted: column $n is ${f.dataType}, expected BooleanType")
+      require(f.dataType == want,
+        s"ckptCounted: column $n is ${f.dataType}, expected $want")
       c.schema.fieldIndex(n)
     }.getOrElse(-1)
     val rdd = analyzed(c) match {
@@ -149,78 +142,24 @@ object GraftColumnBridge {
       case p => throw new IllegalStateException(
         s"localCheckpoint did not plan a LogicalRDD: ${p.getClass.getName}")
     }
-    val counts = c.sparkSession.sparkContext.runJob(rdd,
-      (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
-        var n = 0L
-        var t = 0L
-        if (idx >= 0) {
-          while (it.hasNext) {
-            val r = it.next(); n += 1L
-            if (!r.isNullAt(idx) && r.getBoolean(idx)) t += 1L
-          }
-        } else {
-          while (it.hasNext) { it.next(); n += 1L }
-        }
-        (n, t)
-      })
-    var n = 0L
-    var t = 0L
-    counts.foreach { p => n += p._1; t += p._2 }
-    (c, n, t)
-  }
-
-  /** ckptCounted's sibling for loops whose convergence statistic is a
-    * SUM of a LONG column rather than a flag count (HyperANF's estimate
-    * total): one job materializes the lazily-localCheckpoint'ed frame
-    * and returns (frame, rowCount, sum(longCol)) — NULL sums as 0. */
-  def ckptSummed(df: DataFrame, longCol: String): (DataFrame, Long, Long) = {
-    val c = df.localCheckpoint(false)
-    val f = c.schema(longCol)
-    require(f.dataType == types.LongType,
-      s"ckptSummed: column $longCol is ${f.dataType}, expected LongType")
-    val idx = c.schema.fieldIndex(longCol)
-    val rdd = analyzed(c) match {
-      case lr: execution.LogicalRDD =>
-        lr.rdd.asInstanceOf[org.apache.spark.rdd.RDD[
-          org.apache.spark.sql.catalyst.InternalRow]]
-      case p => throw new IllegalStateException(
-        s"localCheckpoint did not plan a LogicalRDD: ${p.getClass.getName}")
-    }
+    val zero = if (fold == Max) Long.MinValue else 0L
     val parts = c.sparkSession.sparkContext.runJob(rdd,
       (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
         var n = 0L
-        var s = 0L
+        var s = zero
         while (it.hasNext) {
           val r = it.next(); n += 1L
-          if (!r.isNullAt(idx)) s += r.getLong(idx)
+          if (idx >= 0 && !r.isNullAt(idx)) fold match {
+            case CountTrue => if (r.getBoolean(idx)) s += 1L
+            case Sum => s += r.getLong(idx)
+            case Max => s = math.max(s, r.getLong(idx))
+          }
         }
         (n, s)
       })
-    var n = 0L
-    var s = 0L
-    parts.foreach { p => n += p._1; s += p._2 }
+    val n = parts.map(_._1).sum
+    val s = if (fold == Max) parts.map(_._2).foldLeft(zero)(math.max)
+      else parts.map(_._2).sum
     (c, n, s)
-  }
-
-  /** Count rows of a checkpoint-backed frame whose BOOLEAN column
-    * `name` is true, in one cached-scan job (the loop-body
-    * `filter(col).count()` convergence idiom re-plans a filter +
-    * aggregate every round; this reads the materialized rows
-    * directly). NULL counts as false, matching `filter(col)`. */
-  def countTrue(df: DataFrame, name: String): Long = {
-    require(df.schema(name).dataType == types.BooleanType,
-      s"countTrue: column $name is ${df.schema(name).dataType}, expected BooleanType")
-    val idx = df.schema.fieldIndex(name)
-    analyzed(df) match {
-      case lr: execution.LogicalRDD =>
-        lr.rdd.asInstanceOf[org.apache.spark.rdd.RDD[
-          org.apache.spark.sql.catalyst.InternalRow]]
-          .mapPartitions(
-            it => Iterator.single(
-              it.count(r => !r.isNullAt(idx) && r.getBoolean(idx)).toLong),
-            preservesPartitioning = true)
-          .fold(0L)(_ + _)
-      case _ => df.filter(df.col(name)).count()
-    }
   }
 }

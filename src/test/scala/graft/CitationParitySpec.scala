@@ -89,7 +89,7 @@ class CitationParitySpec extends SparkSpec {
     val edges = CitationAnalytics.snapshotEdges(citations, published, 1998)
     val df = ConnectedComponents.components(edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val gx = ConnectedComponents.componentsGraphX(edges)
+    val gx = graft.graph.GraphXComponents.components(edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(df === gx)
   }

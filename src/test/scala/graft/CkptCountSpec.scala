@@ -22,8 +22,7 @@ class CkptCountSpec extends SparkSpec {
     assert(n === df.count())
     assert(t === df.filter(col("chg")).count())
     assert(n === 5L && t === 3L)
-    // checkpoint-backed: fastCount takes the LogicalRDD path and the
-    // contents round-trip unchanged
+    // checkpoint-backed, and the contents round-trip unchanged
     assert(GraftColumnBridge.checkpointRdd(c).nonEmpty)
     assert(c.collect().map(_.getLong(0)).sorted.toSeq === Seq(1L, 2L, 3L, 4L, 5L))
     GraftColumnBridge.checkpointRdd(c).foreach(_.unpersist(false))
@@ -46,13 +45,19 @@ class CkptCountSpec extends SparkSpec {
     assert(e.getMessage.contains("BooleanType"))
   }
 
-  test("countTrue rejects a non-boolean column") {
-    val df = spark.range(3).toDF("id").localCheckpoint(true)
+  test("ckptCounted sums and maxes a LONG stat column, NULL skipped") {
+    import spark.implicits._
+    val df = Seq(Some(4L), None, Some(9L), Some(-2L)).toDF("v").repartition(3)
+    val (c, n, sum) = GraftColumnBridge.ckptCounted(df, "v", GraftColumnBridge.Sum)
+    assert(n === 4L && sum === 11L)
+    val (c2, _, max) = GraftColumnBridge.ckptCounted(df, "v", GraftColumnBridge.Max)
+    assert(max === 9L)
     val e = intercept[IllegalArgumentException] {
-      GraftColumnBridge.countTrue(df, "id")
+      GraftColumnBridge.ckptCounted(spark.range(2).toDF("id")
+        .withColumn("b", lit(true)), "b", GraftColumnBridge.Sum)
     }
-    assert(e.getMessage.contains("BooleanType"))
-    GraftColumnBridge.checkpointRdd(df).foreach(_.unpersist(false))
+    assert(e.getMessage.contains("LongType"))
+    Seq(c, c2).foreach(GraftColumnBridge.checkpointRdd(_).foreach(_.unpersist(false)))
   }
 
   test("memoCount keys on the scan LOCATION, not just the plan shape") {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.analytics.Condensation
+import graft.analytics.{Condensation, Superstep}
 
 /** Condensation + topological depth: hand-built DAG-of-cycles cases,
   * acyclicity of the contraction, and the depth-fixpoint gate. */
@@ -49,9 +49,9 @@ class CondensationSpec extends SparkSpec {
     val nVerts = graft.analytics.Scc.scc(spark, g).count()
     assert(out.map(_._3).sum === nVerts)
     assert(out.exists(_._2 === 0L))
+    val rounds = Superstep.stats(spark, "condensation").get.rounds
     info(s"sf0.001: ${out.length} components, max depth " +
-      s"${out.map(_._2).max}, depth-fixpoint rounds=" +
-      s"${Condensation.lastDepthRounds}")
-    assert(Condensation.lastDepthRounds <= Condensation.DepthUnroll)
+      s"${out.map(_._2).max}, depth-fixpoint rounds=$rounds")
+    assert(rounds <= Condensation.DepthUnroll)
   }
 }

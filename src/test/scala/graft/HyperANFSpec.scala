@@ -1,6 +1,6 @@
 package graft
 
-import graft.analytics.{HopPlot, HyperANF}
+import graft.analytics.{HopPlot, HyperANF, Superstep}
 import graft.graph.CitationGraph
 
 /** HyperANF vs the exact all-pairs BFS: same hop distances, pair counts
@@ -53,7 +53,7 @@ class HyperANFSpec extends SparkSpec {
     // no exchange — only the groupBy(m) message shuffle remains
     val edges = CitationGraph.hopEdges(spark, sf())
     HyperANF.approxHopPlotRows(spark, edges, maxD = 2)
-    assert(HyperANF.lastSuperstepExchanges === 1,
-      s"expected 1 exchange per superstep, saw ${HyperANF.lastSuperstepExchanges}")
+    val exchanges = Superstep.stats(spark, "hyperanf").get.exchanges
+    assert(exchanges === 1, s"expected 1 exchange per superstep, saw $exchanges")
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.analytics.{ConnectedComponents, IncrementalComponents}
+import graft.analytics.{ConnectedComponents, IncrementalComponents, Superstep}
 
 /** Incremental CC contracts: the batch merge equals the full recompute
   * on every structural case an insertion can produce (bridge two
@@ -16,6 +16,10 @@ class IncrementalComponentsSpec extends SparkSpec {
     import spark.implicits._
     pairs.toDF("src", "dst")
   }
+
+  /** The latest merge's record: input = label edges, stat = touched. */
+  private def merge: Superstep.LoopStats =
+    Superstep.stats(spark, "components_incremental").get
 
   private def assignmentMap(df: DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -49,8 +53,8 @@ class IncrementalComponentsSpec extends SparkSpec {
     val (m, f) = mergedVsRecompute(
       Seq((1L, 2L), (2L, 3L)), Seq((1L, 3L)))
     assert(m === f)
-    assert(IncrementalComponents.lastLabelEdges === 0L)
-    assert(IncrementalComponents.lastTouched === 0L)
+    assert(merge.input === 0L) // label edges
+    assert(merge.stats.head === 0L) // touched components
   }
 
   test("chained merges: one batch collapses three standing components transitively") {
@@ -60,7 +64,7 @@ class IncrementalComponentsSpec extends SparkSpec {
     assert(m === f)
     assert(Set(10L, 11L, 20L, 21L).forall(m(_) == 1L))
     // exactly the two absorbed components are touched
-    assert(IncrementalComponents.lastTouched === 2L)
+    assert(merge.stats.head === 2L)
   }
 
   test("contracted graph is batch-sized: label edges never exceed the batch") {
@@ -68,7 +72,7 @@ class IncrementalComponentsSpec extends SparkSpec {
     val batch = Seq((1L, 2L), (5L, 6L), (9L, 10L))
     val (m, f) = mergedVsRecompute(standing, batch)
     assert(m === f)
-    assert(IncrementalComponents.lastLabelEdges <= batch.size.toLong)
+    assert(merge.input <= batch.size.toLong)
   }
 
   test("registered query equals g_components on the union graph at sf0.001") {

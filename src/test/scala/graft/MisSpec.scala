@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.analytics.Mis
+import graft.analytics.{Mis, Superstep}
 import graft.graph.CitationGraph
 
 /** Luby-MIS contracts: the result is an independent set (no edge inside
@@ -43,7 +43,7 @@ class MisSpec extends SparkSpec {
     val a = Mis.mis(spark, CitationGraph.edges(spark, sf()))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     graft.analytics.CheckpointRegistry.releaseAll(spark)
-    val r1 = Mis.lastConvergenceRound
+    val r1 = Superstep.stats(spark, "mis").get.rounds
     val b = Mis.mis(spark, CitationGraph.edges(spark, sf()))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     graft.analytics.CheckpointRegistry.releaseAll(spark)
@@ -55,7 +55,7 @@ class MisSpec extends SparkSpec {
   test("sf0.01: properties hold at the gate scale; rounds reported") {
     val d = sf("0.01")
     val m = Mis.mis(spark, CitationGraph.edges(spark, d)).select(col("id")).cache()
-    val rounds = Mis.lastConvergenceRound
+    val rounds = Superstep.stats(spark, "mis").get.rounds
     val e = bidir(d)
     val inside = e
       .join(m.select(col("id").as("src")), Seq("src"), "left_semi")

@@ -64,9 +64,9 @@ class MstSpec extends SparkSpec {
       forest("ou") === canon("u") && forest("ov") === canon("v") &&
         forest("w") === canon("w"), "left_anti")
     assert(bad.count() === 0)
-    info(s"sf0.001: $nEdges MST edges, rounds=${Mst.lastRounds} " +
-      s"jumpsOk=${Mst.lastJumpsConverged}")
-    assert(Mst.lastRounds <= Mst.RoundsUnroll)
-    assert(Mst.lastJumpsConverged)
+    val (rounds, jumpsOk) = Mst.convergence(spark)
+    info(s"sf0.001: $nEdges MST edges, rounds=$rounds jumpsOk=$jumpsOk")
+    assert(rounds <= Mst.RoundsUnroll)
+    assert(jumpsOk)
   }
 }

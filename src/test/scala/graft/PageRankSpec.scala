@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.analytics.PageRank
+import graft.analytics.{PageRank, Superstep}
 import graft.graph.CitationGraph
 
 /** PageRank: exact equality with an in-memory reference of the same
@@ -64,8 +64,8 @@ class PageRankSpec extends SparkSpec {
 
   test("iteration plan has exactly one exchange: the contribution groupBy") {
     PageRank.pageRank(spark, CitationGraph.edges(spark, sf()), iters = 2)
-    assert(PageRank.lastIterationExchanges === 1,
-      s"expected 1 exchange per iteration, saw ${PageRank.lastIterationExchanges}")
+    val exchanges = Superstep.stats(spark, "pagerank").get.exchanges
+    assert(exchanges === 1, s"expected 1 exchange per iteration, saw $exchanges")
   }
 
   test("personalized: unreachable vertices hold rank exactly 0") {

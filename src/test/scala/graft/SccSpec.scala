@@ -54,12 +54,13 @@ class SccSpec extends SparkSpec {
       assert(m(sid) === sid, s"scc label $sid is not its own label")
       assert(members.nonEmpty)
     }
+    val (outer, fwd, bwd) = Scc.depths(spark)
     info(s"sf0.001: ${m.size} vertices, ${byScc.size} SCCs, " +
       s"largest ${byScc.values.map(_.size).max}; rounds: outer=" +
-      s"${Scc.lastOuterRounds} fwd=${Scc.lastMaxFwdRounds} bwd=${Scc.lastMaxBwdRounds}")
-    assert(Scc.lastOuterRounds <= Scc.OuterDepth)
-    assert(Scc.lastMaxFwdRounds <= Scc.FwdDepth)
-    assert(Scc.lastMaxBwdRounds <= Scc.BwdDepth)
+      s"$outer fwd=$fwd bwd=$bwd")
+    assert(outer <= Scc.OuterDepth)
+    assert(fwd <= Scc.FwdDepth)
+    assert(bwd <= Scc.BwdDepth)
   }
 
   test("deterministic across layouts") {

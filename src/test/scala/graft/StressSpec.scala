@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.analytics.Stress
+import graft.analytics.{Stress, Superstep}
 
 /** Sampled stress centrality: hand-verifiable path counts on toy
   * graphs, the bridge-dominates law, and overflow-gate sanity. */
@@ -60,8 +60,11 @@ class StressSpec extends SparkSpec {
     val out = Stress.stress(spark, g)
     assert(out.filter(col("stress") <= 0).count() === 0)
     assert(out.count() > 0)
-    info(s"sf0.001: maxSigma=${Stress.lastMaxSigma} maxTail=${Stress.lastMaxTail}")
-    assert(Stress.lastMaxSigma < (1L << 31))
-    assert(Stress.lastMaxTail < (1L << 31))
+    // the forward loop's per-round stat is max(sig), the backward's max(T)
+    val maxSigma = Superstep.stats(spark, "stress.forward").get.stats.last
+    val maxTail = Superstep.stats(spark, "stress").get.stats.last
+    info(s"sf0.001: maxSigma=$maxSigma maxTail=$maxTail")
+    assert(maxSigma < (1L << 31))
+    assert(maxTail < (1L << 31))
   }
 }

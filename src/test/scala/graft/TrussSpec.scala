@@ -47,8 +47,9 @@ class TrussSpec extends SparkSpec {
     val a = Truss.trussQ.run(spark, sf()).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     graft.analytics.CheckpointRegistry.releaseAll(spark)
-    assert(Truss.lastConverged)
-    info(s"rounds: k3=${Truss.lastRounds3}, k4-from-3truss=${Truss.lastRounds4}")
+    val (rounds3, rounds4, converged) = Truss.convergence(spark)
+    assert(converged)
+    info(s"rounds: k3=$rounds3, k4-from-3truss=$rounds4")
     val b = Truss.trussQ.run(spark, sf()).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     graft.analytics.CheckpointRegistry.releaseAll(spark)
