@@ -316,46 +316,10 @@ object Bench {
     val hostMemAvailGb = memInfoGb("MemAvailable")
     val hostCachedGb = memInfoGb("Cached")
     val hostSpin0 = spinMs()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // JIT/codegen warmup so the first measured query isn't penalized.
-    // The superstep loop is warmed too, on sf0.001: PrProfile measured
-    // g_pagerank at sf0.1 as 10.0s cold / 3.7s warm IN THE SAME JVM —
-    // ~6.3s is one-time codegen/JIT of the loop's generated classes,
-    // and without this warmup that tax lands on whichever superstep
-    // query runs first in sorted order, moving round-over-round numbers
-    // for reasons that have nothing to do with the operator (the r4→r6
-    // "g_pagerank regression", VERDICT r6 #1).
-    try SparkEntry.queries("q1_agg")(spark, sfDir).count()
-    catch { case _: Throwable => () }
-    try {
-      graft.analytics.PageRank.pageRank(spark,
-        graft.graph.CitationGraph.edges(spark, "/root/testdata/sf0.001"),
-        iters = 2).count()
-      graft.analytics.CheckpointRegistry.releaseAll(spark)
-    } catch { case _: Throwable => () }
-    // ... and the dedup family's operator codepaths, for the same reason
-    // (FamilyProbe: build 9.8s first pass vs 6.2s repeatable — the delta
-    // is codegen of the sketch/join/CC operators, not build work); the
-    // tiny-sf caches are released immediately so _setup_dedup_family
-    // still measures the real sf build from zero
-    try {
-      graft.pipeline.PipelineQueries.warmSharedFamily(spark, "/root/testdata/sf0.001")
-      graft.pipeline.PipelineQueries.releaseShared(spark)
-      graft.analytics.CheckpointRegistry.releaseAll(spark)
-    } catch { case _: Throwable => () }
-    // ... and the k-means pyramid (QProfile: 7.9s cold / 2.3s warm at
-    // sf0.1 — the delta is codegen of the Lloyd-pass generated classes)
-    try graft.pipeline.SemanticCluster.clusters(spark, "/root/testdata/sf0.001").count()
-    catch { case _: Throwable => () }
+    // the warm-up releases its caches: _setup_dedup_family still times a build
+    Sessions.warm(spark, sfDir)
     // scheduler round-trip probe, post-warmup (VERDICT r9 #2) — see
     // jobRtMs; measured again after the run so "the scheduler got slow
     // underneath us" is visible as a rising pair, like spin_ms
@@ -833,9 +797,13 @@ object Bench {
       s"""{"streaming_state_sec":${sec3(probeSample.sec)},"ok":$probeOk}"""
     // Full per-query detail (min + every rep + ok flags) goes to the file.
     val fullJson = s"""{"metric":"total","value":${sec3(total)},"unit":"sec","queries":${qmap(mins)},"runs":$runsJson,"host_runs":$hostRunsJson,"outliers":$outliersJson,"drift":$driftJson,"tainted":$taintedJson,"probe":$probeJson,"cold_carrier":$coldCarrier,"contract":$contract,"host":$hostJson,"value_first":${sec3(totalFirst)},"ok":$oks,"n_queries":${results.size},"n_ok":$nOk,"sf":"$sfDir"}"""
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_LOCAL.json")
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), fullJson + "\n")
-    catch { case _: Throwable => () }
+    val outPath = java.nio.file.Paths.get(
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")).toAbsolutePath
+    // a failed write warns on stderr: stdout's last line stays the JSON
+    def write(path: java.nio.file.Path, text: String): Unit =
+      try java.nio.file.Files.writeString(path, text + "\n")
+      catch { case e: Throwable => System.err.println(s"[bench] could not write $path: $e") }
+    write(outPath, fullJson)
     // The driver captures only the TAIL of sbt stdout (~2 KB window:
     // BENCH_r03's "tail" field cut the head of our 5.9 KB line, hence
     // three rounds of parsed:null). The stdout line must therefore be
@@ -868,9 +836,7 @@ object Bench {
     // WRITE the identical line to a sibling file of BENCH_LOCAL.json so
     // a tail-capture truncation can't erase a round's numbers again.
     // Additions-only: the printed contract is unchanged.
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_SUMMARY.json"), json + "\n")
-    catch { case _: Throwable => () }
+    write(outPath.resolveSibling("BENCH_SUMMARY.json"), json)
     println(json)
     System.out.flush()
   }

@@ -24,17 +24,7 @@ object Main {
       sys.exit(2)
     }
     val Array(task, inDir, outDir) = args.take(3)
-    val builder = SparkSession.builder()
-      .appName("graft")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    // spark-submit injects spark.master; default to local[] otherwise
-    val spark = (if (sys.props.contains("spark.master")) builder
-      else builder
-        .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")))
-      .getOrCreate()
+    val spark = Sessions.builder().appName("graft").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     runTask(spark, task, inDir, outDir, args.drop(3).map(_.toInt).toSeq)

@@ -1,14 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-trend probe (VERDICT r6 missing #2): time the headline set at
   * two scale factors in one harness shape and compare slopes. Usage:
   *
   *   runMain graft.ScaleTrend <sfDir> [reps]
   *
-  * Runs the same warmup discipline as Bench (superstep + family
-  * codepaths on sf0.001), then `_setup_dedup_family` once and each
+  * Runs Bench's warm-up ([[Sessions.warm]]), then `_setup_dedup_family` once and each
   * slope query `reps` times (default 2), printing per-rep seconds. The
   * slope set is the headline set minus the requireBounded exact
   * baselines (their O(n²) cost at 10x is by-design unbounded — the
@@ -185,27 +182,9 @@ object ScaleTrend {
     // trailing names restrict the run (builder-side spot trends); the
     // family setup still runs iff any family query is selected
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    try SparkEntry.queries("q1_agg")(spark, sfDir).count()
-    catch { case _: Throwable => () }
-    try {
-      graft.analytics.PageRank.pageRank(spark,
-        graft.graph.CitationGraph.edges(spark, "/root/testdata/sf0.001"),
-        iters = 2).count()
-      graft.analytics.CheckpointRegistry.releaseAll(spark)
-      graft.pipeline.PipelineQueries.warmSharedFamily(spark, "/root/testdata/sf0.001")
-      graft.pipeline.PipelineQueries.releaseShared(spark)
-      graft.analytics.CheckpointRegistry.releaseAll(spark)
-    } catch { case _: Throwable => () }
+    Sessions.warm(spark, sfDir)
 
     def time(name: String)(body: => Unit): Unit = {
       val t0 = System.nanoTime()

@@ -124,24 +124,9 @@ object Slopes {
     val dirB = if (args.length > 2) args(2) else "/tmp/sf1"
     val reps = if (args.length > 3) args(3).toInt else 2
     val only = args.drop(4).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // ScaleTrend's warmup discipline: codegen + superstep codepaths once
-    try {
-      SparkEntry.queries("q1_agg")(spark, dirA).count()
-      graft.analytics.PageRank.pageRank(spark,
-        graft.graph.CitationGraph.edges(spark, "/root/testdata/sf0.001"),
-        iters = 2).count()
-      graft.analytics.CheckpointRegistry.releaseAll(spark)
-    } catch { case _: Throwable => () }
+    Sessions.warm(spark, dirA)
 
     val names = ScaleTrend.SlopeSet.filter(n => only.isEmpty || only(n))
     def runDir(d: String): Map[String, Double] = {

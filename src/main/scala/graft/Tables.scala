@@ -21,8 +21,7 @@ object Tables {
     * its midpoint) — so every scan here plans exactly one NON-EMPTY task
     * no matter the core count, and any query whose cost is per-row
     * kernel work above the scan (codec decode, sketches, text kernels,
-    * vector math) ran 1-of-N threads in stage 1. Measured before the
-    * change (QProfile, sf0.1, 32 cores): see OPTIMIZATION_r13.md.
+    * vector math) ran 1-of-N threads in stage 1 (OPTIMIZATION_r13.md).
     *
     * When the WHOLE input is provably too small to fill the cluster even
     * at best-case split sizing (fileBytes < maxPartitionBytes ×
@@ -45,7 +44,7 @@ object Tables {
     * green after the change at sf0.001 and sf0.01.
     */
   def fanout(df: DataFrame): DataFrame = {
-    // A/B kill-switch for FanoutAb measurement only (on by default)
+    // A/B kill-switch (`graft.Profile ab <sf> graft.fanout …`), on by default
     if (!sys.props.getOrElse("graft.fanout", "true").toBoolean) return df
     val spark = df.sparkSession
     val cores = spark.sparkContext.defaultParallelism
@@ -88,7 +87,7 @@ object Tables {
       case _ => raw
     }
   }
-  /** documents does NOT fan out at the accessor: the FanoutAb sweep
+  /** documents does NOT fan out at the accessor: the A/B sweep
     * over all 130 consumers (OPTIMIZATION_r13.md, interleaved same-JVM
     * A/B at sf0.1) split them 34 winners / 77 losers / 19 neutral —
     * blanket fan-out was net NEGATIVE (-18.3 s of wins vs +29.5 s of
@@ -102,8 +101,8 @@ object Tables {
   def documents(spark: SparkSession, dir: String): DataFrame =
     apply(spark, dir, "documents")
   /** embeddings does NOT fan out: measured 2.5x SLOWER on the vector
-    * lanes (d_coreset_kcenter 3.4s -> 8.4s, QProfile sf0.1) — the table
-    * is 2,000 rows and its consumers are short superstep loops
+    * lanes (d_coreset_kcenter 3.4s -> 8.4s at sf0.1, OPTIMIZATION_r13.md)
+    * — the table is 2,000 rows and its consumers are short superstep loops
     * (k-center, Lloyd, PQ trains) whose per-round frames inherit the
     * partitioning: 32 near-empty tasks per round cost more scheduler
     * round-trips than the per-row vector work saved. The kernel-heavy

@@ -26,7 +26,7 @@ import graft.registry.Q
   * time), with the assignment checkpoint-materialized between them. */
 object Condensation {
 
-  /** Longest-path unroll depth; measured fixpoint (SccProbe prints it):
+  /** Longest-path unroll depth; measured fixpoint (COVERAGE.md):
     * sf0.001/sf0.01 → 1 round (the graph is a single SCC — no condensed
     * edges), sf0.1 → 2 (2 components), sf1 → 2 (20 components across
     * the 10 copies). ~5x headroom. */

@@ -16,8 +16,8 @@ import graft.registry.Q
   * bidirectionalized and hash-partitioned by src; each round is one
   * co-partitioned degree aggregation plus two semi-joins against the
   * survivor set (the dst-side semi is the round's unavoidable exchange
-  * — peeling looks at both endpoints). State is localCheckpoint'ed on a
-  * cadence, superseded frames freed eagerly.
+  * — peeling looks at both endpoints). State is localCheckpoint'ed
+  * every round, superseded frames freed eagerly.
   */
 object KCore {
 
@@ -29,23 +29,11 @@ object KCore {
   val K = 15
   val Rounds = 6
 
-  /** Checkpoint/early-stop-check cadence: peel `ckptEvery` rounds per
-    * materialization. Correct at any value (the peel is deterministic;
-    * convergence detected at a batch boundary is still the fixpoint —
-    * edge count is monotone non-increasing, so equality across a batch
-    * implies no round in it changed anything). MEASURED cold per-JVM at
-    * sf0.1, 12-round fixpoint (CadenceProbe -kcore, 2 reps each):
-    * every=1 7.1/7.3s, every=2 8.3/9.5s, every=3 9.3/9.6s — the
-    * OPPOSITE of PageRank's curve: each peel round references the
-    * survivor set twice (both semi-joins), and the nested re-evaluation
-    * costs more than the per-round materialization saves. Stays 1. */
-  val CkptEvery = 1
-
   /** Peel `rounds` times; `rounds = Int.MaxValue` runs to the fixpoint
     * (true k-core), early-stopping when an entire round removes no edge.
     * Returns surviving (id, deg) with degrees in the FINAL edge set. */
   def kcore(spark: SparkSession, edgesRaw: DataFrame, k: Int = K,
-      rounds: Int = Rounds, ckptEvery: Int = CkptEvery): DataFrame =
+      rounds: Int = Rounds): DataFrame =
     Superstep.run(spark, "kcore",
       org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) { loop =>
       import graft.graph.CitationGraph.bidirectional
@@ -59,23 +47,19 @@ object KCore {
       var nEdges = nE0
       var r = 0
       var changed = true
+      // a checkpoint every round: 7.1-7.3 s at sf0.1, 8.3-9.5 s every 2nd (two semi-joins read e)
       while (r < rounds && changed && nEdges > 0) {
-        val batch = math.min(ckptEvery, rounds - r)
-        var cur = e
-        for (_ <- 1 to batch) {
-          val keep = cur.groupBy(col("src")).agg(count(lit(1)).as("d"))
-            .filter(col("d") >= k)
-            .select(col("src").as("id"))
-          cur = cur
-            .join(keep, cur("src") === keep("id"), "left_semi")
-            .join(keep.select(col("id").as("id2")), cur("dst") === col("id2"), "left_semi")
-        }
-        val (next, nNext, _) = loop.step(cur, advance = batch)
+        val keep = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
+          .filter(col("d") >= k)
+          .select(col("src").as("id"))
+        val (next, nNext, _) = loop.step(e
+          .join(keep, e("src") === keep("id"), "left_semi")
+          .join(keep.select(col("id").as("id2")), e("dst") === col("id2"), "left_semi"))
         changed = nNext != nEdges
         nEdges = nNext
         loop.free(e)
         e = next
-        r += batch
+        r += 1
       }
       if (changed && nEdges > 0) loop.unconverged()
       loop.keep(e)

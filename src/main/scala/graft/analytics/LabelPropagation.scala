@@ -23,16 +23,8 @@ object LabelPropagation {
 
   val Rounds = 3
 
-  /** Rounds per checkpoint. Each round references `lab` ONCE (hist ←
-    * lab⋈e, next ← hist) — the PageRank-shaped curve, where batching
-    * can win, unlike the double-reference k-core/SSSP loops. MEASURED
-    * cold per-JVM at sf0.1 (CadenceProbe -labelprop, 2 reps): every=1
-    * 5.4/5.8s, every=3 5.6/5.3s — a tie at 3 rounds; stays 1 (simplest,
-    * and per-round checkpoints keep lineage flat for deeper runs). */
-  val CkptEvery = 1
-
   def labelProp(spark: SparkSession, edgesRaw: DataFrame,
-      rounds: Int = Rounds, ckptEvery: Int = CkptEvery): DataFrame = {
+      rounds: Int = Rounds): DataFrame = {
     // rounds=0 would return a lazy frame over the edge checkpoint that
     // the loop releases on return — reject it up front
     require(rounds >= 1, s"labelProp needs at least 1 round, got $rounds")
@@ -42,27 +34,20 @@ object LabelPropagation {
         .repartition(col("src")))
       var lab = e.select(col("src").as("id")).distinct()
         .select(col("id"), col("id").as("lab"))
-      var last = lab // latest checkpoint
-      var since = 0
-      for (r <- 1 to rounds) {
+      // a checkpoint every round: 5.4-5.8 s at sf0.1, 5.3-5.6 s every 3rd, flat lineage
+      for (_ <- 1 to rounds) {
         val hist = lab.join(e, col("id") === col("src"))
           .groupBy(col("dst"), col("lab"))
           .agg(count(lit(1)).as("c"))
-        val nextDs = hist
+        val (next, _, _) = loop.step(hist
           .groupBy(col("dst"))
           .agg(max(struct(col("c").as("c"), (-col("lab")).as("nl"))).as("m"))
-          .select(col("dst").as("id"), (-col("m.nl")).as("lab"))
-        since += 1
-        if (since == ckptEvery || r == rounds) {
-          val (next, _, _) = loop.step(nextDs, advance = since)
-          loop.free(last)
-          last = next
-          lab = next
-          since = 0
-        } else lab = nextDs
+          .select(col("dst").as("id"), (-col("m.nl")).as("lab")))
+        loop.free(lab)
+        lab = next
       }
       // the final checkpoint backs the lazy result
-      loop.keep(last)
+      loop.keep(lab)
       lab
     }
   }

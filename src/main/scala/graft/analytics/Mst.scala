@@ -35,7 +35,7 @@ import graft.registry.Q
 object Mst {
 
   /** Outer Borůvka rounds / pointer-jump levels in the unrolled oracle.
-    * Measured (SccProbe prints): sf0.001 → rounds 4, max jumps 4;
+    * Measured (Bench's contract block, g_mst_rounds): sf0.001 → rounds 4, max jumps 4;
     * sf0.01 → 5/4; sf0.1 → 7/4 (rounds grow ~log with components, as
     * the halving argument predicts; jump count stays flat — pointer
     * depth halves per jump, and 2^6 = 64 covers any chain the measured

@@ -33,23 +33,9 @@ object PageRank {
   /** Damping factor 0.85 as an integer percent. */
   val DampPct = 85L
 
-  /** Checkpoint cadence. Round 7 re-measured after two changes that
-    * reshuffled the old curve: (a) the loop joins are shuffle-hash (no
-    * per-round sorts), so batching rounds saves less; (b) the probe and
-    * Bench now warm the superstep codepath on sf0.001 first — PrProfile
-    * showed ~6.3s of every earlier "cold" number was one-time loop
-    * codegen/JIT, which is why round 6's cadence A/B (8.3/7.2/7.4/8.8s
-    * for 1/2/3/5) barely separated: it was measuring the warmup, not
-    * the knob. Warmed cold at sf0.1 per-JVM (CadenceProbe, round 7):
-    * every=1 4.19/4.25s, every=2 4.59s, every=3 5.67s, every=5 6.85s —
-    * a clean monotone curve; with hash joins, deeper nested plans only
-    * add planning+codegen (each extra depth is a NEW generated class).
-    * 1 wins. */
-  val CkptEvery = 1
-
   def pageRank(spark: SparkSession, edgesRaw: DataFrame,
-      iters: Int = 10, ckptEvery: Int = CkptEvery): DataFrame =
-    ranks(spark, edgesRaw, iters, ckptEvery, seedMax = None)
+      iters: Int = 10): DataFrame =
+    ranks(spark, edgesRaw, iters, seedMax = None)
 
   /** Personalized PageRank: teleport mass restarts at the SEED SET
     * (id < seedMax) instead of uniformly — the locality-scoring variant
@@ -61,8 +47,8 @@ object PageRank {
     * vertex a seed it degenerates to pageRank bit-for-bit (asserted in
     * PageRankSpec). */
   def personalizedPageRank(spark: SparkSession, edgesRaw: DataFrame,
-      seedMax: Long, iters: Int = 10, ckptEvery: Int = CkptEvery): DataFrame =
-    ranks(spark, edgesRaw, iters, ckptEvery, seedMax = Some(seedMax))
+      seedMax: Long, iters: Int = 10): DataFrame =
+    ranks(spark, edgesRaw, iters, seedMax = Some(seedMax))
 
   /** Warm-start PageRank: run `iters` rounds of the SAME exact-integer
     * recurrence on `edgesRaw`, but initialize from `init` (id, r) ranks
@@ -78,12 +64,11 @@ object PageRank {
     * negative result, pinned in PageRankSpec so it can't silently rot
     * into a false claim. Per-round cost and plan shape are unchanged. */
   def pageRankWarm(spark: SparkSession, edgesRaw: DataFrame,
-      init: DataFrame, iters: Int, ckptEvery: Int = CkptEvery): DataFrame =
-    ranks(spark, edgesRaw, iters, ckptEvery, seedMax = None,
-      warmFrom = Some(init))
+      init: DataFrame, iters: Int): DataFrame =
+    ranks(spark, edgesRaw, iters, seedMax = None, warmFrom = Some(init))
 
   private def ranks(spark: SparkSession, edgesRaw: DataFrame,
-      iters: Int, ckptEvery: Int, seedMax: Option[Long],
+      iters: Int, seedMax: Option[Long],
       warmFrom: Option[DataFrame] = None): DataFrame =
     Superstep.run(spark, "pagerank",
       org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) { loop =>
@@ -129,9 +114,8 @@ object PageRank {
             v.join(init.select(col("id"), col("r").as("r0")), Seq("id"), "left")
               .select(col("id"), coalesce(col("r0"), lit(Scale / n)).as("r"))
         }
-        var last = r // latest checkpoint
-        var since = 0
-        for (k <- 1 to iters) {
+        // a checkpoint every round: 4.19-4.25 s at sf0.1, 4.59 s every 2nd (deeper codegen)
+        for (_ <- 1 to iters) {
           // shuffle-hash, build side = the vertex-sized frame, on BOTH loop
           // joins: the r6 merge-hint shape re-sorted rank state and the
           // static edge table every iteration; hash builds keep exactly one
@@ -139,20 +123,15 @@ object PageRank {
           val contrib = r.hint("shuffle_hash").join(ed, col("id") === col("src"))
             .groupBy(col("dst"))
             .agg(sum(expr("r div d")).as("contrib"))
-          val nextDs = v.join(contrib.hint("shuffle_hash"), col("id") === col("dst"), "left")
-            .select(col("id"),
-              (baseCol + expr(s"($DampPct * coalesce(contrib, 0L)) div 100")).as("r"))
-          since += 1
-          if (since == ckptEvery || k == iters) {
-            val (next, _, _) = loop.step(nextDs, advance = since)
-            loop.free(last)
-            last = next
-            r = next
-            since = 0
-          } else r = nextDs
+          val (next, _, _) = loop.step(
+            v.join(contrib.hint("shuffle_hash"), col("id") === col("dst"), "left")
+              .select(col("id"),
+                (baseCol + expr(s"($DampPct * coalesce(contrib, 0L)) div 100")).as("r")))
+          loop.free(r)
+          r = next
         }
         // the final checkpoint backs the lazy result
-        loop.keep(last)
+        loop.keep(r)
         r
       }
     }

@@ -38,7 +38,7 @@ import graft.registry.Q
 object Scc {
 
   /** Unrolled oracle depths, asserted ≥ the measured fixpoints at run
-    * time. Measured on the citation graph (SccProbe): sf0.001 → outer 1,
+    * time. Measured on the citation graph (COVERAGE.md): sf0.001 → outer 1,
     * fwd 4, bwd 4; sf0.01 → outer 1, fwd 5, bwd 6; sf0.1 → outer 2,
     * fwd 7, bwd 7 (the graph is one giant SCC plus a small periphery,
     * so the coloring converges fast). Depths carry ~2x headroom, the
@@ -97,7 +97,7 @@ object Scc {
       // citation graph that removes the whole second outer round (the r9
       // job-count cut). scc_id = id for a singleton is what the coloring
       // would assign, so the unrolled no-trim oracle still matches.
-      // `graft.scc.trim=false` is SccProbe's A/B switch.
+      // `graft.scc.trim=false` is an A/B switch for `graft.Profile ab`.
       def trim(): Unit =
         if (sys.props.getOrElse("graft.scc.trim", "true").toBoolean)
           loop.nested("trim") { t =>

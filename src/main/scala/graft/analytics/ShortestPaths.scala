@@ -14,7 +14,7 @@ import graft.registry.Q
   *
   * Same pinned layout as PageRank ([[Superstep]]): edges shuffled onto src
   * once, state id-partitioned, one exchange per round (the relaxation
-  * min-aggregation), checkpoint cadence measured per-operator (CkptEvery).
+  * min-aggregation), a checkpoint every round.
   */
 object ShortestPaths {
 
@@ -26,16 +26,8 @@ object ShortestPaths {
     e.select(col("src"), col("dst"),
       (lit(1L) + (col("src") + col("dst")) % lit(10L)).as("w"))
 
-  /** Relaxation rounds per checkpoint. MEASURED cold per-JVM at sf0.1
-    * (CadenceProbe -sssp, 2 reps): every=1 7.7/6.9s, every=2 7.6/7.7s,
-    * every=3 9.0/9.5s — the long-standing default of 3 was the WORST:
-    * like k-core (and unlike PageRank), each round references state
-    * twice (cand derives from st, then st joins cand), so nesting
-    * re-evaluates more than the skipped materializations save. */
-  val CkptEvery = 1
-
   def sssp(spark: SparkSession, edgesRaw: DataFrame, source: Long,
-      rounds: Int = 10, ckptEvery: Int = CkptEvery): DataFrame =
+      rounds: Int = 10): DataFrame =
     Superstep.run(spark, "sssp",
       org.apache.spark.sql.GraftColumnBridge.memoCount(edgesRaw)) { loop =>
       val e = loop.cache(weighted(
@@ -49,28 +41,22 @@ object ShortestPaths {
       // dist is NULL while unreached; min() ignores NULLs on both engines
       var st = v.select(col("id"),
         when(col("id") === source, lit(0L)).as("dist"))
-      var last = st // latest checkpoint
-      var since = 0
-      for (k <- 1 to rounds) {
+      // a checkpoint every round: 6.9-7.7 s at sf0.1, 9.0-9.5 s every 3rd (rounds read st twice)
+      for (_ <- 1 to rounds) {
         val cand = st.join(e, col("id") === col("src"))
           .groupBy(col("dst"))
           .agg(min(col("dist") + col("w")).as("cand"))
-        val nextDs = st.hint("merge").join(cand, col("id") === col("dst"), "left")
-          .select(col("id"),
-            when(col("dist").isNull, col("cand"))
-              .when(col("cand").isNull, col("dist"))
-              .otherwise(least(col("dist"), col("cand"))).as("dist"))
-        since += 1
-        if (since == ckptEvery || k == rounds) {
-          val (next, _, _) = loop.step(nextDs, advance = since)
-          loop.free(last)
-          last = next
-          st = next
-          since = 0
-        } else st = nextDs
+        val (next, _, _) = loop.step(
+          st.hint("merge").join(cand, col("id") === col("dst"), "left")
+            .select(col("id"),
+              when(col("dist").isNull, col("cand"))
+                .when(col("cand").isNull, col("dist"))
+                .otherwise(least(col("dist"), col("cand"))).as("dist")))
+        loop.free(st)
+        st = next
       }
       // the final checkpoint backs the lazy result
-      loop.keep(last)
+      loop.keep(st)
       // only reached vertices: NULL-bearing numeric output would break the
       // strict gate, and an unreached vertex has no distance to report
       st.filter(col("dist").isNotNull)

@@ -38,7 +38,7 @@ object Stress {
   val SourceMax = 8L
 
   /** BFS rounds (= max depth); backward uses the same unroll. Measured
-    * (StressProbe in SccProbe's mold — spec prints): depth reached
+    * (the `stress.forward` LoopStats rounds): depth reached
     * sf0.001 → 4, sf0.01 → 5, sf0.1 → 7; backward converges in
     * depth+1. 10 carries the SSSP headroom convention. */
   val Rounds = 10

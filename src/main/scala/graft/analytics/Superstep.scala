@@ -139,30 +139,30 @@ object Superstep {
       (out, n, s)
     }
 
-    /** Count `advance` rounds with statistic `stat`, against the cap. */
-    def round(stat: Long, advance: Int = 1): Unit = {
-      checkCap(advance)
-      rounds += advance
+    /** Count one round with statistic `stat`, against the cap. */
+    def round(stat: Long): Unit = {
+      checkCap()
+      rounds += 1
       stats += stat
     }
 
     /** One round's materialization: [[ckpt]] plus [[round]], with the
       * round's statistic the folded `stat`, or the row count without one. */
-    def step(df: DataFrame, stat: String = null, fold: Fold = CountTrue,
-        advance: Int = 1): (DataFrame, Long, Long) = {
-      checkCap(advance)
+    def step(df: DataFrame, stat: String = null,
+        fold: Fold = CountTrue): (DataFrame, Long, Long) = {
+      checkCap()
       exchanges = math.max(exchanges, df.queryExecution.executedPlan.collect {
         case x: ShuffleExchangeExec => x
       }.size)
       val r = ckpt(df, stat, fold)
-      round(if (stat == null) r._2 else r._3, advance)
+      round(if (stat == null) r._2 else r._3)
       r
     }
 
-    private def checkCap(advance: Int): Unit =
-      if (rounds + advance > cap) throw new IllegalStateException(
+    private def checkCap(): Unit =
+      if (rounds >= cap) throw new IllegalStateException(
         s"superstep loop '$name' exceeded its cap of $cap rounds " +
-          s"(round ${rounds + advance})")
+          s"(round ${rounds + 1})")
 
     /** Rounds of `body` from `init` (`rows` rows), one [[step]] each,
       * until `done(rows, previous rows, stat)`; past `maxRounds` the loop

@@ -107,20 +107,6 @@ object PipelineQueries {
     dedupSurvivors.run(s, d).count()
   }
 
-  /** Stage-by-stage timing of the warm (FamilyProbe tooling). */
-  def profileSharedFamily(s: SparkSession, d: String): Seq[(String, Double)] = {
-    def t(name: String)(body: => Unit): (String, Double) = {
-      val t0 = System.nanoTime()
-      body
-      name -> (System.nanoTime() - t0) / 1e9
-    }
-    Seq(
-      t("shingle_posts") { shinglePosts(s, d).count() },
-      t("sketches") { sketchesCached(s, d).count() },
-      t("ngram_pairs") { ngramPairsCached(s, d).count() },
-      t("survivors") { dedupSurvivors.run(s, d).count() })
-  }
-
   /** Unpersist and drop every shared intermediate belonging to `s`.
     * Bench/Verify call this the moment the dedup family completes:
     * persisted-and-never-released intermediates pressured executor memory

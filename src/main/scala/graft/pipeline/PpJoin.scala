@@ -218,9 +218,8 @@ object PpJoin {
     // once the result materializes): the token-set frame feeds THREE
     // join inputs (postings + both verify attaches) and the candidate
     // frame feeds a verify whose intersect expression appears in both
-    // the predicate and the projection — fused lazily, PpProbe measured
-    // the full plan at 24s while the sum of its materialized stages is
-    // ~8s (sf0.1, 2 reps): recomputation, not work, dominated.
+    // the predicate and the projection — fused lazily, the full plan took
+    // 24s against ~8s for its materialized stages at sf0.1 (COVERAGE.md).
     val sets = phase("sets")(tokenSets(docs).localCheckpoint(true))
     graft.analytics.CheckpointRegistry.trackFinal(spark, sets)
     val posts = sets.select(col("doc_id"), col("n"),
@@ -242,7 +241,7 @@ object PpJoin {
     // Verify (in verifyPairs): sets are hash-encoded to sorted long
     // arrays under an injectivity gate, and the score runs behind a
     // materialization barrier before the tau filter — each choice is
-    // PpProbe-measured (see the scaladoc above and COVERAGE).
+    // measured in COVERAGE.md; GRAFT_PP_TRACE times these phases.
     // candidate generation + positional filter (see positionalOk) +
     // fused checkpoint/contract-count (ckptCounted: one job materializes
     // the candidate frame and counts it)

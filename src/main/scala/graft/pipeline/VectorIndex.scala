@@ -416,7 +416,7 @@ object VectorIndex {
     * occupancy would make candidates linear but assignment quadratic;
     * sub-n^1.5 needs approximate assignment, i.e. a graph/tree index
     * over centroids, which no longer oracle-replicates). Measured at
-    * 10x corpus (QProfile, same harness both sides): fixed 64 cells
+    * 10x corpus (COVERAGE.md, same harness both sides): fixed 64 cells
     * 2.65s -> 50.2s (19x); sqrt(n) 256 cells 2.65s -> 17.4s (6.6x),
     * inside the 31.6x the n^1.5 law allows.
     *

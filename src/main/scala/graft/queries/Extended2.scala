@@ -233,8 +233,8 @@ object Extended2 {
       // of demonstrating failure-guarded arithmetic on genuinely
       // non-numeric input), and a global sort's range-sampling
       // re-executes its child — projecting below the sort ran the
-      // try-expressions twice (ArithProbe: full 5.5s vs 0.5s sort +
-      // 2.5s exprs). Project(Sort(scan)) runs them once; same rows,
+      // try-expressions twice (full 5.5s vs 0.5s sort + 2.5s exprs at
+      // sf0.1, COVERAGE.md). Project(Sort(scan)) runs them once; same rows,
       // same order, same hash.
       Tables.lineitem(s, d)
         .orderBy(col("l_orderkey"), col("l_linenumber"))

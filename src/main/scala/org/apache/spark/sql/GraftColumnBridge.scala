@@ -118,7 +118,7 @@ object GraftColumnBridge {
     * also counts its rows and folds `statCol` (when non-null) per
     * partition: the superstep loops' convergence count rides the
     * materialization instead of costing a second scheduler round-trip
-    * (~30 ms each on the bench host, SchedProbe).
+    * (~30 ms each on the bench host, OPTIMIZATION_r13.md).
     *
     * Per-partition results come back from `runJob` (exactly once per
     * successful task, unlike an accumulator), and the job caches the

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One-shot generator for the synthesized-graph golden files under
   * src/test/resources/goldens/ (VERDICT r2 #7): runs the real CLI
   * diameter task on the SynthCitations graph for the reference's golden
@@ -13,13 +11,7 @@ import org.apache.spark.sql.SparkSession
   */
 object GenGoldens {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val out = java.nio.file.Files.createTempDirectory("goldens").toString

@@ -3,18 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session: one lazy SparkSession per suite, configured like the
-  * driver's Verify/Bench sessions (UTC + nanos-as-long for events). */
+/** Shared session: one lazy SparkSession per suite from the entry
+  * points' factory, on 4 cores. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+  lazy val spark: SparkSession = Sessions.builder(4)
     .config("spark.sql.warehouse.dir",
       s"/tmp/graft-warehouse-${sys.props.getOrElse("user.name", "u")}")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   def sf(dir: String = "0.001"): String = s"/root/testdata/sf$dir"

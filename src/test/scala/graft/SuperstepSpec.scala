@@ -1,13 +1,9 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
 import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.analytics._
@@ -94,32 +90,10 @@ class SuperstepSpec extends SparkSpec {
       rows
     }
     val warm = diameter()
-    val sc = spark.sparkContext
-    val group = "superstep-spec-diameter"
-    val marker = "superstep-spec-marker"
-    val jobs = new AtomicInteger(0)
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(`marker`) => drained.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "one diameter call")
-      val rows = try diameter() finally sc.clearJobGroup()
-      assert(rows === warm)
-      // the listener bus delivers in order: once the marker job's start
-      // is seen, every job of the call has been counted
-      sc.setJobGroup(marker, "listener drain")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(drained.await(1, TimeUnit.MINUTES), "listener bus did not drain")
-    } finally sc.removeSparkListener(listener)
-    info(s"jobs for one diameter call: ${jobs.get}")
-    assert(jobs.get === DiameterJobs)
+    val (rows, jobs) = Profile.countJobs(spark, "superstep-spec-diameter")(diameter())
+    assert(rows === warm)
+    info(s"jobs for one diameter call: $jobs")
+    assert(jobs === DiameterJobs)
   }
 
   /** Jobs of one warm `diameter(…, 1998)` call on the toy fixture: the
