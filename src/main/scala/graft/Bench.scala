@@ -11,7 +11,7 @@ object Bench {
     * build (min-of-N means "a build", never "a warm no-op"); after the
     * last consumer's slot the cache is dropped so its blocks don't pin
     * for the rest of the run. */
-  private final case class SetupDef(
+  private[graft] final case class SetupDef(
       name: String,
       cacheKey: String,
       build: (SparkSession, String) => Unit,
@@ -34,12 +34,12 @@ object Bench {
     "d_pipeline_e2e", "d_curate_e2e", "d_curate_write",
     "d_curate_incremental")
 
-  private val setups: Seq[SetupDef] = Seq(
+  private[graft] val setups: Seq[SetupDef] = Seq(
     SetupDef("_setup_dedup_family", "dedup_family",
       (s, d) => graft.pipeline.PipelineQueries.warmSharedFamily(s, d),
       _.startsWith("d_"), Some(DedupFamilyReaders)),
     SetupDef("_setup_bfs_levels", "bfs_levels",
-      (s, d) => graft.analytics.Stress.warmLevels(s, d),
+      (s, d) => { graft.analytics.Stress.levelsFor(s, d); () },
       Set("g_eccentricity", "g_harmonic", "g_stress")),
     SetupDef("_setup_scc", "scc",
       (s, d) => { graft.analytics.Scc.assignmentFor(s, d); () },
@@ -61,21 +61,21 @@ object Bench {
       (s, d) => graft.pipeline.ExactBaselines.warm(s, d),
       Set("d_dedup_embedding_cosine", "sim_ann_topk", "sim_ann_recall_tol")),
     SetupDef("_setup_pq", "pq",
-      (s, d) => graft.pipeline.PqIndex.warm(s, d),
+      (s, d) => { graft.pipeline.PqIndex.trained(s, d); () },
       Set("sim_pq_codes", "sim_ann_pq", "sim_ann_pq_rerank",
         "sim_pq_recall_tol", "sim_ann_ivf_pq")),
     SetupDef("_setup_kmeans", "kmeans",
-      (s, d) => graft.pipeline.SemanticCluster.warm(s, d),
+      (s, d) => { graft.pipeline.SemanticCluster.trainedFor(s, d); () },
       Set("d_cluster_kmeans", "d_dedup_semantic", "sim_ann_ivf_pq")),
     // the stored .warc.zst archive (VERDICT r12 #5): built/persisted
     // once here so t_warc_zst_seek's wall is READ-time random access
     SetupDef("_setup_warc_zst", "warc_zst",
-      (s, d) => graft.pipeline.Warc.warmShards(s, d),
+      (s, d) => { graft.pipeline.Warc.seekableShards(s, d); () },
       Set("t_warc_zst_seek")),
     // the shipped dictionary artifact (VERDICT r12 #7): trained once
     // here; t_warc_zst_dict_artifact pays only encode/decode
     SetupDef("_setup_zst_dict", "zst_dict",
-      (s, d) => graft.pipeline.ZstdDict.warmDict(s, d),
+      (s, d) => { graft.pipeline.ZstdDict.trainedDict(s, d); () },
       Set("t_warc_zst_dict_artifact")))
 
   // ---- host fingerprint (VERDICT r8 #2) --------------------------------

@@ -11,7 +11,6 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 import graft.analytics.CheckpointRegistry
-import graft.pipeline.PipelineQueries
 
 /** Profiles named registry queries on one warmed session.
   *
@@ -160,7 +159,7 @@ object Profile {
 
   private def release(spark: SparkSession): Unit = {
     CheckpointRegistry.releaseAll(spark)
-    PipelineQueries.releaseShared(spark)
+    SessionCaches.clear(spark, "dedup_family")
   }
 
   private def attempt[A](label: String)(body: => A): Option[A] =

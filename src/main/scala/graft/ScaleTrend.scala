@@ -206,7 +206,7 @@ object ScaleTrend {
       time(s"$name rep=$r") {
         SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
       }
-    graft.pipeline.PipelineQueries.releaseShared(spark)
+    SessionCaches.clear(spark, "dedup_family")
     for (name <- SlopeSet.filter(n => only.isEmpty || only(n)); r <- 1 to reps)
       time(s"$name rep=$r") {
         SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()

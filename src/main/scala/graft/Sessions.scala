@@ -46,7 +46,7 @@ object Sessions {
     }
     quietly {
       PipelineQueries.warmSharedFamily(spark, tiny)
-      PipelineQueries.releaseShared(spark)
+      SessionCaches.clear(spark, "dedup_family")
       CheckpointRegistry.releaseAll(spark)
     }
     quietly(SemanticCluster.clusters(spark, tiny).count())

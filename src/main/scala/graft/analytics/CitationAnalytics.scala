@@ -1,7 +1,6 @@
 package graft.analytics
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Reference-parity entry points over the citation data model
@@ -14,23 +13,13 @@ object CitationAnalytics {
   /** Densification table `(year, n(t), e(t))` (Analytics.scala:77-142).
     * One edge contributes to the year of its `from` node (J1). Inner
     * join keeps years present on both sides, like the reference (J3).
+    * [[Density.densities]] under the reference's column names.
     */
-  def density(citations: DataFrame, publishedDates: DataFrame): DataFrame = {
-    // running totals per side BEFORE the year join (reference order:
-    // W1 at Analytics.scala:121-125, then J3 at :139) — a year with nodes
-    // but no edges drops from the output but still accumulates.
-    val w = Window.orderBy(col("year"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val nCum = publishedDates.groupBy(col("year")).agg(count(lit(1)).as("nc"))
-      .select(col("year"), sum(col("nc")).over(w).cast("long").as("n(t)"))
-    val eCum = citations
-      .join(publishedDates, citations("from") === publishedDates("id"))
-      .groupBy(col("year")).agg(count(lit(1)).as("ec"))
-      .select(col("year"), sum(col("ec")).over(w).cast("long").as("e(t)"))
-    nCum.join(eCum, "year")
-      .select(col("year"), col("n(t)"), col("e(t)"))
-      .orderBy(col("year"))
-  }
+  def density(citations: DataFrame, publishedDates: DataFrame): DataFrame =
+    Density.densities(
+      publishedDates.select(col("id"), col("year").as("yr")),
+      citations.select(col("from").as("src"), col("to").as("dst")))
+      .toDF("year", "n(t)", "e(t)")
 
   /** Snapshot edges at `year`: both endpoints published <= year
     * (F3, Analytics.scala:348-360), as (src, dst). */

@@ -128,26 +128,15 @@ object HopPlot {
     * g_eff_diameter need the *identical* BFS, so whichever registry entry
     * runs first pays for it and the other reuses the rows (VERDICT r1 #3 —
     * the duplicate recompute was ~30s of the visible bench). The cached
-    * value is a plain Seq of (d, count, pct) — tiny (O(diameter)). */
-  private val rowsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Seq[HopRow]]()
-
-  /** maxD/coverage are folded into the cache key and passed through, so a
+    * value is a plain Seq of (d, count, pct) — tiny (O(diameter)).
+    * maxD/coverage are folded into the cache key and passed through, so a
     * caller asking for a different cut can never be served the default
     * curve (ADVICE r2). */
   def hopPlotRowsCached(spark: SparkSession, edges: => DataFrame,
       cacheKey: String, maxD: Int = 20, coverage: Double = 1.0): Seq[HopRow] =
-    rowsCache.computeIfAbsent(
-      (graft.SessionKey(spark), s"$cacheKey|maxD=$maxD|cov=$coverage"),
-      _ => hopPlotRows(spark, edges, maxD, coverage))
-
-  /** Drop this session's memoized hop curves (driver-side Seqs — no
-    * Spark blocks to free). graft.SessionCaches hook: lets Bench time
-    * the BFS as its own `_setup_hopplot` entry per rep. */
-  private[graft] def clearRows(spark: SparkSession): Unit = {
-    val sid = graft.SessionKey(spark)
-    rowsCache.keySet.removeIf(k => k._1 == sid)
-  }
+    graft.SessionCaches.memo(spark, "hopplot",
+      s"$cacheKey|maxD=$maxD|cov=$coverage")(
+      hopPlotRows(spark, edges, maxD, coverage))
 
   def rowsToDf(spark: SparkSession, rows: Seq[HopRow]): DataFrame = {
     import spark.implicits._

@@ -26,25 +26,15 @@ object HyperANF {
 
   /** Memoized per (session, input key) — g_hopplot_approx and
     * g_eff_diameter_approx share one superstep run, mirroring
-    * HopPlot.hopPlotRowsCached for the exact pair. */
-  private val rowsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Seq[ApproxHopRow]]()
-
-  /** maxD/lgK are folded into the cache key and passed through (ADVICE
-    * r2: a default-keyed cache would serve the wrong curve to a caller
-    * asking for different parameters). */
+    * HopPlot.hopPlotRowsCached for the exact pair. maxD/lgK are folded
+    * into the cache key and passed through (ADVICE r2: a default-keyed
+    * cache would serve the wrong curve to a caller asking for different
+    * parameters). */
   def approxHopPlotRowsCached(spark: SparkSession, edges: => DataFrame,
       cacheKey: String, maxD: Int = 20, lgK: Int = 12): Seq[ApproxHopRow] =
-    rowsCache.computeIfAbsent(
-      (graft.SessionKey(spark), s"$cacheKey|maxD=$maxD|lgK=$lgK"),
-      _ => approxHopPlotRows(spark, edges, maxD, lgK))
-
-  /** Drop this session's memoized approximate hop curves (driver-side
-    * Seqs — no Spark blocks to free). graft.SessionCaches hook. */
-  private[graft] def clearRows(spark: SparkSession): Unit = {
-    val sid = graft.SessionKey(spark)
-    rowsCache.keySet.removeIf(k => k._1 == sid)
-  }
+    graft.SessionCaches.memo(spark, "hyperanf",
+      s"$cacheKey|maxD=$maxD|lgK=$lgK")(
+      approxHopPlotRows(spark, edges, maxD, lgK))
 
   /** @param lgK  HLL register count = 2^lgK (12 → ~1.6% rsd, 4 KiB/vertex).
     * @param maxD hard cap on supersteps, like the exact BFS. */

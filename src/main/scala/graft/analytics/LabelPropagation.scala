@@ -77,34 +77,15 @@ object LabelPropagation {
   private def oracleSql(rounds: Int): String =
     s"WITH ${oracleCtes(rounds)}\nSELECT id, lab FROM lab$rounds ORDER BY id"
 
-  /** Session-scoped assignment cache, keyed (session, dataset):
-    * g_labelprop and g_modularity both need the assignment, and a
-    * session composing community analytics should pay the propagation
-    * loop once (the [[Scc.assignmentFor]] discipline). Eager
-    * localCheckpoint of |V| 2-column rows, deliberately NOT
-    * CheckpointRegistry-tracked — the registry releases after every
-    * query, which would truncate the cache for the next caller. */
-  private val assignCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
+  /** Session-memoized assignment per dataset: g_labelprop and
+    * g_modularity both need the assignment, and a session composing
+    * community analytics should pay the propagation loop once (the
+    * [[Scc.assignmentFor]] discipline). Eager localCheckpoint of |V|
+    * 2-column rows. */
   def assignmentFor(spark: SparkSession, dir: String): DataFrame =
-    assignCache.computeIfAbsent((graft.SessionKey(spark), dir), _ =>
+    graft.SessionCaches.memo(spark, "labelprop", dir)(
       labelProp(spark, graft.graph.CitationGraph.edges(spark, dir))
         .localCheckpoint(true))
-
-  /** Drop this session's cached assignments and free their blocks
-    * (graft.SessionCaches hook — ADVICE r7 #2). */
-  private[graft] def clearAssignments(spark: SparkSession): Unit = {
-    val sid = graft.SessionKey(spark)
-    val it = assignCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 == sid) {
-        Superstep.release(e.getValue)
-        it.remove()
-      }
-    }
-  }
 
   val labelPropQ: Q = Q(
     "g_labelprop",

@@ -97,27 +97,25 @@ object Scc {
       // citation graph that removes the whole second outer round (the r9
       // job-count cut). scc_id = id for a singleton is what the coloring
       // would assign, so the unrolled no-trim oracle still matches.
-      // `graft.scc.trim=false` is an A/B switch for `graft.Profile ab`.
       def trim(): Unit =
-        if (sys.props.getOrElse("graft.scc.trim", "true").toBoolean)
-          loop.nested("trim") { t =>
-            // every counted round trims at least one vertex
-            t.limit(nActive)
-            var go = nActive > 0
-            while (go) {
-              val (nextVerts, nNext, _) = loop.ckpt(verts
-                .join(edges.select(col("src").as("id")), Seq("id"), "left_semi")
-                .join(edges.select(col("dst").as("id")), Seq("id"), "left_semi"))
-              if (nNext == nActive) { loop.free(nextVerts); go = false }
-              else {
-                t.round(nActive - nNext)
-                assign(loop.ckpt(verts.join(nextVerts, Seq("id"), "left_anti")
-                  .select(col("id"), col("id").as("scc_id")))._1)
-                shrinkTo(nextVerts, nNext)
-                go = nActive > 0
-              }
+        loop.nested("trim") { t =>
+          // every counted round trims at least one vertex
+          t.limit(nActive)
+          var go = nActive > 0
+          while (go) {
+            val (nextVerts, nNext, _) = loop.ckpt(verts
+              .join(edges.select(col("src").as("id")), Seq("id"), "left_semi")
+              .join(edges.select(col("dst").as("id")), Seq("id"), "left_semi"))
+            if (nNext == nActive) { loop.free(nextVerts); go = false }
+            else {
+              t.round(nActive - nNext)
+              assign(loop.ckpt(verts.join(nextVerts, Seq("id"), "left_anti")
+                .select(col("id"), col("id").as("scc_id")))._1)
+              shrinkTo(nextVerts, nNext)
+              go = nActive > 0
             }
           }
+        }
 
       trim()
       while (nActive > 0) {
@@ -245,21 +243,15 @@ object Scc {
     s"WITH $ctes\nSELECT id, scc_id FROM (\n  $union)\nORDER BY id"
   }
 
-  /** Session-scoped SCC assignment cache, keyed (session, dataset):
-    * g_scc and g_condensation both need the assignment, and a cluster
-    * session composing several SCC-derived analytics should pay the
-    * superstep loop ONCE. The cached frame is an eager localCheckpoint
-    * of ~|V| 2-column rows — small enough to pin for the session
-    * lifetime, so it is deliberately NOT CheckpointRegistry-tracked
-    * (the registry releases after every query; a released truncated
-    * checkpoint would be unrecomputable for the next caller). The
-    * convergence gates run inside the compute, so a cache hit is a
+  /** Session-memoized SCC assignment per dataset
+    * ([[graft.SessionCaches.memo]]): g_scc and g_condensation both need
+    * the assignment, and a cluster session composing several
+    * SCC-derived analytics should pay the superstep loop ONCE. The
+    * cached frame is an eager localCheckpoint of ~|V| 2-column rows.
+    * The convergence gates run inside the compute, so a cache hit is a
     * result that already passed them. */
-  private val assignCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
   def assignmentFor(spark: SparkSession, dir: String): DataFrame =
-    assignCache.computeIfAbsent((graft.SessionKey(spark), dir), _ => {
+    graft.SessionCaches.memo(spark, "scc", dir) {
       val a = scc(spark, graft.graph.CitationGraph.edges(spark, dir))
         .localCheckpoint(true)
       val (outer, fwd, bwd) = depths(spark)
@@ -268,21 +260,7 @@ object Scc {
           "unrolled oracle is " +
           s"($OuterDepth, $FwdDepth, $BwdDepth) — raise Scc depths")
       a
-    })
-
-  /** Drop this session's cached assignments and free their blocks
-    * (graft.SessionCaches hook — ADVICE r7 #2). */
-  private[graft] def clearAssignments(spark: SparkSession): Unit = {
-    val sid = graft.SessionKey(spark)
-    val it = assignCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 == sid) {
-        Superstep.release(e.getValue)
-        it.remove()
-      }
     }
-  }
 
   val sccQ: Q = Q(
     "g_scc",

@@ -56,7 +56,7 @@ object Stress {
     * sized from, whether the frontier DRAINED before the round cap (the
     * flag that certifies eccentricity bounds, see [[Eccentricity]]), and
     * max(sig) for the overflow gate. */
-  private[analytics] final case class Levels(edges: DataFrame,
+  private[graft] final case class Levels(edges: DataFrame,
       reached: DataFrame, maxDepth: Int, edgeCount: Long, drained: Boolean,
       maxSigma: Long)
 
@@ -159,20 +159,16 @@ object Stress {
       .select(col("v").as("id"), col("stress"))
   }
 
-  /** Session-scoped sampled-BFS cache, keyed (session, dataset):
-    * g_stress and g_harmonic both consume the (s, v, d, sig) level
-    * frame, and a session composing several centrality analytics
-    * should pay the BFS ONCE (the [[Scc.assignmentFor]] discipline).
-    * Both frames are localCheckpoints — |sample| × |V| rows of four
-    * longs plus the deduped edges — small enough to pin for the
-    * session, and deliberately NOT CheckpointRegistry-tracked (the
-    * registry releases after every query; a released truncated
-    * checkpoint would be unrecomputable for the next caller). */
-  private val levelsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Levels]()
-
-  private[analytics] def levelsFor(spark: SparkSession, dir: String): Levels =
-    levelsCache.computeIfAbsent((graft.SessionKey(spark), dir), _ => {
+  /** Session-memoized sampled BFS per dataset: g_stress and g_harmonic
+    * both consume the (s, v, d, sig) level frame, and a session
+    * composing several centrality analytics should pay the BFS ONCE
+    * (the [[Scc.assignmentFor]] discipline). Both frames are
+    * localCheckpoints — |sample| × |V| rows of four longs plus the
+    * deduped edges. Bench times the build as `_setup_bfs_levels`, so
+    * the g_stress/g_harmonic/g_eccentricity numbers are marginal
+    * cost. */
+  private[graft] def levelsFor(spark: SparkSession, dir: String): Levels =
+    graft.SessionCaches.memo(spark, "bfs_levels", dir) {
       val raw = graft.graph.CitationGraph.edges(spark, dir)
       val eCnt = raw.count()
       Superstep.run(spark, "bfs_levels", eCnt) { loop =>
@@ -182,7 +178,7 @@ object Stress {
         loop.detach(e, reached)
         Levels(e, reached, maxDepth, eCnt, drained, maxSigma)
       }
-    })
+    }
 
   /** The sampled levels over an arbitrary edge frame (specs, standalone
     * paths), aggregated by `agg` as loop `name`; the level frame backs
@@ -217,29 +213,6 @@ object Stress {
       val (e, _, _) = loop.ckpt(prep(edgesRaw))
       forward(loop, e, sourceMax, rounds)._3
     }
-
-  /** Warm the session BFS cache for `dir` — Bench times this as its own
-    * `_setup_bfs_levels` entry so the g_stress/g_harmonic/g_eccentricity
-    * numbers are MARGINAL cost with the build attributed by name
-    * (VERDICT r7 #1 / ADVICE r7 #2). */
-  def warmLevels(spark: SparkSession, dir: String): Unit =
-    levelsFor(spark, dir)
-
-  /** Drop this session's cached BFS levels and free their checkpoint
-    * blocks (graft.SessionCaches hook — ADVICE r7 #2: a session cache
-    * with no eviction path pins |sample|x|V| blocks for the session and
-    * makes repeated-run bench statistics pure cache hits). */
-  private[graft] def clearLevels(spark: SparkSession): Unit = {
-    val sid = graft.SessionKey(spark)
-    val it = levelsCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 == sid) {
-        Superstep.release(e.getValue.edges, e.getValue.reached)
-        it.remove()
-      }
-    }
-  }
 
   /** Registry path: backward phase over the session-cached levels. */
   def stressFor(spark: SparkSession, dir: String): DataFrame = {

@@ -385,8 +385,4 @@ object AviCodec {
   /** Batched header parse (one dispatch per batch). */
   def parseBatch(bs: Array[Array[Byte]]): Array[Array[Long]] =
     bs.map(parseHeaderRaw)
-
-  /** Batched frame stats. */
-  def frameStatsBatch(bs: Array[Array[Byte]], stride: Int): Array[Array[Array[Long]]] =
-    bs.map(frameStatsRaw(_, stride))
 }

@@ -42,12 +42,9 @@ object CitationGraph {
     * ONCE per (session, dataset) and inlined as a literal: the previous
     * 1-row crossJoin planned as a BroadcastNestedLoopJoin inside every
     * graph query and defeated the no-nested-loop plan guards. */
-  private val modCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]()
-
   private def custModulus(spark: SparkSession, dir: String): Long =
-    modCache.computeIfAbsent((graft.SessionKey(spark), dir),
-      _ => Tables.customer(spark, dir).agg(max(col("c_custkey")))
+    graft.SessionCaches.memo(spark, "graph_modulus", dir)(
+      Tables.customer(spark, dir).agg(max(col("c_custkey")))
         .head.getLong(0) + 1L)
 
   def edges(spark: SparkSession, dir: String): DataFrame =

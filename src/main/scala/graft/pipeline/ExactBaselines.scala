@@ -19,11 +19,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * shared sampled BFS ([[graft.analytics.Stress.levelsFor]]) and the
   * shared label-prop assignment. Cached values are eager
   * localCheckpoints of the RESULT frames (top-5 per query / the few
-  * qualifying pairs — tiny), deliberately NOT CheckpointRegistry-
-  * tracked: the registry releases after every query, which would
-  * truncate the cache for the next caller. Release instead via
-  * [[clear]] (the [[graft.SessionCaches]] hook) once the similarity
-  * family is done.
+  * qualifying pairs — tiny), memoized as the `embed_exact` family of
+  * [[graft.SessionCaches.memo]].
   *
   * Scale honesty is unchanged: the builders run behind the same
   * requireBounded gates as before — this cache never makes an O(n²)
@@ -42,9 +39,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the miss and hit paths.
   */
 object ExactBaselines {
-
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String), DataFrame]()
 
   /** Root of the PERSISTENT baseline store (VERDICT r8 #3). The exact
     * frames are pure functions of the embeddings table CONTENT, so they
@@ -73,7 +67,7 @@ object ExactBaselines {
 
   private def cached(s: SparkSession, d: String, key: String)(
       mk: => DataFrame): DataFrame =
-    cache.computeIfAbsent((graft.SessionKey(s), d, key), _ => {
+    graft.SessionCaches.memo(s, "embed_exact", (d, key)) {
       // Serve from the persistent store when the corpus fingerprint
       // matches; otherwise compute, persist, and serve THE WRITTEN
       // BYTES (read-back, not the in-memory frame) so both paths
@@ -106,7 +100,7 @@ object ExactBaselines {
         }
       }
       df.localCheckpoint(true)
-    })
+    }
 
   private object storeLock
 
@@ -131,20 +125,5 @@ object ExactBaselines {
   def warm(s: SparkSession, d: String): Unit = {
     topk(s, d).count()
     ndPairs(s, d).count()
-  }
-
-  /** Drop this session's baselines and free their checkpoint blocks
-    * (graft.SessionCaches hook). */
-  private[graft] def clear(spark: SparkSession): Unit = {
-    val sid = graft.SessionKey(spark)
-    val it = cache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 == sid) {
-        org.apache.spark.sql.GraftColumnBridge.checkpointRdd(e.getValue)
-          .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
-        it.remove()
-      }
-    }
   }
 }

@@ -49,17 +49,14 @@ object PipelineQueries {
 
   // ---- session-scoped shared intermediates ------------------------------
 
-  /** Memoized + persisted per (session, sf dir): the dedup family
-    * (ngram / minhash-LSH / simhash / survivors / e2e) reuses the same
-    * postings and sketch tables — recomputing them per query tripled the
-    * family's cost (VERDICT r1 #5). Plain get/putIfAbsent (not
-    * computeIfAbsent) because builders recurse into the cache for their
-    * own inputs. At cluster scale these would be cached/bucketed tables.
-    */
-  private val shared =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String), DataFrame]()
-
-  /** `sever = true` materializes the cache through an EAGER
+  /** Memoized + persisted per (session, sf dir) as the "dedup_family"
+    * memo family: the dedup family (ngram / minhash-LSH / simhash /
+    * survivors / e2e) reuses the same postings and sketch tables —
+    * recomputing them per query tripled the family's cost (VERDICT r1
+    * #5). Builders recurse into the memo for their own inputs. At
+    * cluster scale these would be cached/bucketed tables.
+    *
+    * `sever = true` materializes the cache through an EAGER
     * localCheckpoint instead of a lazy persist. Required whenever the
     * built frame's lineage bottoms out in a CheckpointRegistry-tracked
     * checkpoint (today: survivors, whose lineage crosses
@@ -70,28 +67,10 @@ object PipelineQueries {
     * r6 #4; harmless in this single-JVM harness, a real trap for the
     * long-lived cluster sessions the CheckpointRegistry doc encourages). */
   private def cachedDf(s: SparkSession, d: String, key: String,
-      sever: Boolean = false)(mk: => DataFrame): DataFrame = {
-    val k = (graft.SessionKey(s), d, key)
-    val hit = shared.get(k)
-    if (hit != null) hit
-    else {
-      val v =
-        if (sever) mk.localCheckpoint(true)
-        else mk.persist(StorageLevel.MEMORY_AND_DISK)
-      val prev = shared.putIfAbsent(k, v)
-      if (prev != null) { release(v); prev } else v
-    }
-  }
-
-  /** Free a shared frame whether it is persist-backed or checkpoint-
-    * backed (df.unpersist is a no-op on checkpoints — their blocks are
-    * freed via the backing RDD). */
-  private def release(df: DataFrame): Unit = {
-    try org.apache.spark.sql.GraftColumnBridge.checkpointRdd(df)
-      .foreach(_.unpersist(false))
-    catch { case _: Throwable => () }
-    try df.unpersist(false) catch { case _: Throwable => () }
-  }
+      sever: Boolean = false)(mk: => DataFrame): DataFrame =
+    graft.SessionCaches.memo(s, "dedup_family", (d, key))(
+      if (sever) mk.localCheckpoint(true)
+      else mk.persist(StorageLevel.MEMORY_AND_DISK))
 
   /** Materialize every shared dedup-family intermediate (shingle
     * postings, minhash/simhash sketch tables, verified pair graph,
@@ -107,31 +86,17 @@ object PipelineQueries {
     dedupSurvivors.run(s, d).count()
   }
 
-  /** Unpersist and drop every shared intermediate belonging to `s`.
-    * Bench/Verify call this the moment the dedup family completes:
-    * persisted-and-never-released intermediates pressured executor memory
-    * for every query that ran after the d_* group (VERDICT r2 #2 — a
-    * nine-query 2.8-6.5x regression cluster with unchanged plans). */
-  def releaseShared(s: SparkSession): Unit = {
-    val sid = graft.SessionKey(s)
-    val it = shared.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 == sid) {
-        release(e.getValue)
-        it.remove()
-      }
-    }
-  }
-
-  /** The family-boundary trigger Bench and Verify share: in name-sorted
-    * execution the dedup family is the contiguous d_* block, so the
-    * caches die the moment the last d_* query finishes. One definition,
-    * so the two runners can't drift (and a rename of the family prefix
-    * is a one-line change). */
+  /** The family-boundary trigger Verify and Slopes share: in
+    * name-sorted execution the dedup family is the contiguous d_* block,
+    * so the caches die the moment the last d_* query finishes —
+    * persisted-and-never-released intermediates pressured executor
+    * memory for every query that ran after the d_* group (VERDICT r2
+    * #2 — a nine-query 2.8-6.5x regression cluster with unchanged
+    * plans). */
   def releaseSharedAfterFamily(s: SparkSession, name: String,
       next: String): Unit =
-    if (name.startsWith("d_") && !next.startsWith("d_")) releaseShared(s)
+    if (name.startsWith("d_") && !next.startsWith("d_"))
+      graft.SessionCaches.clear(s, "dedup_family")
 
   /** Distinct word-3-gram postings (doc_id, g) — map-only per-row build
     * (Sketches.shinglePostsRow); the window+distinct form remains as the

@@ -169,38 +169,13 @@ object PqIndex {
   // at corpus scale the codebooks + code table ARE the maintained
   // artifact, retraining per query would be paying the index build per
   // lookup. localCheckpointed (cents is M·K rows; codes M rows/vector),
-  // released via the graft.SessionCaches "pq" hook; Bench builds it in
+  // memoized as the graft.SessionCaches "pq" family; Bench builds it in
   // its own timed _setup_pq slot so consumers report marginal cost.
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (DataFrame, DataFrame)]()
-
-  private[pipeline] def trained(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    cache.computeIfAbsent((graft.SessionKey(s), d), _ => {
+  private[graft] def trained(s: SparkSession, d: String): (DataFrame, DataFrame) =
+    graft.SessionCaches.memo(s, "pq", d) {
       val (cents, cds) = trainEncode(quantDf(s, d))
       (cents.localCheckpoint(true), cds.localCheckpoint(true))
-    })
-
-  /** Materialize the trained index (Bench's `_setup_pq` entry). */
-  def warm(s: SparkSession, d: String): Unit = {
-    trained(s, d); ()
-  }
-
-  /** Drop this session's trained index and free its checkpoint blocks
-    * (graft.SessionCaches hook). */
-  private[graft] def clear(spark: SparkSession): Unit = {
-    val sid = graft.SessionKey(spark)
-    val it = cache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 == sid) {
-        Seq(e.getValue._1, e.getValue._2).foreach { df =>
-          org.apache.spark.sql.GraftColumnBridge.checkpointRdd(df)
-            .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
-        }
-        it.remove()
-      }
     }
-  }
 
   /** Per-vector PQ codes + quantization error, the maintained index
     * artifact (M rows per vector; 8 code bytes where int8 keeps 64). */

@@ -192,40 +192,15 @@ object SemanticCluster {
   // discipline): d_cluster_kmeans, d_dedup_semantic, and the IVF-PQ
   // probe all need the SAME (centroids, assignment) — at corpus scale
   // the inverted-list assignment is the maintained artifact, so a
-  // session pays ONE training. localCheckpointed; released via the
-  // graft.SessionCaches "kmeans" hook; Bench builds it in a timed
+  // session pays ONE training. localCheckpointed; memoized as the
+  // graft.SessionCaches "kmeans" family; Bench builds it in a timed
   // _setup_kmeans slot so consumers report marginal cost.
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (DataFrame, DataFrame)]()
-
   /** The session's trained (final centroids, assignment) for this sf. */
   def trainedFor(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    cache.computeIfAbsent((graft.SessionKey(s), d), _ => {
+    graft.SessionCaches.memo(s, "kmeans", d) {
       val (cents, asg) = trainAssign(quantDf(s, d))
       (cents.localCheckpoint(true), asg.localCheckpoint(true))
-    })
-
-  /** Materialize the trained quantizer (Bench's `_setup_kmeans`). */
-  def warm(s: SparkSession, d: String): Unit = {
-    trainedFor(s, d); ()
-  }
-
-  /** Drop this session's trained quantizer and free its checkpoint
-    * blocks (graft.SessionCaches hook). */
-  private[graft] def clear(spark: SparkSession): Unit = {
-    val sid = graft.SessionKey(spark)
-    val it = cache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 == sid) {
-        Seq(e.getValue._1, e.getValue._2).foreach { df =>
-          org.apache.spark.sql.GraftColumnBridge.checkpointRdd(df)
-            .foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
-        }
-        it.remove()
-      }
     }
-  }
 
   def clusters(s: SparkSession, d: String): DataFrame =
     trainedFor(s, d)._2

@@ -253,31 +253,9 @@ object Warc {
   // materialization and its bench wall measures READ-time random
   // access, with the one-time build cost in Bench's explicitly-named
   // `_setup_warc_zst` slot (the PqIndex/_setup_pq discipline).
-  private val shardCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), DataFrame]()
-
   private[graft] def seekableShards(s: SparkSession, d: String): DataFrame =
-    shardCache.computeIfAbsent((graft.SessionKey(s), d), _ =>
+    graft.SessionCaches.memo(s, "warc_zst", d)(
       withWarcZstSeekable(Tables.fanout(Tables.documents(s, d))).localCheckpoint(true))
-
-  /** Materialize the stored archive (Bench's `_setup_warc_zst`). */
-  def warmShards(s: SparkSession, d: String): Unit = {
-    seekableShards(s, d); ()
-  }
-
-  /** Drop this session's stored shards (graft.SessionCaches hook). */
-  private[graft] def clearShards(spark: SparkSession): Unit = {
-    val sid = graft.SessionKey(spark)
-    val it = shardCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 == sid) {
-        try e.getValue.queryExecution.toRdd.unpersist(false)
-        catch { case _: Throwable => () }
-        it.remove()
-      }
-    }
-  }
 
   /** The random-access fetch FROM THE STORED ARCHIVE: the seek table
     * jumps STRAIGHT to frame 2 (the response record) — frames 0-1 are

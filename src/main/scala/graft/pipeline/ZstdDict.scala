@@ -101,26 +101,11 @@ object ZstdDict {
   // the decode takes the dict as a literal — ZstdDictSpec pins that
   // the query's plan has exactly ONE scan (no training subtree).
 
-  private val dictCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Array[Byte]]()
-
   /** The shipped dictionary artifact: train once per (session, sf). */
   private[graft] def trainedDict(s: org.apache.spark.sql.SparkSession,
       d: String): Array[Byte] =
-    dictCache.computeIfAbsent((graft.SessionKey(s), d), _ =>
+    graft.SessionCaches.memo(s, "zst_dict", d)(
       train(Html.withHtml(Tables.fanout(Tables.documents(s, d)))))
-
-  /** Materialize the artifact (Bench's `_setup_zst_dict` entry). */
-  def warmDict(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    trainedDict(s, d); ()
-  }
-
-  /** Drop this session's dict artifacts (graft.SessionCaches hook). */
-  private[graft] def clearDict(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val sid = graft.SessionKey(spark)
-    val it = dictCache.entrySet().iterator()
-    while (it.hasNext) if (it.next().getKey._1 == sid) it.remove()
-  }
 
   /** The shipped-dict ingest: bare dict-compressed shards decoded with
     * the broadcast artifact — same ParseOracle, so the out-of-band

@@ -11,12 +11,6 @@ import org.apache.spark.sql.functions.col
   */
 object Sinks {
 
-  def saveAsCsv(df: DataFrame, dir: String, name: String): Unit =
-    df.coalesce(1).write
-      .option("header", "true")
-      .mode("overwrite")
-      .csv(s"$dir/$name")
-
   def saveSortedAsCsv(df: DataFrame, dir: String, name: String,
       sortBy: String): Unit =
     df.orderBy(col(sortBy)).coalesce(1).write

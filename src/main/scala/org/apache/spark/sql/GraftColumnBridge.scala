@@ -62,9 +62,6 @@ object GraftColumnBridge {
     * else keys on the canonicalized plan STRING (exact equality — a
     * hash collision cannot return a wrong count). Bounded: a handful of
     * distinct scan plans per session. */
-  private val countMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]()
-
   def memoCount(df: DataFrame): Long =
     analyzed(df) match {
       case lr: execution.LogicalRDD => lr.rdd.count()
@@ -73,21 +70,10 @@ object GraftColumnBridge {
         // string alone omits file locations (LogicalRelation.toString
         // prints only output attrs + format), so two same-schema scans
         // of different directories would otherwise collide (ADVICE r13)
-        countMemo.computeIfAbsent(
-          (sessionUUID(df.sparkSession),
-            plan.canonicalized.toString + "|" + scanLocations(plan)),
-          _ => df.count()).longValue()
+        graft.SessionCaches.memo(df.sparkSession, "memo_count",
+          plan.canonicalized.toString + "|" + scanLocations(plan))(
+          df.count())
     }
-
-  /** Drop this session's memoized counts (graft.SessionCaches hook —
-    * VERDICT r13 "What's wrong" #3: memoCount had no invalidation; the
-    * values are partition-sizing only, but a long-lived session whose
-    * underlying files changed should be able to recount). */
-  def clearCountMemo(spark: SparkSession): Unit = {
-    val sid = sessionUUID(spark)
-    val it = countMemo.keySet().iterator()
-    while (it.hasNext) if (it.next()._1 == sid) it.remove()
-  }
 
   /** The scan locations under a plan, so two same-schema scans of
     * DIFFERENT directories cannot share a memoized count (ADVICE r13

@@ -45,6 +45,13 @@ class CitationParitySpec extends SparkSpec {
     assert(got.head === Row(9203201, 1992))
   }
 
+  test("density plan: one scan per file, the published-dates aggregate reused") {
+    val plan = finalPlan(CitationAnalytics.density(citations, published))
+      .split("== Initial Plan ==")(0)
+    assert("FileScan text".r.findAllIn(plan).size === 2, plan)
+    assert(plan.contains("ReusedExchange"), plan)
+  }
+
   test("density matches hand-computed toy values") {
     val got = CitationAnalytics.density(citations, published)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq

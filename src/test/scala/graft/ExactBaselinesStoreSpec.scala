@@ -26,16 +26,16 @@ class ExactBaselinesStoreSpec extends SparkSpec {
     def snap() = ExactBaselines.topk(spark, dir)
       .orderBy("qid", "rnk").collect().map(_.toSeq).toSeq
     val computed = snap() // miss: compute + persist
-    ExactBaselines.clear(spark) // drop the session cache, keep the store
+    SessionCaches.clear(spark, "embed_exact") // drop the session cache, keep the store
     val served = snap() // hit: read back from the store
     assert(computed.nonEmpty)
     assert(served === computed)
     // ndPairs goes through the same store discipline
     ExactBaselines.ndPairs(spark, dir).count()
-    ExactBaselines.clear(spark)
+    SessionCaches.clear(spark, "embed_exact")
     assert(ExactBaselines.ndPairs(spark, dir).columns.toSeq ===
       Seq("a_id", "b_id", "sim"))
-    ExactBaselines.clear(spark)
+    SessionCaches.clear(spark, "embed_exact")
   }
 
   test("a changed corpus misses the store (fingerprint keyed on content)") {
@@ -50,6 +50,6 @@ class ExactBaselinesStoreSpec extends SparkSpec {
     // same session, both cached — the moved vector must change the
     // neighbor list, which it could not if dirB had hit dirA's store
     assert(a !== b)
-    ExactBaselines.clear(spark)
+    SessionCaches.clear(spark, "embed_exact")
   }
 }

@@ -19,11 +19,58 @@ class SessionCachesSpec extends SparkSpec {
     df.collect().map(_.toString).toSeq.sorted
 
   test("every registered hook clears without error, even when empty") {
-    SessionCaches.hooks.foreach { case (name, _) =>
+    SessionCaches.hooks.foreach { name =>
       SessionCaches.clear(spark, name)
       SessionCaches.clear(spark, name) // idempotent
     }
     SessionCaches.clearAll(spark)
+  }
+
+  /** How each family is built: Bench's `_setup_*` entry, or (for the
+    * two families with no entry) the call that memoizes them. */
+  private val builds: Map[String, () => Unit] =
+    Bench.setups.map(su => su.cacheKey -> (() => su.build(spark, sf()))).toMap ++
+      Map(
+        "graph_modulus" -> (() => { graph.CitationGraph.edges(spark, sf()); () }),
+        "memo_count" -> (() => {
+          org.apache.spark.sql.GraftColumnBridge.memoCount(Tables.orders(spark, sf())); ()
+        }))
+
+  test("clearing a family frees every block its build persisted") {
+    assert(builds.keySet === SessionCaches.hooks.toSet)
+    val sc = spark.sparkContext
+    SessionCaches.hooks.foreach { family =>
+      val before = sc.getPersistentRDDs.keySet
+      builds(family)()
+      graft.analytics.CheckpointRegistry.releaseAll(spark)
+      SessionCaches.clear(spark, family)
+      val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+      assert(left.isEmpty, s"$family left ${left.values.mkString(", ")}")
+    }
+  }
+
+  test("clearAll leaves the session no memo entry") {
+    SessionCaches.clearAll(spark)
+    graph.CitationGraph.edges(spark, sf())
+    org.apache.spark.sql.GraftColumnBridge.memoCount(Tables.orders(spark, sf()))
+    assert(SessionCaches.keys(spark).map(_._1).toSet ===
+      Set("graph_modulus", "memo_count"))
+    SessionCaches.clearAll(spark)
+    assert(SessionCaches.keys(spark).isEmpty)
+  }
+
+  test("a memo build may call memo for another key") {
+    val v = SessionCaches.memo(spark, "hopplot", "outer") {
+      SessionCaches.memo(spark, "hopplot", "inner")(1) + 1
+    }
+    assert(v === 2)
+    assert(SessionCaches.memo(spark, "hopplot", "outer")(0) === 2)
+    SessionCaches.clear(spark, "hopplot")
+  }
+
+  test("an unknown family is refused") {
+    intercept[IllegalArgumentException](SessionCaches.memo(spark, "nope", "k")(1))
+    intercept[IllegalArgumentException](SessionCaches.clear(spark, "nope"))
   }
 
   test("bfs_levels: clear evicts, rebuild reproduces identical stress results") {
