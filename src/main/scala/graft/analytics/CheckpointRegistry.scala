@@ -44,10 +44,4 @@ object CheckpointRegistry {
     if (s != null)
       s.forEach(r => try r.unpersist(false) catch { case _: Throwable => () })
   }
-
-  /** Pinned-block count for the session — test hook. */
-  private[graft] def pinnedCount(spark: SparkSession): Int = {
-    val s = pinned.get(graft.SessionKey(spark))
-    if (s == null) 0 else s.size()
-  }
 }

@@ -67,10 +67,8 @@ object HopPlot {
   private def bfs(loop: Superstep.Loop, pairs: DataFrame, nPairs: Long,
       maxD: Int, coverage: Double, totalPairs: Option[Long]): Seq[HopRow] = {
     loop.input(nPairs)
-    // src-partitioned neighbor table: every level probes it on m = src,
-    // so per level only the (shrinking) frontier side shuffles
-    val nbr = loop.cache(pairs.select(col("src").as("m"), col("dst").as("nb"))
-      .repartition(col("m")))
+    // uncached: a cached m-partitioned copy was never read, each level re-shuffled it
+    val nbr = pairs.select(col("src").as("m"), col("dst").as("nb"))
     var frontier = pairs
     var visited = pairs
     val perD = scala.collection.mutable.ArrayBuffer[(Int, Long)]()
@@ -93,7 +91,7 @@ object HopPlot {
       if (newCount > 0) {
         val (nextVisited, _, _) = loop.ckpt(visited.union(fresh))
         // `pairs` (round 1's frontier and visited) stays until the loop
-        // returns: the cached neighbor table recomputes from it
+        // returns: every level's neighbor side reads it
         if (frontier ne pairs) loop.free(frontier, visited)
         frontier = fresh
         visited = nextVisited

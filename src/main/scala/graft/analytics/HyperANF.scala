@@ -115,12 +115,4 @@ object HyperANF {
         ApproxHopRow(dd, g, pct)
       }.toSeq
     }
-
-  def approxHopPlot(spark: SparkSession, edges: DataFrame,
-      maxD: Int = 20, lgK: Int = 12): DataFrame = {
-    import spark.implicits._
-    approxHopPlotRows(spark, edges, maxD, lgK)
-      .toDF("d", "g_d", "pct")
-      .select(col("d").cast("long").as("d"), col("g_d"), col("pct"))
-  }
 }

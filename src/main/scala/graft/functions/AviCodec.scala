@@ -381,8 +381,4 @@ object AviCodec {
         org.apache.spark.unsafe.types.UTF8String.fromString(k))): Any
     })
   }
-
-  /** Batched header parse (one dispatch per batch). */
-  def parseBatch(bs: Array[Array[Byte]]): Array[Array[Long]] =
-    bs.map(parseHeaderRaw)
 }

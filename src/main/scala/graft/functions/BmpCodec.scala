@@ -115,18 +115,6 @@ object BmpCodec {
     Array[Long](width, height, bpp, fileSize)
   }
 
-  /** Batched parse — one dispatch per batch of first-frames, null
-    * entries for non-BMP bytes (mirrors FrameCodec.parseBatch). */
-  def parseBatch(frames: Array[Array[Byte]]): Array[Array[Long]] = {
-    val out = new Array[Array[Long]](frames.length)
-    var i = 0
-    while (i < frames.length) {
-      out(i) = parseHeaderRaw(frames(i))
-      i += 1
-    }
-    out
-  }
-
   /** Expression adapter: struct(width, height, bpp, file_size) as an
     * InternalRow, or null. Called from generated code. */
   def parseHeader(b: Array[Byte]): InternalRow = {
@@ -182,16 +170,5 @@ object BmpCodec {
     val s = pixelStatsRaw(b)
     if (s == null) null
     else new GenericInternalRow(s.map(v => v: Any))
-  }
-
-  /** Batched full decode — one dispatch per batch of full payloads. */
-  def pixelStatsBatch(payloads: Array[Array[Byte]]): Array[Array[Long]] = {
-    val out = new Array[Array[Long]](payloads.length)
-    var i = 0
-    while (i < payloads.length) {
-      out(i) = pixelStatsRaw(payloads(i))
-      i += 1
-    }
-    out
   }
 }

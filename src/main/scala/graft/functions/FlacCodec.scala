@@ -111,7 +111,6 @@ object FlacCodec {
     }
     def putUnary(q: Int): Unit = { var i = 0; while (i < q) { putBits(0, 1); i += 1 }; putBits(1, 1) }
     def alignZero(): Unit = if (nbits > 0) putBits(0, 8 - nbits)
-    def sizeBits: Long = byteLen.toLong * 8 + nbits
     def toBytes: Array[Byte] = { require(nbits == 0); java.util.Arrays.copyOf(buf, byteLen) }
   }
 
@@ -855,14 +854,6 @@ object FlacCodec {
       case _: ParseError | _: ArrayIndexOutOfBoundsException |
           _: NegativeArraySizeException => null
     }
-
-  /** Batched decode — one dispatch per batch (the family convention). */
-  def pcmStatsBatch(fs: Array[Array[Byte]]): Array[Array[Long]] = {
-    val out = new Array[Array[Long]](fs.length)
-    var i = 0
-    while (i < fs.length) { out(i) = pcmStatsRaw(fs(i)); i += 1 }
-    out
-  }
 
   def parseHeader(b: Array[Byte]): InternalRow = {
     val raw = parseHeaderRaw(b)

@@ -21,8 +21,8 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
   *
   * One implementation serves every path: the Catalyst expressions call
   * these static methods from BOTH interpreted eval and generated code
-  * (a static call stays inside whole-stage codegen), and the batched
-  * mapPartitions path calls `parseBatch`.
+  * (a static call stays inside whole-stage codegen), and the typed
+  * mapPartitions paths call `parseRaw`.
   */
 object FrameCodec {
 
@@ -112,19 +112,6 @@ object FrameCodec {
       i += 1
     }
     (lens, payload)
-  }
-
-  /** Batched parse — the one-dispatch-per-batch seam a vectorized codec
-    * (JNI batch decoder) would replace: containers in, parallel arrays
-    * of results out, null entries for corrupt containers. */
-  def parseBatch(containers: Array[Array[Byte]]): Array[(Array[Long], Array[Byte])] = {
-    val out = new Array[(Array[Long], Array[Byte])](containers.length)
-    var i = 0
-    while (i < containers.length) {
-      out(i) = parseRaw(containers(i))
-      i += 1
-    }
-    out
   }
 
   /** Expression adapter: struct(version, n_frames, frame_lens, payload)

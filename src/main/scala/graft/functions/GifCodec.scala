@@ -361,10 +361,4 @@ object GifCodec {
     val s = pixelStatsRaw(b)
     if (s == null) null else new GenericInternalRow(s.map(v => v: Any))
   }
-
-  /** Batched twins (one dispatch per batch). */
-  def parseBatch(bs: Array[Array[Byte]]): Array[Array[Long]] =
-    bs.map(parseHeaderRaw)
-  def pixelStatsBatch(bs: Array[Array[Byte]]): Array[Array[Long]] =
-    bs.map(pixelStatsRaw)
 }

@@ -825,12 +825,4 @@ object JpegCodec {
     else new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       s.map(v => v: Any))
   }
-
-  /** Batched header parse (one dispatch per batch). */
-  def parseBatch(bs: Array[Array[Byte]]): Array[Array[Long]] =
-    bs.map(parseHeaderRaw)
-
-  /** Batched pixel stats. */
-  def pixelStatsBatch(bs: Array[Array[Byte]]): Array[Array[Long]] =
-    bs.map(pixelStatsRaw)
 }

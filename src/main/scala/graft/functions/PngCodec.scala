@@ -201,18 +201,6 @@ object PngCodec {
       Array[Any](h(0), h(1), h(2), h(3)))
   }
 
-  /** Batched parse — one dispatch per batch of first-frames, null
-    * entries for non-PNG bytes (mirrors BmpCodec.parseBatch). */
-  def parseBatch(frames: Array[Array[Byte]]): Array[Array[Long]] = {
-    val out = new Array[Array[Long]](frames.length)
-    var i = 0
-    while (i < frames.length) {
-      out(i) = parseHeaderRaw(frames(i))
-      i += 1
-    }
-    out
-  }
-
   // ---- full pixel decode -------------------------------------------------
 
   /** Hard cap on the inflated pixel buffer (128 MiB >= MaxEncodeSamples
@@ -428,17 +416,5 @@ object PngCodec {
     if (s == null) null
     else new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       s.map(v => v: Any))
-  }
-
-  /** Batched full decode — one dispatch per batch of full payloads,
-    * null entries for corrupt bytes (mirrors WavCodec.pcmStatsBatch). */
-  def pixelStatsBatch(payloads: Array[Array[Byte]]): Array[Array[Long]] = {
-    val out = new Array[Array[Long]](payloads.length)
-    var i = 0
-    while (i < payloads.length) {
-      out(i) = pixelStatsRaw(payloads(i))
-      i += 1
-    }
-    out
   }
 }

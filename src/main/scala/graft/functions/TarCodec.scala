@@ -208,8 +208,4 @@ object TarCodec {
         java.util.Arrays.copyOfRange(b, m.off, m.off + m.len))): Any
     })
   }
-
-  /** Batched parse (one dispatch per batch). */
-  def parseBatch(bs: Array[Array[Byte]]): Array[Array[Member]] =
-    bs.map(parseRaw)
 }

@@ -272,8 +272,4 @@ object WarcCodec {
         r.contentLength, r.httpStatus, UTF8String.fromString(r.body))): Any
     })
   }
-
-  /** Batched parse (one dispatch per batch). */
-  def parseBatch(bs: Array[Array[Byte]]): Array[Array[Rec]] =
-    bs.map(parseRaw)
 }

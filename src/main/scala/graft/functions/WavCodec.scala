@@ -120,18 +120,6 @@ object WavCodec {
       byteRate)
   }
 
-  /** Batched parse — one dispatch per batch of first-frames, null
-    * entries for non-WAV bytes (mirrors BmpCodec.parseBatch). */
-  def parseBatch(frames: Array[Array[Byte]]): Array[Array[Long]] = {
-    val out = new Array[Array[Long]](frames.length)
-    var i = 0
-    while (i < frames.length) {
-      out(i) = parseHeaderRaw(frames(i))
-      i += 1
-    }
-    out
-  }
-
   /** Expression adapter: struct(num_channels, sample_rate,
     * bits_per_sample, n_samples, byte_rate) as an InternalRow, or
     * null. Called from generated code. */
@@ -218,17 +206,6 @@ object WavCodec {
       i += 1
     }
     java.lang.Long.valueOf(fp)
-  }
-
-  /** Batched PCM stats — one dispatch per batch of full payloads. */
-  def pcmStatsBatch(wavs: Array[Array[Byte]]): Array[Array[Long]] = {
-    val out = new Array[Array[Long]](wavs.length)
-    var i = 0
-    while (i < wavs.length) {
-      out(i) = pcmStatsRaw(wavs(i))
-      i += 1
-    }
-    out
   }
 
   /** Expression adapter: struct(n_samples, sum_sq, peak) or null. */

@@ -23,12 +23,12 @@ import graft.registry.Q
   *
   * Scale shape: encode and decode are both narrow per-row kernels —
   * the ingest plan is scan → map → sort, zero exchanges beyond the
-  * output order; the _batch twin amortizes dispatch per partition
-  * batch like every codec lane. Measured honesty note: the planted
-  * samples are near-noise, and FLAC barely compresses them — measured
-  * 7681 bytes per 8192 raw (the mod-251 byte formula is slightly
-  * under 16 bits of entropy, which Rice at a high parameter
-  * collects); FlacCodecSpec pins that marginal ratio AND a
+  * output order; the _batch twin runs the same kernel on the typed
+  * mapPartitions path like every codec lane. Measured honesty note:
+  * the planted samples are near-noise, and FLAC barely compresses
+  * them — measured 7681 bytes per 8192 raw (the mod-251 byte formula
+  * is slightly under 16 bits of entropy, which Rice at a high
+  * parameter collects); FlacCodecSpec pins that marginal ratio AND a
   * structured-signal corpus where the fixed predictors compress >4x. */
 object Flac {
 
@@ -62,26 +62,10 @@ object Flac {
         col("s.sum_sq").as("sum_sq"),
         col("s.peak").as("peak"))
 
-  final case class FlacRow(doc_id: Long, flac: Array[Byte])
-  final case class FlacPcmRow(doc_id: Long, n_samples: Long, sum_sq: Long,
-      peak: Long)
-
-  /** Batched full-decode path — one dispatch per partition batch. */
-  def loudnessBatch(flacs: DataFrame, batchSize: Int = 512): DataFrame = {
-    val spark = flacs.sparkSession
-    import spark.implicits._
-    flacs.select(col("doc_id"), col("flac")).as[FlacRow]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          val stats = graft.functions.FlacCodec.pcmStatsBatch(
-            batch.map(_.flac).toArray)
-          batch.iterator.zip(stats.iterator).collect {
-            case (c, s) if s != null => FlacPcmRow(c.doc_id, s(0), s(1), s(2))
-          }
-        }
-      }
-      .toDF()
-  }
+  /** Typed mapPartitions full-decode path. */
+  def loudnessBatch(flacs: DataFrame): DataFrame =
+    RowDecode.longs(flacs, "flac", RowDecode.raw,
+      Seq("n_samples", "sum_sq", "peak"))(graft.functions.FlacCodec.pcmStatsRaw)
 
   private val HeaderOracleSql =
     """SELECT doc_id,

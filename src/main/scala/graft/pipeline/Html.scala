@@ -117,23 +117,17 @@ object Html {
         .withColumn("n_chars", length(col("extract")).cast(LongType))
         .orderBy(col("doc_id")))
 
-  final case class HtmlIn(doc_id: Long, html: String)
   final case class HtmlOut(doc_id: Long, extract: String, n_chars: Long)
 
-  /** Batched twin (one partition-local loop per batch, the multimodal
-    * `_batch` discipline): same oracle, unprunable mapPartitions path. */
-  def extractBatch(pages: DataFrame, batchSize: Int = 512): DataFrame = {
+  /** Typed mapPartitions twin: same oracle, unprunable path. */
+  def extractBatch(pages: DataFrame): DataFrame = {
     val spark = pages.sparkSession
     import spark.implicits._
-    pages.select(col("doc_id"), col("html")).as[HtmlIn]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          batch.iterator.map { r =>
-            val t = graft.functions.HtmlCodec.extractText(r.html)
-            HtmlOut(r.doc_id, t, if (t == null) 0L else t.length.toLong)
-          }
-        }
-      }
+    pages.select(col("doc_id"), col("html")).as[(Long, String)]
+      .mapPartitions(_.map { case (id, html) =>
+        val t = graft.functions.HtmlCodec.extractText(html)
+        HtmlOut(id, t, if (t == null) 0L else t.length.toLong)
+      })
       .toDF()
   }
 

@@ -51,74 +51,26 @@ object Multimodal {
       col("doc_id"),
       sample_bytes(col("bytes"), lit(k)).as("frames"))
 
-  final case class Asset(doc_id: Long, bytes: Array[Byte])
   final case class Features(doc_id: Long, features: Array[Long])
 
-  /** The iterator-shaped decode path (preference (d), mapPartitions):
-    * where a REAL codec plugs in — per-partition init (load model/codec
-    * once), then row-at-a-time decode. The fake decode is the same byte
-    * histogram, asserted equal to the expression path in
-    * MultimodalTypedSpec; the batch shape (Iterator => Iterator, no
-    * per-row setup) is the part a production decode inherits. */
-  def decodeFeaturesTyped(assets: DataFrame): DataFrame = {
+  /** The typed mapPartitions decode path: where a real codec plugs in,
+    * with per-partition init (load the model or codec once), then one
+    * decode per row. The fake decode is the same byte histogram as
+    * [[decodeFeatures]] (ExpressionsSpec + the m_decode_batch oracle). */
+  def decodeFeaturesBatch(assets: DataFrame): DataFrame = {
     val spark = assets.sparkSession
     import spark.implicits._
-    assets.select(col("doc_id"), col("bytes")).as[Asset]
+    assets.select(col("doc_id"), col("bytes")).as[(Long, Array[Byte])]
       .mapPartitions { it =>
         // per-partition "codec init" happens here, once
-        it.map { a =>
+        it.map { case (id, b) =>
           val h = new Array[Long](16)
           var i = 0
-          while (i < a.bytes.length) { h((a.bytes(i) & 0xFF) >>> 4) += 1; i += 1 }
-          Features(a.doc_id, h)
+          while (i < b.length) { h((b(i) & 0xFF) >>> 4) += 1; i += 1 }
+          Features(id, h)
         }
       }
       .toDF()
-  }
-
-  /** mapInArrow-shaped VECTORIZED decode (VERDICT r2 #10): rows flow
-    * through each partition as columnar batches of `batchSize` — ids and
-    * payloads transposed into parallel arrays, ONE codec invocation per
-    * batch — the Scala analogue of PySpark's mapInArrow
-    * (Iterator[RecordBatch] => Iterator[RecordBatch]). A real vectorized
-    * codec (JNI batch decoder, Arrow-backed model runtime) plugs into
-    * decodeBatch: dispatch cost drops from O(rows) to O(rows/batchSize)
-    * and the batch it sees is contiguous. Output equals decodeFeatures
-    * exactly (ExpressionsSpec + the m_decode_batch oracle). */
-  def decodeFeaturesBatch(assets: DataFrame, batchSize: Int = 512): DataFrame = {
-    val spark = assets.sparkSession
-    import spark.implicits._
-    assets.select(col("doc_id"), col("bytes")).as[Asset]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          val n = batch.size
-          val ids = new Array[Long](n)
-          val payloads = new Array[Array[Byte]](n)
-          var i = 0
-          while (i < n) {
-            ids(i) = batch(i).doc_id; payloads(i) = batch(i).bytes; i += 1
-          }
-          decodeBatch(ids, payloads)
-        }
-      }
-      .toDF()
-  }
-
-  /** The per-BATCH "codec" call — the seam where a real batch decoder
-    * goes; the fake is the same byte histogram as the expression path. */
-  private def decodeBatch(ids: Array[Long],
-      payloads: Array[Array[Byte]]): Iterator[Features] = {
-    val out = new Array[Features](ids.length)
-    var i = 0
-    while (i < ids.length) {
-      val h = new Array[Long](16)
-      val b = payloads(i)
-      var j = 0
-      while (j < b.length) { h((b(j) & 0xFF) >>> 4) += 1; j += 1 }
-      out(i) = Features(ids(i), h)
-      i += 1
-    }
-    out.iterator
   }
 
   // ---- GRFT1 container decode (structured binary, VERDICT r5 #2) --------
@@ -140,29 +92,21 @@ object Multimodal {
         col("f.frame_lens").as("frame_lens"),
         col("f.payload").as("payload"))
 
-  final case class Container(doc_id: Long, container: Array[Byte])
   final case class Parsed(doc_id: Long, version: Long, n_frames: Long,
       frame_lens: Array[Long], payload: Array[Byte])
 
-  /** Batched decode path (mapInArrow shape, like decodeFeaturesBatch):
-    * one codec dispatch per `batchSize` rows. Corrupt containers drop
-    * out (flatMap None), mirroring the expression path's NULL. */
-  def parseContainersBatch(containers: DataFrame, batchSize: Int = 512): DataFrame = {
+  /** Typed mapPartitions decode path (like decodeFeaturesBatch).
+    * Corrupt containers drop out, mirroring the expression path's NULL. */
+  def parseContainersBatch(containers: DataFrame): DataFrame = {
     val spark = containers.sparkSession
     import spark.implicits._
-    containers.select(col("doc_id"), col("container")).as[Container]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          val parsed = FrameCodec.parseBatch(batch.map(_.container).toArray)
-          // null result = corrupt container → dropped, mirroring the
-          // expression path's NULL (guard BEFORE destructuring)
-          batch.iterator.zip(parsed.iterator).collect {
-            case (c, r) if r != null =>
-              Parsed(c.doc_id, FrameCodec.Version.toLong, r._1.length.toLong,
-                r._1, r._2)
-          }
-        }
-      }
+    containers.select(col("doc_id"), col("container")).as[(Long, Array[Byte])]
+      .mapPartitions(_.flatMap { case (id, c) =>
+        val r = FrameCodec.parseRaw(c)
+        if (r == null) None
+        else Some(Parsed(id, FrameCodec.Version.toLong, r._1.length.toLong,
+          r._1, r._2))
+      })
       .toDF()
   }
 
@@ -195,32 +139,13 @@ object Multimodal {
         col("h.width").as("width"), col("h.height").as("height"),
         col("h.bpp").as("bpp"), col("h.file_size").as("file_size"))
 
-  final case class BmpHeaderRow(doc_id: Long, width: Long, height: Long,
-      bpp: Long, file_size: Long)
-
-  /** Batched decode path (one dispatch per batch, like
-    * parseContainersBatch): deframe, slice first frames, batch-parse
-    * headers; corrupt containers or non-BMP first frames drop out. */
-  def parseBmpHeadersBatch(containers: DataFrame, batchSize: Int = 512): DataFrame = {
-    val spark = containers.sparkSession
-    import spark.implicits._
-    containers.select(col("doc_id"), col("container")).as[Container]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          val deframed = FrameCodec.parseBatch(batch.map(_.container).toArray)
-          val firstFrames: Array[Array[Byte]] = deframed.map { r =>
-            if (r == null || r._1.isEmpty) null
-            else java.util.Arrays.copyOfRange(r._2, 0, r._1(0).toInt)
-          }
-          val headers = graft.functions.BmpCodec.parseBatch(firstFrames)
-          batch.iterator.zip(headers.iterator).collect {
-            case (c, h) if h != null =>
-              BmpHeaderRow(c.doc_id, h(0), h(1), h(2), h(3))
-          }
-        }
-      }
-      .toDF()
-  }
+  /** Typed mapPartitions decode path: deframe, slice the first frame,
+    * parse the header; corrupt containers or non-BMP first frames drop
+    * out. */
+  def parseBmpHeadersBatch(containers: DataFrame): DataFrame =
+    RowDecode.longs(containers, "container", RowDecode.firstFrame,
+      Seq("width", "height", "bpp", "file_size"))(
+      graft.functions.BmpCodec.parseHeaderRaw)
 
   // ---- WAV-in-GRFT1 decode (audio twin of the BMP pair) -----------------
 
@@ -255,33 +180,12 @@ object Multimodal {
         col("h.n_samples").as("n_samples"),
         col("h.byte_rate").as("byte_rate"))
 
-  final case class WavHeaderRow(doc_id: Long, num_channels: Long,
-      sample_rate: Long, bits_per_sample: Long, n_samples: Long,
-      byte_rate: Long)
-
-  /** Batched decode path (one dispatch per batch, like
-    * parseBmpHeadersBatch): deframe, slice first frames, batch-parse
-    * headers; corrupt containers or non-WAV first frames drop out. */
-  def parseWavHeadersBatch(containers: DataFrame, batchSize: Int = 512): DataFrame = {
-    val spark = containers.sparkSession
-    import spark.implicits._
-    containers.select(col("doc_id"), col("container")).as[Container]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          val deframed = FrameCodec.parseBatch(batch.map(_.container).toArray)
-          val firstFrames: Array[Array[Byte]] = deframed.map { r =>
-            if (r == null || r._1.isEmpty) null
-            else java.util.Arrays.copyOfRange(r._2, 0, r._1(0).toInt)
-          }
-          val headers = graft.functions.WavCodec.parseBatch(firstFrames)
-          batch.iterator.zip(headers.iterator).collect {
-            case (c, h) if h != null =>
-              WavHeaderRow(c.doc_id, h(0), h(1), h(2), h(3), h(4))
-          }
-        }
-      }
-      .toDF()
-  }
+  /** Typed mapPartitions decode path (like parseBmpHeadersBatch);
+    * corrupt containers or non-WAV first frames drop out. */
+  def parseWavHeadersBatch(containers: DataFrame): DataFrame =
+    RowDecode.longs(containers, "container", RowDecode.firstFrame,
+      Seq("num_channels", "sample_rate", "bits_per_sample", "n_samples",
+        "byte_rate"))(graft.functions.WavCodec.parseHeaderRaw)
 
   /** Full-payload PCM decode: deframe (parse_frames already yields the
     * concatenated payload, i.e. the complete WAV), then fold EVERY
@@ -297,30 +201,11 @@ object Multimodal {
         col("s.sum_sq").as("sum_sq"),
         col("s.peak").as("peak"))
 
-  final case class WavPcmRow(doc_id: Long, n_samples: Long, sum_sq: Long,
-      peak: Long)
-
-  /** Batched loudness path — unlike the header twins this one hands the
-    * FULL reassembled payload to the batch kernel, one dispatch per
-    * batch. */
-  def wavLoudnessBatch(containers: DataFrame, batchSize: Int = 512): DataFrame = {
-    val spark = containers.sparkSession
-    import spark.implicits._
-    containers.select(col("doc_id"), col("container")).as[Container]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          val deframed = FrameCodec.parseBatch(batch.map(_.container).toArray)
-          val wavs: Array[Array[Byte]] =
-            deframed.map(r => if (r == null) null else r._2)
-          val stats = graft.functions.WavCodec.pcmStatsBatch(wavs)
-          batch.iterator.zip(stats.iterator).collect {
-            case (c, s) if s != null =>
-              WavPcmRow(c.doc_id, s(0), s(1), s(2))
-          }
-        }
-      }
-      .toDF()
-  }
+  /** Typed mapPartitions loudness path — unlike the header twins this
+    * one hands the FULL reassembled payload to the kernel. */
+  def wavLoudnessBatch(containers: DataFrame): DataFrame =
+    RowDecode.longs(containers, "container", RowDecode.payload,
+      Seq("n_samples", "sum_sq", "peak"))(graft.functions.WavCodec.pcmStatsRaw)
 
   // ---- PNG-in-GRFT1 decode (big-endian + CRC member of the family) ------
 
@@ -352,31 +237,12 @@ object Multimodal {
         col("h.bit_depth").as("bit_depth"),
         col("h.color_type").as("color_type"))
 
-  final case class PngHeaderRow(doc_id: Long, width: Long, height: Long,
-      bit_depth: Long, color_type: Long)
-
-  /** Batched decode path (one dispatch per batch, like the BMP/WAV
-    * twins): deframe, slice first frames, batch-parse headers. */
-  def parsePngHeadersBatch(containers: DataFrame, batchSize: Int = 512): DataFrame = {
-    val spark = containers.sparkSession
-    import spark.implicits._
-    containers.select(col("doc_id"), col("container")).as[Container]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          val deframed = FrameCodec.parseBatch(batch.map(_.container).toArray)
-          val firstFrames: Array[Array[Byte]] = deframed.map { r =>
-            if (r == null || r._1.isEmpty) null
-            else java.util.Arrays.copyOfRange(r._2, 0, r._1(0).toInt)
-          }
-          val headers = graft.functions.PngCodec.parseBatch(firstFrames)
-          batch.iterator.zip(headers.iterator).collect {
-            case (c, h) if h != null =>
-              PngHeaderRow(c.doc_id, h(0), h(1), h(2), h(3))
-          }
-        }
-      }
-      .toDF()
-  }
+  /** Typed mapPartitions decode path (like the BMP/WAV twins): deframe,
+    * slice the first frame, parse the header. */
+  def parsePngHeadersBatch(containers: DataFrame): DataFrame =
+    RowDecode.longs(containers, "container", RowDecode.firstFrame,
+      Seq("width", "height", "bit_depth", "color_type"))(
+      graft.functions.PngCodec.parseHeaderRaw)
 
   /** Full-payload PIXEL decode (the image twin of [[wavLoudness]]):
     * deframe (parse_frames yields the concatenated payload, i.e. the
@@ -394,32 +260,11 @@ object Multimodal {
     "sum_c0", "sum_c1", "sum_c2", "sum_c3",
     "peak_c0", "peak_c1", "peak_c2", "peak_c3")
 
-  final case class PngPixelRow(doc_id: Long, width: Long, height: Long,
-      channels: Long, n_px: Long, sum_c0: Long, sum_c1: Long,
-      sum_c2: Long, sum_c3: Long, peak_c0: Long, peak_c1: Long,
-      peak_c2: Long, peak_c3: Long)
-
-  /** Batched full-pixel path — full reassembled payload to the batch
-    * kernel, one dispatch per batch (mirrors [[wavLoudnessBatch]]). */
-  def pngPixelsBatch(containers: DataFrame, batchSize: Int = 512): DataFrame = {
-    val spark = containers.sparkSession
-    import spark.implicits._
-    containers.select(col("doc_id"), col("container")).as[Container]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          val deframed = FrameCodec.parseBatch(batch.map(_.container).toArray)
-          val pngs: Array[Array[Byte]] =
-            deframed.map(r => if (r == null) null else r._2)
-          val stats = graft.functions.PngCodec.pixelStatsBatch(pngs)
-          batch.iterator.zip(stats.iterator).collect {
-            case (c, s) if s != null =>
-              PngPixelRow(c.doc_id, s(0), s(1), s(2), s(3), s(4), s(5),
-                s(6), s(7), s(8), s(9), s(10), s(11))
-          }
-        }
-      }
-      .toDF()
-  }
+  /** Typed mapPartitions full-pixel path — full reassembled payload to
+    * the kernel (mirrors [[wavLoudnessBatch]]). */
+  def pngPixelsBatch(containers: DataFrame): DataFrame =
+    RowDecode.longs(containers, "container", RowDecode.payload, PngPixelCols)(
+      graft.functions.PngCodec.pixelStatsRaw)
 
   /** Full-payload BMP pixel decode — the UNCOMPRESSED image twin of
     * [[pngPixels]]: deframe, walk the padded bottom-up 24bpp rows, fold
@@ -435,30 +280,10 @@ object Multimodal {
   private val BmpPixelCols = Seq("width", "height", "n_px",
     "sum_b", "sum_g", "sum_r", "peak_b", "peak_g", "peak_r")
 
-  final case class BmpPixelRow(doc_id: Long, width: Long, height: Long,
-      n_px: Long, sum_b: Long, sum_g: Long, sum_r: Long,
-      peak_b: Long, peak_g: Long, peak_r: Long)
-
-  /** Batched full-pixel path (one dispatch per batch). */
-  def bmpPixelsBatch(containers: DataFrame, batchSize: Int = 512): DataFrame = {
-    val spark = containers.sparkSession
-    import spark.implicits._
-    containers.select(col("doc_id"), col("container")).as[Container]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          val deframed = FrameCodec.parseBatch(batch.map(_.container).toArray)
-          val bmps: Array[Array[Byte]] =
-            deframed.map(r => if (r == null) null else r._2)
-          val stats = graft.functions.BmpCodec.pixelStatsBatch(bmps)
-          batch.iterator.zip(stats.iterator).collect {
-            case (c, s) if s != null =>
-              BmpPixelRow(c.doc_id, s(0), s(1), s(2), s(3), s(4), s(5),
-                s(6), s(7), s(8))
-          }
-        }
-      }
-      .toDF()
-  }
+  /** Typed mapPartitions full-pixel path. */
+  def bmpPixelsBatch(containers: DataFrame): DataFrame =
+    RowDecode.longs(containers, "container", RowDecode.payload, BmpPixelCols)(
+      graft.functions.BmpCodec.pixelStatsRaw)
 
   // ---- perceptual image dedup (aHash over the real decode) --------------
 
@@ -848,25 +673,22 @@ object Multimodal {
 
   final case class GzipTextRow(doc_id: Long, fp: String, n_chars: Long)
 
-  /** Batched full-payload path (one dispatch per batch). */
-  def gunzipTextsBatch(containers: DataFrame, batchSize: Int = 512): DataFrame = {
+  /** Typed mapPartitions full-payload path, one MD5 per partition. */
+  def gunzipTextsBatch(containers: DataFrame): DataFrame = {
     val spark = containers.sparkSession
     import spark.implicits._
-    containers.select(col("doc_id"), col("container")).as[Container]
+    containers.select(col("doc_id"), col("container")).as[(Long, Array[Byte])]
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
-        it.grouped(batchSize).flatMap { batch =>
-          val deframed = FrameCodec.parseBatch(batch.map(_.container).toArray)
-          batch.iterator.zip(deframed.iterator).flatMap { case (c, r) =>
-            val raw = if (r == null) null
-              else graft.functions.GzipCodec.gunzip(r._2)
-            if (raw == null) None
-            else {
-              md.reset()
-              val fp = md.digest(raw).map("%02x".format(_)).mkString
-              val s = new String(raw, java.nio.charset.StandardCharsets.UTF_8)
-              Some(GzipTextRow(c.doc_id, fp, s.codePointCount(0, s.length).toLong))
-            }
+        it.flatMap { case (id, c) =>
+          val z = RowDecode.payload(c)
+          val raw = if (z == null) null else graft.functions.GzipCodec.gunzip(z)
+          if (raw == null) None
+          else {
+            md.reset()
+            val fp = md.digest(raw).map("%02x".format(_)).mkString
+            val s = new String(raw, java.nio.charset.StandardCharsets.UTF_8)
+            Some(GzipTextRow(id, fp, s.codePointCount(0, s.length).toLong))
           }
         }
       }
@@ -942,7 +764,7 @@ object Multimodal {
           md5(col("payload")).as("payload_fp"))
         .orderBy(col("doc_id")))
 
-  /** Same oracle through the batched decode path. */
+  /** Same oracle through the typed mapPartitions path. */
   val containerDecodeBatchQ: Q = Q(
     "m_container_decode_batch",
     Some(s"""SELECT doc_id,
@@ -983,7 +805,7 @@ object Multimodal {
       parseBmpHeaders(withBmpContainers(Tables.documents(s, d)))
         .orderBy(col("doc_id")))
 
-  /** Same oracle through the batched (one-dispatch-per-batch) path. */
+  /** Same oracle through the typed mapPartitions path. */
   val bmpDecodeBatchQ: Q = Q(
     "m_bmp_decode_batch",
     Some(BmpOracleSql),
@@ -1016,7 +838,7 @@ object Multimodal {
       parseWavHeaders(withWavContainers(Tables.documents(s, d)))
         .orderBy(col("doc_id")))
 
-  /** Same oracle through the batched (one-dispatch-per-batch) path. */
+  /** Same oracle through the typed mapPartitions path. */
   val wavDecodeBatchQ: Q = Q(
     "m_wav_decode_batch",
     Some(WavOracleSql),
@@ -1177,7 +999,7 @@ object Multimodal {
       parsePngHeaders(withPngContainers(Tables.fanout(Tables.documents(s, d))))
         .orderBy(col("doc_id")))
 
-  /** Same oracle through the batched (one-dispatch-per-batch) path. */
+  /** Same oracle through the typed mapPartitions path. */
   val pngDecodeBatchQ: Q = Q(
     "m_png_decode_batch",
     Some(PngOracleSql),
@@ -1219,7 +1041,7 @@ object Multimodal {
       wavLoudness(withWavContainers(Tables.documents(s, d)))
         .orderBy(col("doc_id")))
 
-  /** Same oracle through the batched full-payload path. */
+  /** Same oracle through the typed mapPartitions full-payload path. */
   val wavLoudnessBatchQ: Q = Q(
     "m_wav_loudness_batch",
     Some(WavPcmOracleSql),
@@ -1267,7 +1089,7 @@ object Multimodal {
       pngPixels(withPngContainers(Tables.fanout(Tables.documents(s, d))))
         .orderBy(col("doc_id")))
 
-  /** Same oracle through the batched full-payload path. */
+  /** Same oracle through the typed mapPartitions full-payload path. */
   val pngPixelsBatchQ: Q = Q(
     "m_png_pixels_batch",
     Some(PngPixelsOracleSql),
@@ -1708,7 +1530,7 @@ object Multimodal {
       bmpPixels(withBmpContainers(Tables.documents(s, d)))
         .orderBy(col("doc_id")))
 
-  /** Same oracle through the batched full-payload path. */
+  /** Same oracle through the typed mapPartitions full-payload path. */
   val bmpPixelsBatchQ: Q = Q(
     "m_bmp_pixels_batch",
     Some(BmpPixelsOracleSql),
@@ -1723,7 +1545,7 @@ object Multimodal {
       gunzipTexts(withGzipContainers(Tables.documents(s, d)))
         .orderBy(col("doc_id")))
 
-  /** Same oracle through the batched full-payload path. */
+  /** Same oracle through the typed mapPartitions full-payload path. */
   val gzipDecodeBatchQ: Q = Q(
     "m_gzip_decode_batch",
     Some(GzipOracleSql),
@@ -1767,30 +1589,11 @@ object Multimodal {
         col("h.width").as("width"), col("h.height").as("height"),
         col("h.channels").as("channels"), col("h.n_blocks").as("n_blocks"))
 
-  final case class JpegHeaderRow(doc_id: Long, width: Long, height: Long,
-      channels: Long, n_blocks: Long)
-
-  /** Batched header path (one dispatch per batch). */
-  def parseJpegHeadersBatch(containers: DataFrame, batchSize: Int = 512): DataFrame = {
-    val spark = containers.sparkSession
-    import spark.implicits._
-    containers.select(col("doc_id"), col("container")).as[Container]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          val deframed = FrameCodec.parseBatch(batch.map(_.container).toArray)
-          val firstFrames: Array[Array[Byte]] = deframed.map { r =>
-            if (r == null || r._1.isEmpty) null
-            else java.util.Arrays.copyOfRange(r._2, 0, r._1(0).toInt)
-          }
-          val headers = graft.functions.JpegCodec.parseBatch(firstFrames)
-          batch.iterator.zip(headers.iterator).collect {
-            case (c, h) if h != null =>
-              JpegHeaderRow(c.doc_id, h(0), h(1), h(2), h(3))
-          }
-        }
-      }
-      .toDF()
-  }
+  /** Typed mapPartitions header path. */
+  def parseJpegHeadersBatch(containers: DataFrame): DataFrame =
+    RowDecode.longs(containers, "container", RowDecode.firstFrame,
+      Seq("width", "height", "channels", "n_blocks"))(
+      graft.functions.JpegCodec.parseHeaderRaw)
 
   /** Full-payload JPEG pixel decode: deframe, then the whole baseline
     * path — Huffman entropy decode, DC prediction, dequant, IDCT,
@@ -1826,7 +1629,7 @@ object Multimodal {
       parseJpegHeaders(withJpegContainers(Tables.documents(s, d)))
         .orderBy(col("doc_id")))
 
-  /** Same oracle through the batched path. */
+  /** Same oracle through the typed mapPartitions path. */
   val jpegDecodeBatchQ: Q = Q(
     "m_jpeg_decode_batch",
     Some(JpegOracleSql),
@@ -1917,28 +1720,10 @@ object Multimodal {
         col("h.width").as("width"), col("h.height").as("height"),
         col("h.palette_size").as("palette_size"), col("h.n_px").as("n_px"))
 
-  final case class GifHeaderRow(doc_id: Long, width: Long, height: Long,
-      palette_size: Long, n_px: Long)
-
-  def parseGifHeadersBatch(containers: DataFrame, batchSize: Int = 512): DataFrame = {
-    val spark = containers.sparkSession
-    import spark.implicits._
-    containers.select(col("doc_id"), col("container")).as[Container]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          val deframed = FrameCodec.parseBatch(batch.map(_.container).toArray)
-          val payloads: Array[Array[Byte]] = deframed.map { r =>
-            if (r == null) null else r._2
-          }
-          val headers = graft.functions.GifCodec.parseBatch(payloads)
-          batch.iterator.zip(headers.iterator).collect {
-            case (c, h) if h != null =>
-              GifHeaderRow(c.doc_id, h(0), h(1), h(2), h(3))
-          }
-        }
-      }
-      .toDF()
-  }
+  def parseGifHeadersBatch(containers: DataFrame): DataFrame =
+    RowDecode.longs(containers, "container", RowDecode.payload,
+      Seq("width", "height", "palette_size", "n_px"))(
+      graft.functions.GifCodec.parseHeaderRaw)
 
   val gifDecodeQ: Q = Q(
     "m_gif_decode",

@@ -63,26 +63,11 @@ object Video {
         col("h.n_frames").as("n_frames"), col("h.fps").as("fps"),
         col("h.duration_ms").as("duration_ms"))
 
-  final case class VideoRow(doc_id: Long, video: Array[Byte])
-  final case class AviHeaderRow(doc_id: Long, width: Long,
-      height: Long, n_frames: Long, fps: Long, duration_ms: Long)
-
-  /** Batched header path (one dispatch per batch, like the JPEG twin). */
-  def parseHeadersBatch(videos: DataFrame, batchSize: Int = 512): DataFrame = {
-    val spark = videos.sparkSession
-    import spark.implicits._
-    videos.select(col("doc_id"), col("video")).as[VideoRow]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          val headers = AviCodec.parseBatch(batch.map(_.video).toArray)
-          batch.iterator.zip(headers.iterator).collect {
-            case (v, h) if h != null =>
-              AviHeaderRow(v.doc_id, h(0), h(1), h(2), h(3), h(4))
-          }
-        }
-      }
-      .toDF()
-  }
+  /** Typed mapPartitions header path (like the JPEG twin). */
+  def parseHeadersBatch(videos: DataFrame): DataFrame =
+    RowDecode.longs(videos, "video", RowDecode.raw,
+      Seq("width", "height", "n_frames", "fps", "duration_ms"))(
+      AviCodec.parseHeaderRaw)
 
   /** Demux + decode every `stride`-th frame to exact per-frame pixel
     * stats, exploded to (doc_id, frame_idx) rows. */

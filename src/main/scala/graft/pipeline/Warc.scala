@@ -39,28 +39,22 @@ object Warc {
         col("r.content_length").as("content_length"),
         col("r.http_status").as("http_status"))
 
-  final case class WarcIn(doc_id: Long, warc: Array[Byte])
   final case class WarcRecOut(doc_id: Long, rec_idx: Long, rec_type: String,
       uri: String, content_length: Long, http_status: Long)
 
-  /** Batched parse twin (one dispatch per batch, the family discipline). */
-  def parseRecordsBatch(warcs: DataFrame, batchSize: Int = 512): DataFrame = {
+  /** Typed mapPartitions parse twin. */
+  def parseRecordsBatch(warcs: DataFrame): DataFrame = {
     val spark = warcs.sparkSession
     import spark.implicits._
-    warcs.select(col("doc_id"), col("warc")).as[WarcIn]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          val parsed = WarcCodec.parseBatch(batch.map(_.warc).toArray)
-          batch.iterator.zip(parsed.iterator).flatMap {
-            case (w, rs) if rs != null =>
-              rs.iterator.zipWithIndex.map { case (r, i) =>
-                WarcRecOut(w.doc_id, i.toLong, r.recType, r.uri,
-                  r.contentLength, r.httpStatus)
-              }
-            case _ => Iterator.empty
-          }
+    warcs.select(col("doc_id"), col("warc")).as[(Long, Array[Byte])]
+      .mapPartitions(_.flatMap { case (id, w) =>
+        val rs = WarcCodec.parseRaw(w)
+        if (rs == null) Iterator.empty
+        else rs.iterator.zipWithIndex.map { case (r, i) =>
+          WarcRecOut(id, i.toLong, r.recType, r.uri, r.contentLength,
+            r.httpStatus)
         }
-      }
+      })
       .toDF()
   }
 

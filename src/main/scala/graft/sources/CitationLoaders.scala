@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.CitationText
 import graft.functions.GraftFunctions.{parse_citation_edge, parse_published_date}
 
 /** Text-file sources for the reference's citation-graph data model
@@ -21,10 +20,6 @@ import graft.functions.GraftFunctions.{parse_citation_edge, parse_published_date
   * thrown on, whatever `spark.sql.ansi.enabled` says.
   */
 object CitationLoaders {
-
-  val citationsSchema: StructType = CitationText.edgeSchema
-
-  val publishedDatesSchema: StructType = CitationText.dateSchema
 
   /** Whitespace-separated directed edge list -> citations(from, to)
     * (DataFrameLoader.scala:28-38). */

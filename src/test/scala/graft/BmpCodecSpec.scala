@@ -84,7 +84,7 @@ class BmpCodecSpec extends SparkSpec {
         .map(r => r.getLong(0) -> Seq(r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
         .toMap
     val viaExpr = key(Multimodal.parseBmpHeaders(containers))
-    val viaBatch = key(Multimodal.parseBmpHeadersBatch(containers, batchSize = 7))
+    val viaBatch = key(Multimodal.parseBmpHeadersBatch(containers))
     assert(viaExpr.nonEmpty && viaExpr == viaBatch)
     // every parsed header reports 24bpp and the stride-padded file size
     viaExpr.foreach { case (id, Seq(w, h, bpp, fs)) =>
@@ -128,7 +128,7 @@ class BmpCodecSpec extends SparkSpec {
     def key(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (0 until 10).map(i => r.getLong(i)).toList).toSet
     val a = key(Multimodal.bmpPixels(containers))
-    val b = key(Multimodal.bmpPixelsBatch(containers, batchSize = 7))
+    val b = key(Multimodal.bmpPixelsBatch(containers))
     assert(a === b)
     assert(a.size === Tables.documents(spark, sf()).count())
   }

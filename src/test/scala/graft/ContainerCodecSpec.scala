@@ -90,25 +90,9 @@ class ContainerCodecSpec extends SparkSpec {
     val good = FrameCodec.pack("payload bytes here".getBytes("UTF-8"), 7)
     val bad = good.clone(); bad(0) = 'X'.toByte
     val df = Seq((1L, good), (2L, bad), (3L, good)).toDF("doc_id", "container")
-    val out = Multimodal.parseContainersBatch(df, batchSize = 2)
+    val out = Multimodal.parseContainersBatch(df)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(out == Set(1L, 3L))
-  }
-
-  test("expression and batched decode agree across batch boundaries") {
-    val containers = Multimodal.withContainers(Tables.documents(spark, sf()))
-    def key(df: org.apache.spark.sql.DataFrame): Map[Long, (Long, Long, Seq[Long], String)] =
-      df.select(col("doc_id"), col("version"), col("n_frames"),
-        col("frame_lens"), md5(col("payload")).as("fp"))
-        .collect()
-        .map(r => r.getLong(0) ->
-          (r.getLong(1), r.getLong(2), r.getSeq[Long](3), r.getString(4)))
-        .toMap
-    val viaExpr = key(Multimodal.parseContainers(containers))
-    // batchSize=7 forces many batches per partition — boundary handling
-    // is exactly what this asserts
-    val viaBatch = key(Multimodal.parseContainersBatch(containers, batchSize = 7))
-    assert(viaExpr.nonEmpty && viaExpr == viaBatch)
   }
 
   test("container parse stays inside whole-stage codegen") {

@@ -18,17 +18,28 @@ trait SparkSpec extends AnyFunSuite {
     * REPARTITION_BY_NUM` directly above a too-small-to-fill-the-cluster
     * scan — identity at real scale, see Tables.scala). The narrow-map /
     * exchange-count guards keep asserting what they always asserted:
-    * no data movement the OPERATOR introduced. The pattern is exact
-    * (round-robin + REPARTITION_BY_NUM) and ANCHORED to the fan-out
-    * site — the exchange must sit within three lines of the FileScan it
-    * parallelizes (ADVICE r13: the unanchored strip also hid an
-    * operator-introduced `.repartition(n)` anywhere in the pipeline; a
-    * mid-pipeline round-robin exchange now still fails the guard). */
-  def sansFanout(plan: String): String =
-    plan.replaceAll(
-      "Exchange RoundRobinPartitioning\\(\\d+\\), REPARTITION_BY_NUM[^\\n]*" +
-        "(?=(?:\\n[^\\n]*?){0,2}\\n[^\\n]*?FileScan)",
-      "[scan-fanout]")
+    * no data movement the OPERATOR introduced. An exchange is stripped
+    * only when its subtree, read off the tree string's indentation, is
+    * a chain of unary operators ending in a `FileScan` leaf; a
+    * round-robin exchange above a join, another exchange or any other
+    * branching subtree is an operator's `.repartition(n)` and stays. */
+  def sansFanout(plan: String): String = {
+    val lines = plan.split("\n", -1)
+    // column where a tree-string node's text starts (after `:  +- `)
+    def depth(l: String): Int = l.indexWhere(c => !" :+-".contains(c))
+    def fanout(i: Int): Boolean = lines(i).contains(" REPARTITION_BY_NUM") && {
+      var j = i
+      while (j + 1 < lines.length && depth(lines(j + 1)) == depth(lines(j)) + 3
+        && !lines(j).contains("FileScan")) j += 1
+      j > i && lines(j).contains("FileScan") &&
+        (i + 1 until j).forall(k => !lines(k).contains("Exchange")) &&
+        (j + 1 == lines.length || depth(lines(j + 1)) <= depth(lines(i)))
+    }
+    val Fanout = "Exchange RoundRobinPartitioning\\(\\d+\\), REPARTITION_BY_NUM.*"
+    lines.indices.map { i =>
+      if (fanout(i)) lines(i).replaceFirst(Fanout, "[scan-fanout]") else lines(i)
+    }.mkString("\n")
+  }
 
   /** Executed-and-finalized plan string: under AQE a plan containing an
     * exchange only finalizes (codegen spans, stage boundaries) after it

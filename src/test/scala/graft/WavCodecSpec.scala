@@ -76,17 +76,6 @@ class WavCodecSpec extends SparkSpec {
     assert(WavCodec.parseHeaderRaw(corrupt(_(40) = 1)) == null)
   }
 
-  test("expression and batched WAV decode agree on real documents") {
-    val docs = Tables.documents(spark, sf())
-    val containers = Multimodal.withWavContainers(docs)
-    val viaExpr = Multimodal.parseWavHeaders(containers)
-      .orderBy(col("doc_id")).collect().map(_.toSeq)
-    val viaBatch = Multimodal.parseWavHeadersBatch(containers, batchSize = 7)
-      .orderBy(col("doc_id")).collect().map(_.toSeq)
-    assert(viaExpr.nonEmpty)
-    assert(viaExpr.toSeq == viaBatch.toSeq)
-  }
-
   test("a corrupt container drops its row on both decode paths") {
     import spark.implicits._
     val docs = Tables.documents(spark, sf()).limit(8)
@@ -153,7 +142,7 @@ class WavCodecSpec extends SparkSpec {
     val containers = Multimodal.withWavContainers(docs)
     val viaExpr = Multimodal.wavLoudness(containers)
       .orderBy(col("doc_id")).collect().map(_.toSeq)
-    val viaBatch = Multimodal.wavLoudnessBatch(containers, batchSize = 5)
+    val viaBatch = Multimodal.wavLoudnessBatch(containers)
       .orderBy(col("doc_id")).collect().map(_.toSeq)
     assert(viaExpr.nonEmpty)
     assert(viaExpr.toSeq == viaBatch.toSeq)
