@@ -52,9 +52,7 @@ object CitationAnalytics {
     val (snap, n, _) = org.apache.spark.sql.GraftColumnBridge.ckptCounted(
       snapshotEdges(citations, publishedDates, year))
     try {
-      val total = totalPairs.orElse(Some(
-        ConnectedComponents.componentSizes(snap, n)
-          .agg(sum(col("n_pairs"))).head.getLong(0)))
+      val total = totalPairs.orElse(Some(ConnectedComponents.connectedPairs(snap, n)))
       HopPlot.hopPlotRows(spark, snap, n, maxD, coverage, total)
         .toDF("d", "g(d)", "percent_of_total")
     } finally Superstep.release(snap)

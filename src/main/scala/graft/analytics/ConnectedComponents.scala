@@ -23,41 +23,56 @@ object ConnectedComponents {
   /** [[components]] with the loop sized from a known edge count. */
   private[analytics] def components(edges: DataFrame, rows: Long): DataFrame =
     Superstep.run(edges.sparkSession, "components", rows) { loop =>
-      import graft.graph.CitationGraph.bidirectional
-      // dst-partitioned once: every round joins bidir on dst against the
-      // id-partitioned labels, so a round shuffles only the label side
-      val (bidir, nPairs, _) = loop.ckpt(bidirectional(edges).repartition(col("dst")))
-      loop.input(nPairs)
-      val (lbl0, nV, _) = loop.ckpt(bidir.select(col("src").as("id")).distinct()
-        .select(col("id"), col("id").as("comp"), lit(false).as("chg")))
-      // labels settle within (component diameter + 1) <= |V| rounds
-      loop.limit(nV + 1)
-      // one propagation step per checkpoint: two per checkpoint measured
-      // 2.2x slower at sf0.1 (round 10), each step reading its input twice
-      val full = loop.iterate(lbl0, nV, "chg") { s =>
-        val lbl = s.select(col("id"), col("comp"))
-        val nbrMin = bidir.join(lbl, bidir("dst") === lbl("id"))
-          .groupBy(bidir("src").as("nid")).agg(min(col("comp")).as("nbComp"))
-        lbl.join(nbrMin, col("id") === col("nid"), "left")
-          .select(col("id"),
-            least(col("comp"), coalesce(col("nbComp"), col("comp"))).as("comp"),
-            (coalesce(col("nbComp"), col("comp")) < col("comp")).as("chg"))
-      }((_, _, changed) => changed == 0)
+      val full = labels(loop, edges)
       loop.keep(full)
       full.select(col("id"), col("comp"))
     }
 
+  /** Connected unordered pairs of `edges` (sum of C(size, 2) over the
+    * components), aggregated while the loop is still pinned. */
+  private[analytics] def connectedPairs(edges: DataFrame, rows: Long): Long =
+    Superstep.run(edges.sparkSession, "components", rows) { loop =>
+      sizesOf(labels(loop, edges))
+        .agg(coalesce(sum(col("n_pairs")), lit(0L))).head.getLong(0)
+    }
+
+  /** The converged (id, comp, chg) labels, owned by `loop`. */
+  private def labels(loop: Superstep.Loop, edges: DataFrame): DataFrame = {
+    import graft.graph.CitationGraph.bidirectional
+    // dst-partitioned once: every round joins bidir on dst against the
+    // id-partitioned labels as a shuffled-hash join built from the
+    // labels, which needs no exchange (a broadcast would re-ship bidir,
+    // one job a round); a round shuffles only the per-vertex minimum
+    val (bidir, nPairs, _) = loop.ckpt(bidirectional(edges).repartition(col("dst")))
+    loop.input(nPairs)
+    // each vertex starts as its own label; the label is an aggregate,
+    // not `id.as("comp")`, whose checkpoint would keep the partitioning
+    // on comp and re-shuffle the first round's labels on id
+    val (lbl0, nV, _) = loop.ckpt(bidir.groupBy(col("src").as("id"))
+      .agg(min(col("src")).as("comp")).withColumn("chg", lit(false)))
+    // labels settle within (component diameter + 1) <= |V| rounds
+    loop.limit(nV + 1)
+    // one propagation step per checkpoint: two per checkpoint measured
+    // 2.2x slower at sf0.1 (round 10), each step reading its input twice
+    loop.iterate(lbl0, nV, "chg") { s =>
+      val lbl = s.select(col("id"), col("comp"))
+      val nbrMin = bidir.join(lbl.hint("shuffle_hash"), bidir("dst") === lbl("id"))
+        .groupBy(bidir("src").as("nid")).agg(min(col("comp")).as("nbComp"))
+      lbl.join(nbrMin.hint("shuffle_hash"), col("id") === col("nid"), "left")
+        .select(col("id"),
+          least(col("comp"), coalesce(col("nbComp"), col("comp"))).as("comp"),
+          (coalesce(col("nbComp"), col("comp")) < col("comp")).as("chg"))
+    }((_, _, changed) => changed == 0)
+  }
+
   /** Component sizes + the connected-pair count per component
     * (denominator of the hop-plot percentages: sum of C(size,2)). */
-  def componentSizes(edges: DataFrame): DataFrame = sizesOf(components(edges))
-
-  private[analytics] def componentSizes(edges: DataFrame, rows: Long): DataFrame =
-    sizesOf(components(edges, rows))
+  def componentSizes(edges: DataFrame): DataFrame =
+    sizesOf(components(edges)).orderBy(col("comp"))
 
   private def sizesOf(comps: DataFrame): DataFrame =
     comps
       .groupBy(col("comp")).agg(count(lit(1)).as("size"))
       .select(col("comp"), col("size"),
         (col("size") * (col("size") - 1) / 2).cast("long").as("n_pairs"))
-      .orderBy(col("comp"))
 }

@@ -85,7 +85,7 @@ object IncrementalComponents {
     // graph's edges, touching nMapping components
     Superstep.record(assignment.sparkSession, "components_incremental",
       Superstep.LoopStats(rounds = 1, stats = Vector(nMapping),
-        input = nLabelEdges, converged = true, exchanges = 0))
+        input = nLabelEdges, converged = true, exchanges = 0, partitions = 0))
     // 4. one narrow pass over the standing assignment applies the
     // broadcast mapping; batch-only vertices append with their merged
     // label

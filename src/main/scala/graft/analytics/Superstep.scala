@@ -14,7 +14,8 @@ import org.apache.spark.storage.StorageLevel
   *     only known at runtime makes localCheckpoint capture
   *     UnknownPartitioning and re-shuffles loop state every round;
   *   - shuffle partitions are sized once from a row count the loop
-  *     already has: clamp(rows / 100k, 4, session setting).
+  *     already has: clamp(ceil(rows / 100k), 1, session setting), so a
+  *     small input runs its rounds as one task per stage.
   *
   * The [[Loop]] handle owns what every round repeats: the fused
   * materialize-and-count job ([[Loop.step]]), release of the superseded
@@ -35,9 +36,11 @@ object Superstep {
     * @param input     the loop's input size (edges, vertices), -1 if unset
     * @param converged false iff the loop stopped at a result-defining
     *                  limit while its state was still changing
-    * @param exchanges most shuffle exchanges in one materialized round */
+    * @param exchanges most shuffle exchanges in one materialized round
+    * @param partitions shuffle partitions pinned for the run, 0 for a
+    *                  result recorded outside one */
   final case class LoopStats(rounds: Int, stats: Vector[Long], input: Long,
-      converged: Boolean, exchanges: Int)
+      converged: Boolean, exchanges: Int, partitions: Int)
 
   /** session -> loop name -> runs. A top-level run replaces its own
     * record and drops those of the loops nested in it (`name.sub`); the
@@ -87,11 +90,12 @@ object Superstep {
     val aqePrev = spark.conf.getOption(aqeKey)
     val spPrev = spark.conf.getOption(spKey)
     val sessionP = spark.conf.get(spKey, "200").toLong
-    val p = math.max(4L, math.min(sessionP, rows / RowsPerPartition))
+    val p = math.max(1L,
+      math.min(sessionP, (rows + RowsPerPartition - 1) / RowsPerPartition)).toInt
     spark.conf.set(aqeKey, "false")
     spark.conf.set(spKey, p.toString)
     sessionLedger(spark).keySet.removeIf(k => k == name || k.startsWith(name + "."))
-    try new Loop(spark, name, None, statsClean).runBody(body)
+    try new Loop(spark, name, None, statsClean, p).runBody(body)
     finally {
       def restore(key: String, prev: Option[String]): Unit = prev match {
         case Some(v) => spark.conf.set(key, v)
@@ -106,7 +110,8 @@ object Superstep {
   /** Handle of one running loop. Frames it hands out are keyed by
     * identity to the checkpoint (or persisted frame) backing them. */
   final class Loop private[Superstep] (val spark: SparkSession,
-      val name: String, parent: Option[Loop], statsClean: Boolean) {
+      val name: String, parent: Option[Loop], statsClean: Boolean,
+      partitions: Int) {
 
     private var cap = Long.MaxValue
     private var rounds = 0
@@ -222,12 +227,13 @@ object Superstep {
     /** Run `body` as loop `<name>.<sub>` inside this one (same pin). */
     def nested[T](sub: String, statsClean: Boolean = statsClean)(
         body: Loop => T): T =
-      new Loop(spark, s"$name.$sub", Some(this), statsClean).runBody(body)
+      new Loop(spark, s"$name.$sub", Some(this), statsClean, partitions).runBody(body)
 
     private[Superstep] def runBody[T](body: Loop => T): T =
       try {
         val out = body(this)
-        val s = LoopStats(rounds, stats.result(), inputRows, converged, exchanges)
+        val s = LoopStats(rounds, stats.result(), inputRows, converged,
+          exchanges, partitions)
         sessionLedger(spark).merge(name, Vector(s), (a, b) => a ++ b)
         out
       } finally {

@@ -63,9 +63,15 @@ class PageRankSpec extends SparkSpec {
   }
 
   test("iteration plan has exactly one exchange: the contribution groupBy") {
-    PageRank.pageRank(spark, CitationGraph.edges(spark, sf()), iters = 2)
-    val exchanges = Superstep.stats(spark, "pagerank").get.exchanges
-    assert(exchanges === 1, s"expected 1 exchange per iteration, saw $exchanges")
+    // sf0.001 runs on one partition, 100,001 edges on two: the static
+    // edge frame is src-partitioned either way, so the same one exchange
+    for ((edges, partitions) <- Seq(
+        CitationGraph.edges(spark, sf()) -> 1, denseEdges(100001) -> 2)) {
+      PageRank.pageRank(spark, edges, iters = 2)
+      val st = Superstep.stats(spark, "pagerank").get
+      assert(st.partitions === partitions)
+      assert(st.exchanges === 1, s"expected 1 exchange per iteration, saw ${st.exchanges}")
+    }
   }
 
   test("personalized: unreachable vertices hold rank exactly 0") {

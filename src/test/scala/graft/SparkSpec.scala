@@ -13,6 +13,16 @@ trait SparkSpec extends AnyFunSuite {
 
   def sf(dir: String = "0.001"): String = s"/root/testdata/sf$dir"
 
+  /** `n` distinct (src, dst) edges without self-loops on 401 vertices
+    * (n <= 160,400): enough rows to size a superstep loop past one
+    * partition while keeping per-vertex state small. */
+  def denseEdges(n: Long): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.col
+    spark.range(n).select((col("id") / 400).cast("long").as("src"),
+        ((col("id") / 400).cast("long") + 1 + col("id") % 400).as("off"))
+      .select(col("src"), (col("off") % 401).as("dst"))
+  }
+
   /** Plan text with the byte-gated scan fan-out exchange removed
     * (Tables.fanout: `Exchange RoundRobinPartitioning(n),
     * REPARTITION_BY_NUM` directly above a too-small-to-fill-the-cluster

@@ -1,9 +1,12 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.analytics._
@@ -35,6 +38,24 @@ class SuperstepSpec extends SparkSpec {
     assert(e.getMessage.contains("cap of 2 rounds"), e.getMessage)
     // the pin is undone on the way out
     assert(spark.conf.getOption("spark.sql.adaptive.enabled") === aqe)
+  }
+
+  test("a loop runs one shuffle partition per started 100k rows, up to the session setting") {
+    val key = "spark.sql.shuffle.partitions"
+    val aqe = spark.conf.getOption("spark.sql.adaptive.enabled")
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "4")
+    try {
+      val sized = Seq(0L, 1L, 100000L, 100001L, 250000L, 10000000L).map { rows =>
+        val pinned = Superstep.run(spark, "sized", rows)(_ => spark.conf.get(key).toInt)
+        assert(Superstep.stats(spark, "sized").get.partitions === pinned)
+        // the pin is undone on the way out
+        assert(spark.conf.get(key) === "4")
+        assert(spark.conf.getOption("spark.sql.adaptive.enabled") === aqe)
+        pinned
+      }
+      assert(sized === Seq(1, 1, 1, 2, 3, 4))
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("two sessions running KCore.kcore concurrently each read their own LoopStats") {
@@ -90,14 +111,31 @@ class SuperstepSpec extends SparkSpec {
       rows
     }
     val warm = diameter()
-    val (rows, jobs) = Profile.countJobs(spark, "superstep-spec-diameter")(diameter())
+    val group = "superstep-spec-diameter"
+    val tasks = new AtomicInteger(0)
+    // stages run in the group; countJobs' drain also flushes these events
+    val stages = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          tasks.addAndGet(e.stageInfo.numTasks)
+    }
+    spark.sparkContext.addSparkListener(stages)
+    val (rows, jobs) =
+      try Profile.countJobs(spark, group)(diameter())
+      finally spark.sparkContext.removeSparkListener(stages)
     assert(rows === warm)
-    info(s"jobs for one diameter call: $jobs")
+    info(s"jobs for one diameter call: $jobs, tasks: ${tasks.get}")
     assert(jobs === DiameterJobs)
+    assert(tasks.get === DiameterTasks)
   }
 
   /** Jobs of one warm `diameter(…, 1998)` call on the toy fixture: the
-    * snapshot is materialized once and both loops run pinned (41 when the
-    * snapshot was evaluated three times and the BFS ran under AQE). */
-  private val DiameterJobs = 29
+    * snapshot is materialized once, both loops run pinned on one
+    * partition, the components loop joins its edges in place rather than
+    * broadcasting them every round, and the pair total is summed inside
+    * that loop (29 with a floor of 4 partitions and a broadcast a round). */
+  private val DiameterJobs = 21
+
+  /** Tasks of the same call. */
+  private val DiameterTasks = 31
 }
