@@ -96,7 +96,7 @@ object Explain {
       "g_harmonic" -> "sampled BFS like g_stress's forward phase; (s,v) state, frontier-edge join + min-dedup",
       "d_coreset_kcenter" -> "k-center rounds: narrow map vs 1-row broadcast center + two scalar aggs, O(n·k)",
       "g_modularity" -> "arc set labeled by two vertex-keyed joins vs cached assignment; label-keyed sums, 1-row A broadcast",
-      "d_dedup_ppjoin" -> "prefix-filtered set-similarity: doc-keyed prefix window, rare-token equi-join, candidate-scoped verify",
+      "d_dedup_ppjoin" -> "prefix-filtered set-similarity: tokens ranked once, rare-token equi-join scored in-row by a rank-array merge count",
       "m_wav_loudness" -> "full-payload PCM decode: deframe + codegen'd per-sample energy/peak fold, pure narrow map",
       "m_png_pixels" -> "full-payload PNG decode: CRC chunk walk + zlib inflate + unfilter + per-channel stats, pure narrow map",
       "m_gzip_decode" -> "full-payload gunzip (CRC/ISIZE-verified, bomb-capped) + content fingerprint, pure narrow map",

@@ -1423,6 +1423,58 @@ case class ArrayDotLong(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** Number of values two ascending, duplicate-free LONG arrays (`first`,
+  * `second`) share among their leading `third` / `fourth` elements (each
+  * clipped to [0, length]): one linear merge, no hash set and no slice
+  * allocation. On such arrays it equals size(array_intersect(...)) of
+  * the two leading slices. Null elements are not supported. The verify
+  * kernel of [[graft.pipeline.PpJoin]], whose arrays are token ranks. */
+case class SortedIntersectCount(first: Expression, second: Expression,
+    third: Expression, fourth: Expression)
+    extends QuaternaryExpression with ImplicitCastInputTypes {
+  override def dataType: DataType = LongType
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(LongType), ArrayType(LongType), LongType, LongType)
+  override def nullSafeEval(a: Any, b: Any, ea: Any, eb: Any): Any = {
+    val x = a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+    val y = b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+    val nx = math.min(x.numElements().toLong, math.max(ea.asInstanceOf[Long], 0L))
+    val ny = math.min(y.numElements().toLong, math.max(eb.asInstanceOf[Long], 0L))
+    var i = 0; var j = 0; var c = 0L
+    while (i < nx && j < ny) {
+      val u = x.getLong(i); val v = y.getLong(j)
+      if (u < v) i += 1
+      else if (u > v) j += 1
+      else { c += 1; i += 1; j += 1 }
+    }
+    c
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b, ea, eb) => {
+      val nx = ctx.freshName("nx"); val ny = ctx.freshName("ny")
+      val i = ctx.freshName("i"); val j = ctx.freshName("j")
+      val c = ctx.freshName("c"); val u = ctx.freshName("u"); val v = ctx.freshName("v")
+      s"""
+         |int $nx = (int) java.lang.Math.min((long) $a.numElements(), java.lang.Math.max($ea, 0L));
+         |int $ny = (int) java.lang.Math.min((long) $b.numElements(), java.lang.Math.max($eb, 0L));
+         |int $i = 0, $j = 0;
+         |long $c = 0L;
+         |while ($i < $nx && $j < $ny) {
+         |  long $u = $a.getLong($i), $v = $b.getLong($j);
+         |  if ($u < $v) $i++;
+         |  else if ($u > $v) $j++;
+         |  else { $c++; $i++; $j++; }
+         |}
+         |${ev.value} = $c;
+       """.stripMargin
+    })
+  override protected def withNewChildrenInternal(
+      newFirst: Expression, newSecond: Expression,
+      newThird: Expression, newFourth: Expression): SortedIntersectCount =
+    copy(first = newFirst, second = newSecond, third = newThird,
+      fourth = newFourth)
+}
+
 /** One citation-edge line `<from> <to>` -> array of one (from, to)
   * struct, NULL for a comment or malformed line (CitationText.edge):
   * the regex-free replacement for `split(trim(line), "\\s+")` plus two
@@ -1723,6 +1775,17 @@ object GraftFunctions {
   def array_dot_long(a: Column, b: Column): Column =
     GraftColumnBridge.column(ArrayDotLong(
       GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
+
+  def sorted_intersect_count(a: Column, b: Column): Column = {
+    val whole = GraftColumnBridge.column(Literal(Long.MaxValue))
+    sorted_intersect_count(a, b, whole, whole)
+  }
+
+  /** Over the leading `aEnd` elements of `a` and `bEnd` of `b`. */
+  def sorted_intersect_count(a: Column, b: Column, aEnd: Column, bEnd: Column): Column =
+    GraftColumnBridge.column(SortedIntersectCount(
+      GraftColumnBridge.expression(a), GraftColumnBridge.expression(b),
+      GraftColumnBridge.expression(aEnd), GraftColumnBridge.expression(bEnd)))
 
   def cms_sketch(hashedKey: Column): Column = CmsSketch.cms_sketch(hashedKey)
 

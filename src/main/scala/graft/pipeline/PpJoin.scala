@@ -1,11 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 import graft.Tables
+import graft.functions.GraftFunctions.sorted_intersect_count
 import graft.registry.Q
 
 /** Prefix-filtered set-similarity self-join (the PPJoin family — Xiao,
@@ -35,13 +36,14 @@ import graft.registry.Q
   * join (a genuinely different construction than the Spark side — a
   * stronger check than replaying the same algorithm).
   *
-  * Scale shape: token sets and prefixes are per-doc narrow (the prefix
-  * selection is a doc-keyed window over that doc's tokens ordered by
-  * the global (df, token) order — no global rank materialization);
-  * candidates come from a prefix-token equi-join whose skew is bounded
-  * by how often a token lands in a prefix (rare end of the df
-  * spectrum); verification joins full postings through the candidate
-  * pairs only — O(|candidates| × doc size), never all-pairs.
+  * Scale shape: tokens are ranked once, by one single-partition sort of
+  * the distinct vocabulary (bounded by the vocabulary, not the
+  * postings), and each doc becomes one ascending rank array whose
+  * prefix is its leading p ranks; candidates come from a prefix-token
+  * equi-join whose skew is bounded by how often a token lands in a
+  * prefix (rare end of the df spectrum), and each is verified in its
+  * join row by a merge count of the two rank arrays — O(|candidates| ×
+  * doc size), never all-pairs.
   */
 object PpJoin {
 
@@ -65,27 +67,7 @@ object PpJoin {
       .withColumn("n", size(col("ts")).cast(LongType))
       .filter(col("n") > 0L)
 
-  /** All pairs with token-set Jaccard ≥ TauNum/TauDen:
-    * (a_id, b_id, c, na, nb, jac_ppm).
-    *
-    * Two measured design points on THIS corpus (sf0.1, 5000 docs over
-    * a 31-token vocabulary — every token hot, the worst case for any
-    * frequency-based filter):
-    *  - the prefix join alone generates 13.4M candidate pairs; adding
-    *    the classic LENGTH filter (J ≥ τ forces τ·max(n) ≤ min(n),
-    *    cross-multiplied to integers) as a join residual cuts that to
-    *    2.1M distinct candidates (6.3×);
-    *  - verification by exploding both posting lists through the pair
-    *    (the shingle path's shape) costs |cand| × |doc| join rows —
-    *    ~50M here; with sets bounded by the vocabulary (≤ 31 tokens,
-    *    and in general by document length), attaching the two sorted
-    *    arrays and counting the intersection IN-ROW is a narrow
-    *    codegen'd map over just |cand| rows instead. The explode-join
-    *    remains the right shape for unbounded sets (see
-    *    d_dedup_ngram_jaccard's measured note, where shingle sets are
-    *    large); for token SETS the in-row count won by an order of
-    *    magnitude (84s → see COVERAGE trend).
-    */
+  /** Time one stage; printed when GRAFT_PP_TRACE is set. */
   private def phase[T](name: String)(f: => T): T = {
     val t0 = System.nanoTime()
     val r = f
@@ -94,58 +76,52 @@ object PpJoin {
     r
   }
 
-  /** Per-doc prefix (doc_id, n, t): the p = n − ⌈τn⌉ + 1 rarest tokens
-    * under the (df ASC, t ASC) total order given by `dfTab`. LEFT join
-    * + df 0 for unseen tokens: completeness needs only that BOTH sides
-    * of a join use ONE consistent total order — frequencies affect
-    * efficiency, never correctness — so an incremental batch can rank
-    * its tokens under the STANDING corpus's df order and tokens the
-    * corpus has never seen sort rarest. Integer `div` for the ceil (a
-    * double quotient that rounds up across an integer boundary would
-    * silently change the floor). Checkpointed: every caller feeds it
-    * to at least two join sides. */
-  private def prefixOf(spark: SparkSession, sets: DataFrame,
-      dfTab: DataFrame, label: String): DataFrame = {
-    val posts = sets.select(col("doc_id"), col("n"),
-      explode(col("ts")).as("t"))
-    val p = expr(s"n - (($TauNum * n + ${TauDen - 1}) div $TauDen) + 1")
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("t"))
-    val pref = phase(label)(posts.join(dfTab, Seq("t"), "left")
-      .withColumn("df", coalesce(col("df"), lit(0L)))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= p)
-      .select(col("doc_id"), col("n"), col("t"), col("rn").cast(LongType).as("rn"))
+  /** Rank-encoded docs (doc_id, n, rs): `rs` is the ascending array of
+    * the doc's token ranks in the global (df ASC, t ASC) order, df
+    * counting only the docs where `standing` holds (tokens no standing
+    * doc holds get df 0 and sort rarest). Completeness needs only that
+    * every doc is ranked under ONE total order — frequencies affect
+    * efficiency, never correctness. The ranks come from one sort of the
+    * distinct vocabulary on a single partition, so its cost is bounded
+    * by the number of distinct tokens (31 at sf0.1), not by the
+    * postings. Checkpointed: both sides of the candidate join read it. */
+  private def ranked(spark: SparkSession, docs: DataFrame,
+      standing: Column): DataFrame = {
+    val posts = tokenSets(docs).select(col("doc_id"), col("n"),
+      explode(col("ts")).as("t"), standing.as("standing"))
+    val ranks = posts.groupBy(col("t"))
+      .agg(count(when(col("standing"), 1)).as("df"))
+      .select(col("t"),
+        row_number().over(Window.orderBy(col("df"), col("t"))).cast(LongType).as("r"))
+    val enc = phase("ranks")(posts.join(ranks, "t")
+      .groupBy(col("doc_id"), col("n"))
+      .agg(array_sort(collect_list(col("r"))).as("rs"))
       .localCheckpoint(true))
-    graft.analytics.CheckpointRegistry.trackFinal(spark, pref)
-    pref
+    graft.analytics.CheckpointRegistry.trackFinal(spark, enc)
+    enc
   }
 
-  /** Expand a prefix side over its admissible partner sizes so the
-    * candidate join key is (t, n) — see similarPairs' skew note.
-    * Carries the token's position `ra` for the positional filter. */
-  private def expandSizes(prefix: DataFrame): DataFrame =
-    prefix.withColumn("nb", explode(sequence(
-        expr(s"($TauNum * n + ${TauDen - 1}) div $TauDen"),
-        expr(s"(n * $TauDen) div $TauNum"))))
-      .select(col("doc_id").as("a_id"), col("t").as("ta"), col("nb"),
-        col("n").as("na"), col("rn").as("ra"))
+  /** One row per prefix token (doc_id, n, rs, r, t): the prefix is the
+    * leading p = n − ⌈τn⌉ + 1 ranks, `r` the 1-based position. Integer
+    * `div` for the ceil (a double quotient that rounds up across an
+    * integer boundary would silently change the floor). */
+  private def prefixOf(enc: DataFrame): DataFrame =
+    enc.select(col("doc_id"), col("n"), col("rs"), posexplode(
+        expr(s"slice(rs, 1, cast(n - (($TauNum * n + ${TauDen - 1}) div $TauDen) + 1 AS INT))"))
+      .as(Seq("r", "t")))
+      .withColumn("r", col("r").cast(LongType) + 1L)
 
-  /** The PPJoin POSITIONAL filter (Xiao et al. 2008 §3.2), applied
-    * per generated candidate row BEFORE the distinct: a shared prefix
-    * token at 1-based positions (ra, rb) of the two docs' globally
-    * ordered token lists bounds the overlap by
-    * c ≤ 1 + min(na − ra, nb − rb) (the tokens at/after the match plus
-    * nothing before it), and J ≥ τ needs
-    * c ≥ ⌈TauNum·(na+nb) / (TauNum+TauDen)⌉. Soundness of row-level
-    * application: positions under one global total order are
-    * co-monotone, so the FIRST shared prefix token is also the first
-    * shared token overall (any earlier shared token would sit in both
-    * prefixes, contradicting firstness) — its bound is exact-prefixed
-    * (nothing shared before it) and the LOOSEST over the pair's
-    * occurrences, so a pair survives the row filter iff its first
-    * occurrence passes, exactly the PPJoin candidate condition. All
-    * integer arithmetic — no float anywhere (engine parity). */
-  private def positionalOk: org.apache.spark.sql.Column =
+  /** The PPJoin POSITIONAL filter (Xiao et al. 2008 §3.2): a shared
+    * prefix token at 1-based positions (ra, rb) bounds the overlap by
+    * c ≤ 1 + min(na − ra, nb − rb), and J ≥ τ needs
+    * c ≥ ⌈TauNum·(na+nb) / (TauNum+TauDen)⌉. It is applied to the
+    * pair's FIRST shared prefix token, which is also its first shared
+    * token overall (positions under one global order are co-monotone,
+    * so an earlier shared token would sit in both prefixes); its bound
+    * is the loosest over the pair's shared tokens, so the pair passes
+    * iff some shared prefix token passes — the PPJoin candidate
+    * condition. All integer arithmetic (engine parity). */
+  private def positionalOk: Column =
     (lit(1L) + least(col("na") - col("ra"), col("nb") - col("rb"))) *
       lit(TauNum + TauDen) >= lit(TauNum) * (col("na") + col("nb"))
 
@@ -156,149 +132,80 @@ object PpJoin {
       df.filter(positionalOk)
     else df
 
-  /** Distinct candidate pairs generated by the last similarPairs /
-    * incrementalPairs call — the CONTRACT QUANTITY the verify wall time
-    * is linear in; Bench emits it in the bench JSON so the "linear in
-    * candidates" claim is checkable per round (VERDICT r7 next #6). */
+  /** Candidate pairs counted by the last similarPairs /
+    * incrementalPairs call — the CONTRACT QUANTITY the verify cost is
+    * linear in; Bench and citebench report it. */
   @volatile private[graft] var lastCandidates: Long = -1
   @volatile private[graft] var lastIncrCandidates: Long = -1
 
-  /** Test hook: force the string-array verify even when the hash
-    * vocabulary is injective, so the fallback path is spec-coverable
-    * without manufacturing a 64-bit collision. */
-  @volatile private[graft] var forceStringVerify: Boolean = false
-
-  /** Exact verify over candidate pairs — see similarPairs' measured
-    * notes (injectivity gate, score-then-filter barrier). `sets` must
-    * cover every doc_id appearing in `cand`.
-    *
-    * Sets are hash-encoded to sorted LONG arrays when xxhash64 is
-    * injective on this corpus's token vocabulary (the fast common case:
-    * 8-byte fixed-width elements through the intersect instead of
-    * variable-length strings); on a detected collision — plausible at
-    * web-corpus vocabularies by 64-bit birthday arithmetic — the verify
-    * FALLS BACK to sorted STRING arrays, which is collision-free by
-    * construction (ADVICE r7 #3: the gate used to abort the whole join
-    * instead of performing the fallback its own message prescribed).
-    * Both paths run the identical join + in-row array_intersect count. */
-  private def verifyPairs(spark: SparkSession, cand: DataFrame,
-      sets: DataFrame): DataFrame = {
-    val posts = sets.select(explode(col("ts")).as("t"))
-    val inj = posts.agg(
-      countDistinct(col("t")).as("nt"),
-      countDistinct(xxhash64(col("t"))).as("nh")).head
-    val useHashes = !forceStringVerify && inj.getLong(0) == inj.getLong(1)
-    val hsets = sets.select(col("doc_id"),
-      (if (useHashes) array_sort(transform(col("ts"), t => xxhash64(t)))
-       else array_sort(col("ts"))).as("hs"),
-      col("n"))
-    val sa = hsets.select(col("doc_id").as("a_id"), col("hs").as("tsa"),
-      col("n").as("na"))
-    val sb = hsets.select(col("doc_id").as("b_id"), col("hs").as("tsb"),
-      col("n").as("nb"))
-    // Join strategy at the 100x point was A/B'd (reps=1, 48g driver):
-    // planner default 311s, forced shuffle_hash on both attaches 413s
-    // — the sort is NOT the bend; the run is O(candidates) (210M at
-    // sf10, 100x sf0.1's 2.1M, wall 54x — sublinear per candidate),
-    // so the default plan stays
-    val scored = phase("score")(cand.join(sa, "a_id").join(sb, "b_id")
-      .select(col("a_id"), col("b_id"),
-        size(array_intersect(col("tsa"), col("tsb"))).cast(LongType).as("c"),
-        col("na"), col("nb"))
-      .localCheckpoint(true))
+  /** Candidate generation and verification in one pass: probe prefix
+    * rows join index prefix rows on (token, partner size) — J ≥ τ forces
+    * n_b ∈ [⌈τ·n_a⌉, ⌊n_a/τ⌋] (~3 values at τ = 19/20), so the probe
+    * side expands over that band and a hot token's postings split by
+    * size instead of landing in one task. `keep` picks the pair
+    * orientations to generate. A joined row survives only at the pair's
+    * first shared prefix token (the two leading slices before it share
+    * nothing), so each candidate pair is one row without a `distinct`,
+    * and it is scored in the same row by a merge count of the two rank
+    * arrays. Returns the qualifying pairs as (a_id < b_id, c, na, nb,
+    * jac_ppm) and the candidate count. */
+  private def prefixJoin(spark: SparkSession, probe: DataFrame,
+      index: DataFrame, keep: Column): (DataFrame, Long) = {
+    val a = probe.withColumn("nb", explode(sequence(
+        expr(s"($TauNum * n + ${TauDen - 1}) div $TauDen"),
+        expr(s"(n * $TauDen) div $TauNum"))))
+      .select(col("doc_id").as("a_id"), col("n").as("na"), col("rs").as("rsa"),
+        col("r").as("ra"), col("t"), col("nb"))
+    val b = index.select(col("doc_id").as("b_id"), col("n").as("nb"),
+      col("rs").as("rsb"), col("r").as("rb"), col("t"))
+    val (scored, nCand, _) = phase("candidates")(
+      org.apache.spark.sql.GraftColumnBridge.ckptCounted(a.join(b, Seq("t", "nb"))
+        .filter(keep)
+        .transform(maybePositional)
+        .filter(sorted_intersect_count(col("rsa"), col("rsb"),
+          col("ra") - 1L, col("rb") - 1L) === 0L)
+        .select(least(col("a_id"), col("b_id")).as("a_id"),
+          greatest(col("a_id"), col("b_id")).as("b_id"),
+          sorted_intersect_count(col("rsa"), col("rsb")).as("c"),
+          when(col("a_id") < col("b_id"), col("na")).otherwise(col("nb")).as("na"),
+          when(col("a_id") < col("b_id"), col("nb")).otherwise(col("na")).as("nb"))))
     graft.analytics.CheckpointRegistry.trackFinal(spark, scored)
-    scored
+    (scored
       .filter(col("c") * TauDen >= lit(TauNum) * (col("na") + col("nb") - col("c")))
       .select(col("a_id"), col("b_id"), col("c"), col("na"), col("nb"),
-        expr("(1000000 * c) div (na + nb - c)").as("jac_ppm"))
+        expr("(1000000 * c) div (na + nb - c)").as("jac_ppm")), nCand)
   }
 
+  /** All pairs with token-set Jaccard ≥ TauNum/TauDen:
+    * (a_id, b_id, c, na, nb, jac_ppm). Measured design history (length
+    * band, in-row verify, join strategy): COVERAGE.md, d_dedup_ppjoin. */
   def similarPairs(spark: SparkSession, docs: DataFrame): DataFrame = {
-    // Eager stage boundaries (registry-tracked, released by the runner
-    // once the result materializes): the token-set frame feeds THREE
-    // join inputs (postings + both verify attaches) and the candidate
-    // frame feeds a verify whose intersect expression appears in both
-    // the predicate and the projection — fused lazily, the full plan took
-    // 24s against ~8s for its materialized stages at sf0.1 (COVERAGE.md).
-    val sets = phase("sets")(tokenSets(docs).localCheckpoint(true))
-    graft.analytics.CheckpointRegistry.trackFinal(spark, sets)
-    val posts = sets.select(col("doc_id"), col("n"),
-      explode(col("ts")).as("t"))
-    val dfTab = posts.groupBy(col("t")).agg(count(lit(1)).as("df"))
-    val prefix = prefixOf(spark, sets, dfTab, "prefix")
-
-    // candidate = same prefix token + the length filter, with the
-    // length bound folded INTO the join key: J ≥ τ forces
-    // n_b ∈ [⌈τ·n_a⌉, ⌊n_a/τ⌋] (a ~(1/τ − τ)·n-wide integer band, ~3
-    // values at τ=19/20), so side A expands over its admissible
-    // partner sizes and the join key becomes (t, n) instead of t
-    // alone. On a hot-vocabulary corpus a bare `t` key has a handful
-    // of distinct values — one 3.9k-posting token expands 15M pairs in
-    // a SINGLE task (measured: the whole query sat at 23s on that
-    // straggler); (t, n) multiplies the key space by the size spread
-    // and the residual filter disappears into the key.
-    //
-    // Verify (in verifyPairs): sets are hash-encoded to sorted long
-    // arrays under an injectivity gate, and the score runs behind a
-    // materialization barrier before the tau filter — each choice is
-    // measured in COVERAGE.md; GRAFT_PP_TRACE times these phases.
-    // candidate generation + positional filter (see positionalOk) +
-    // fused checkpoint/contract-count (ckptCounted: one job materializes
-    // the candidate frame and counts it)
-    val (cand, nCand, _) = phase("cand")(
-      org.apache.spark.sql.GraftColumnBridge.ckptCounted(expandSizes(prefix)
-        .join(prefix.select(col("doc_id").as("b_id"), col("n").as("nb2"),
-          col("t").as("tb"), col("rn").as("rb")),
-          col("ta") === col("tb") && col("nb") === col("nb2"))
-        .filter(col("a_id") < col("b_id"))
-        .transform(maybePositional)
-        .select(col("a_id"), col("b_id")).distinct()))
-    graft.analytics.CheckpointRegistry.trackFinal(spark, cand)
+    val prefix = prefixOf(ranked(spark, docs, lit(true)))
+    val (pairs, nCand) = prefixJoin(spark, prefix, prefix, col("a_id") < col("b_id"))
     lastCandidates = nCand
-    verifyPairs(spark, cand, sets)
+    pairs
   }
 
   /** Incremental near-dup detection: the pairs of the FULL similarity
     * join restricted to those touching an ingest batch (doc_id % 10 ==
     * 7, the d_dedup_incremental convention) — batch-internal pairs
-    * included — at O(batch) probe cost: only batch prefixes join the
-    * standing index; the corpus never self-joins. Batch tokens rank
-    * under the STANDING corpus's df order (unseen tokens df 0 →
-    * rarest), which is sound because prefix completeness needs one
-    * CONSISTENT total order on both sides, not up-to-date frequencies
-    * — the order affects candidate count, never the result (the
-    * verify is exact either way). Like the banded-minhash incremental
-    * path, the standing index is rebuilt here for the registered
-    * query; in production it is the maintained artifact. */
+    * included — at O(batch) probe cost: only batch prefixes probe the
+    * standing index; the corpus never self-joins. Ranks follow the
+    * STANDING corpus's df order (tokens it has never seen sort rarest),
+    * which is sound because prefix completeness needs one CONSISTENT
+    * total order, not up-to-date frequencies. A batch–batch pair is
+    * generated only in its a_id < b_id orientation. Like the
+    * banded-minhash incremental path, the standing index is rebuilt
+    * here for the registered query; in production it is the maintained
+    * artifact. */
   def incrementalPairs(spark: SparkSession, docs: DataFrame): DataFrame = {
-    val sets = phase("sets")(tokenSets(docs).localCheckpoint(true))
-    graft.analytics.CheckpointRegistry.trackFinal(spark, sets)
-    val corpus = sets.filter(col("doc_id") % 10 =!= 7)
-    val batch = sets.filter(col("doc_id") % 10 === 7)
-    val dfTab = corpus.select(explode(col("ts")).as("t"))
-      .groupBy(col("t")).agg(count(lit(1)).as("df"))
-    val corpusPrefix = prefixOf(spark, corpus, dfTab, "corpus_prefix")
-    val batchPrefix = prefixOf(spark, batch, dfTab, "batch_prefix")
-
-    // probe: batch prefixes (size-expanded) against standing + batch
-    // index; canonicalize a<b afterwards since the probe side may hold
-    // either endpoint of a pair
-    val index = corpusPrefix.union(batchPrefix)
-      .select(col("doc_id").as("b_id"), col("n").as("nb2"),
-        col("t").as("tb"), col("rn").as("rb"))
-    // the positional filter is symmetric in the two (size, position)
-    // pairs, so it applies before the least/greatest canonicalization
-    val (cand, nCand, _) = phase("cand")(
-      org.apache.spark.sql.GraftColumnBridge.ckptCounted(expandSizes(batchPrefix)
-        .join(index, col("ta") === col("tb") && col("nb") === col("nb2"))
-        .filter(col("a_id") =!= col("b_id"))
-        .transform(maybePositional)
-        .select(least(col("a_id"), col("b_id")).as("a_id"),
-          greatest(col("a_id"), col("b_id")).as("b_id"))
-        .distinct()))
-    graft.analytics.CheckpointRegistry.trackFinal(spark, cand)
+    val inBatch = (id: Column) => id % 10 === 7
+    val prefix = prefixOf(ranked(spark, docs, !inBatch(col("doc_id"))))
+    val (pairs, nCand) = prefixJoin(spark, prefix.filter(inBatch(col("doc_id"))),
+      prefix, col("a_id") =!= col("b_id") &&
+        (!inBatch(col("b_id")) || col("a_id") < col("b_id")))
     lastIncrCandidates = nCand
-    verifyPairs(spark, cand, sets)
+    pairs
   }
 
   // ---- registry entry ---------------------------------------------------

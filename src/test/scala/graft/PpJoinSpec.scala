@@ -1,13 +1,15 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
+import graft.analytics.CheckpointRegistry
 import graft.pipeline.PpJoin
 
 /** Prefix-filtered set-similarity join: hand-computed Jaccard pairs,
-  * the completeness law vs an in-test brute force, boundary and
-  * hot-token behavior, and corpus sanity. */
+  * the completeness law vs an in-test brute force, the candidate-count
+  * law vs a driver-side PPJoin, boundary and hot-token behavior, the
+  * job budget, and corpus sanity. */
 class PpJoinSpec extends SparkSpec {
 
   private def docs(rows: (Long, String)*): DataFrame = {
@@ -59,6 +61,11 @@ class PpJoinSpec extends SparkSpec {
     assert(run(docs(1L -> "", 2L -> "   ", 3L -> "solo words here")).isEmpty)
   }
 
+  private def withPositional[T](on: Boolean)(body: => T): T = {
+    sys.props("graft.ppjoin.positional") = on.toString
+    try body finally sys.props("graft.ppjoin.positional") = "true"
+  }
+
   test("positional filter prunes candidates without changing the output") {
     // Constructed so ONE candidate is prunable purely by position:
     // docs 1/2 are 20-token sets sharing 19 tokens, with their ONLY
@@ -75,12 +82,8 @@ class PpJoinSpec extends SparkSpec {
       2L -> (Seq("r3", "r2") ++ hot).mkString(" "),
       3L -> other.mkString(" "),
       4L -> other.reverse.mkString(" "))
-    def candsWith(arm: Boolean): (Set[(Long, Long)], Long) = {
-      sys.props("graft.ppjoin.positional") = arm.toString
-      try {
-        val out = run(docs(rows: _*)).map(p => (p._1, p._2)).toSet
-        (out, PpJoin.lastCandidates)
-      } finally sys.props("graft.ppjoin.positional") = "true"
+    def candsWith(arm: Boolean): (Set[(Long, Long)], Long) = withPositional(arm) {
+      (run(docs(rows: _*)).map(p => (p._1, p._2)).toSet, PpJoin.lastCandidates)
     }
     val (outOn, candOn) = candsWith(arm = true)
     val (outOff, candOff) = candsWith(arm = false)
@@ -105,31 +108,94 @@ class PpJoinSpec extends SparkSpec {
     assert(got.size >= 15)
   }
 
+  /** Doc i holds a 40-token sliding window over a shared sequence —
+    * adjacent windows score 39/41 (just above tau), windows two apart
+    * 38/42 (below), identical-window repeats 1. */
+  private val graded: Seq[(Long, String)] = (1L to 50L).map { i =>
+    val start = (i.toInt % 25) * 1 // repeats every 25 docs
+    i -> (start until start + 40).map(j => s"w$j").mkString(" ")
+  }
+
   test("completeness vs brute force on graded-overlap vocabulary") {
-    // doc i holds a 40-token sliding window over a shared sequence —
-    // adjacent docs overlap 39/41 < tau, identical-window repeats hit 1
-    val rows: Seq[(Long, String)] = (1L to 50L).map { i =>
-      val start = (i.toInt % 25) * 1 // repeats every 25 docs
-      i -> (start until start + 40).map(j => s"w$j").mkString(" ")
-    }
-    val got = run(docs(rows: _*)).map(p => (p._1, p._2)).toSet
-    assert(got === brute(rows))
+    val got = run(docs(graded: _*)).map(p => (p._1, p._2)).toSet
+    assert(got === brute(graded))
     assert(got.nonEmpty)
   }
 
-  test("seeded sweep: completeness holds across random vocab regimes") {
-    // tiny (every token hot) through wide (near-unique) vocabularies,
-    // fixed seed — the regimes where prefix pruning behaves differently
+  /** Three 40-doc corpora from tiny (every token hot) through wide
+    * (near-unique) vocabularies, fixed seed — the regimes where prefix
+    * pruning behaves differently. */
+  private lazy val sweep: Seq[(Int, Seq[(Long, String)])] = {
     val rng = new scala.util.Random(12345)
-    for (round <- 1 to 3) {
+    (1 to 3).map { _ =>
       val vocab = 5 + rng.nextInt(40)
-      val rows: Seq[(Long, String)] = (1L to 40L).map { i =>
+      vocab -> (1L to 40L).map { i =>
         val len = 3 + rng.nextInt(25)
         i -> (0 until len).map(_ => s"w${rng.nextInt(vocab)}").mkString(" ")
       }
-      assert(run(docs(rows: _*)).map(p => (p._1, p._2)).toSet === brute(rows),
-        s"round $round vocab $vocab")
     }
+  }
+
+  test("seeded sweep: completeness holds across random vocab regimes") {
+    for (((vocab, rows), round) <- sweep.zipWithIndex)
+      assert(run(docs(rows: _*)).map(p => (p._1, p._2)).toSet === brute(rows),
+        s"round ${round + 1} vocab $vocab")
+  }
+
+  private def inBatch(id: Long): Boolean = id % 10 == 7
+
+  /** The PPJoin candidate set, driver-side: distinct pairs (a < b) in
+    * each other's size band that share a prefix token at positions
+    * passing the positional bound (any position when `positional` is
+    * off). Tokens rank by (df ASC, t ASC), df counted over the docs
+    * `standing` keeps (others' tokens df 0); `touch` picks the pairs a
+    * run generates. */
+  private def candidates(rows: Seq[(Long, String)], positional: Boolean,
+      standing: Long => Boolean, touch: (Long, Long) => Boolean): Set[(Long, Long)] = {
+    import PpJoin.{TauDen, TauNum}
+    val sets = rows.map { case (id, t) =>
+      id -> t.trim.split("\\s+").filter(_.nonEmpty).distinct.toSeq
+    }.filter(_._2.nonEmpty)
+    val df = sets.filter(s => standing(s._1)).flatMap(_._2)
+      .groupBy(identity).map { case (t, ts) => t -> ts.size.toLong }
+    val prefixes = sets.map { case (id, ts) =>
+      val n = ts.size.toLong
+      val p = n - (TauNum * n + TauDen - 1) / TauDen + 1
+      val ranked = ts.sortBy(t => (df.getOrElse(t, 0L), t))
+      (id, n, ranked.take(p.toInt).zipWithIndex.map { case (t, i) => t -> (i + 1L) }.toMap)
+    }
+    (for {
+      (a, na, pa) <- prefixes; (b, nb, pb) <- prefixes
+      if a < b && touch(a, b)
+      if nb >= (TauNum * na + TauDen - 1) / TauDen && nb <= na * TauDen / TauNum
+      if pa.exists { case (t, ra) => pb.get(t).exists { rb => !positional ||
+        (1 + math.min(na - ra, nb - rb)) * (TauNum + TauDen) >= TauNum * (na + nb)
+      } }
+    } yield (a, b)).toSet
+  }
+
+  test("candidate counts equal the driver-side PPJoin candidate set") {
+    // one row per pair at its first shared prefix token must count exactly
+    // the distinct pairs some shared prefix token generates: the sweep
+    // corpora (prefixes of at most 2 tokens) and the graded corpus (3,
+    // where a pair can share several prefix tokens that pass the bound),
+    // with the positional filter on and off
+    val corpora = sweep.map(_._2) :+ graded
+    for ((rows, k) <- corpora.zipWithIndex; positional <- Seq(true, false))
+      withPositional(positional) {
+        val clue = s"corpus $k positional=$positional"
+        val d = docs(rows: _*)
+        val full = run(d).map(p => (p._1, p._2))
+        assert(full.distinct === full, clue)
+        val fullCand = candidates(rows, positional, _ => true, (_, _) => true)
+        assert(PpJoin.lastCandidates === fullCand.size.toLong, clue)
+        val incr = runInc(d)
+        assert(incr.distinct === incr, clue)
+        val incrCand = candidates(rows, positional, id => !inBatch(id),
+          (a, b) => inBatch(a) || inBatch(b))
+        assert(PpJoin.lastIncrCandidates === incrCand.size.toLong, clue)
+        assert(fullCand.nonEmpty && incrCand.nonEmpty, s"$clue: no candidates")
+      }
   }
 
   test("deterministic across layouts") {
@@ -189,17 +255,30 @@ class PpJoinSpec extends SparkSpec {
     }
   }
 
-  test("string-verify fallback equals the hashed fast path (ADVICE r7 #3)") {
-    // the collision fallback can't be triggered by real data in-test
-    // (64-bit birthday), so force it: results must be IDENTICAL —
-    // verification arithmetic, not encoding, decides the output
-    val corpus = Tables.documents(spark, sf())
-    val fast = run(corpus)
-    val fastInc = runInc(corpus)
-    PpJoin.forceStringVerify = true
-    try {
-      assert(run(corpus) === fast)
-      assert(runInc(corpus) === fastInc)
-    } finally PpJoin.forceStringVerify = false
+  test("one warm call of each join runs a pinned job budget") {
+    val d = docs(sweep.head._2: _*)
+    def jobs(group: String)(call: => DataFrame): Int = {
+      def once(): Set[Row] =
+        try call.collect().toSet finally CheckpointRegistry.releaseAll(spark)
+      val warm = once()
+      val (rows, n) = Profile.countJobs(spark, group)(once())
+      assert(rows === warm)
+      n
+    }
+    val full = jobs("ppjoin-spec-full")(PpJoin.similarPairs(spark, d))
+    val incr = jobs("ppjoin-spec-incremental")(PpJoin.incrementalPairs(spark, d))
+    info(s"jobs for one call: similarPairs $full, incrementalPairs $incr")
+    assert(full === SimilarPairsJobs)
+    assert(incr === IncrementalPairsJobs)
   }
+
+  /** Jobs of one warm similarPairs call on the first sweep corpus,
+    * collected: the rank-encoded docs are materialized once and the
+    * scored candidates once (ckptCounted counts them in the same job).
+    * 14 with a candidate `distinct` and two verify joins. */
+  private val SimilarPairsJobs = 7
+
+  /** Jobs of one warm incrementalPairs call on the same corpus (18 with
+    * two prefix frames, a candidate `distinct` and two verify joins). */
+  private val IncrementalPairsJobs = 7
 }
