@@ -37,24 +37,20 @@ object CitationAnalytics {
   /** Hop-plot for the undirected `year` snapshot, reference output shape
     * `(d, g(d), percent_of_total)` (Application.scala:116) with the
     * reference's stop conditions (d <= 20, stop once coverage >= 0.9;
-    * Analytics.scala:196). The denominator is computed via connected
-    * components (cheap, O(diameter) rounds) — or pass `totalPairs`
-    * (e.g. from a nodepairs.csv, S3) to skip that — which lets the
-    * O(pairs)-state BFS short-circuit at the coverage threshold.
+    * Analytics.scala:196). One BFS per source gives the snapshot's exact
+    * distance histogram ([[HopPlot.distanceHistogram]]); its sum over
+    * every distance, halved, is the denominator, Σ C(size, 2) over the
+    * connected components. A given `totalPairs` (e.g. from a
+    * nodepairs.csv, S3) is used instead.
     */
   def diameter(spark: SparkSession, citations: DataFrame,
       publishedDates: DataFrame, year: Int,
       maxD: Int = 20, coverage: Double = 0.9,
       totalPairs: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    // the snapshot's join and text scans run once: both loops read this
-    // checkpoint and are sized from its row count
-    val (snap, n, _) = org.apache.spark.sql.GraftColumnBridge.ckptCounted(
+    val hist = HopPlot.distanceHistogram(spark,
       snapshotEdges(citations, publishedDates, year))
-    try {
-      val total = totalPairs.orElse(Some(ConnectedComponents.connectedPairs(snap, n)))
-      HopPlot.hopPlotRows(spark, snap, n, maxD, coverage, total)
-        .toDF("d", "g(d)", "percent_of_total")
-    } finally Superstep.release(snap)
+    HopPlot.rows(hist, maxD, coverage, totalPairs.orElse(Some(hist.sum / 2)))
+      .toDF("d", "g(d)", "percent_of_total")
   }
 }

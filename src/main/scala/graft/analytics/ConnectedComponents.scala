@@ -28,14 +28,6 @@ object ConnectedComponents {
       full.select(col("id"), col("comp"))
     }
 
-  /** Connected unordered pairs of `edges` (sum of C(size, 2) over the
-    * components), aggregated while the loop is still pinned. */
-  private[analytics] def connectedPairs(edges: DataFrame, rows: Long): Long =
-    Superstep.run(edges.sparkSession, "components", rows) { loop =>
-      sizesOf(labels(loop, edges))
-        .agg(coalesce(sum(col("n_pairs")), lit(0L))).head.getLong(0)
-    }
-
   /** The converged (id, comp, chg) labels, owned by `loop`. */
   private def labels(loop: Superstep.Loop, edges: DataFrame): DataFrame = {
     import graft.graph.CitationGraph.bidirectional
@@ -68,11 +60,9 @@ object ConnectedComponents {
   /** Component sizes + the connected-pair count per component
     * (denominator of the hop-plot percentages: sum of C(size,2)). */
   def componentSizes(edges: DataFrame): DataFrame =
-    sizesOf(components(edges)).orderBy(col("comp"))
-
-  private def sizesOf(comps: DataFrame): DataFrame =
-    comps
+    components(edges)
       .groupBy(col("comp")).agg(count(lit(1)).as("size"))
       .select(col("comp"), col("size"),
         (col("size") * (col("size") - 1) / 2).cast("long").as("n_pairs"))
+      .orderBy(col("comp"))
 }

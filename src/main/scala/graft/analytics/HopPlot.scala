@@ -1,5 +1,6 @@
 package graft.analytics
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -7,113 +8,149 @@ import org.apache.spark.sql.functions._
   * Analytics.scala:152-229): g(d) = number of distinct connected node
   * pairs at shortest-path distance <= d.
   *
-  * Implementation: level-synchronous all-pairs BFS over ordered pairs.
-  * Key design vs the reference (Analytics.scala:235-280): no path arrays —
-  * the visited-set anti-join subsumes the cycle check for shortest paths,
-  * shrinking state from O(pairs x pathLen) to O(pairs). Each round:
-  * frontier ⋈ edges -> candidates, anti-join visited -> new frontier,
-  * union into visited. `localCheckpoint` truncates the growing union
-  * lineage every round (the reference's unpersist dance, done properly);
-  * on a real cluster swap for `checkpoint` with a reliable dir.
+  * Implementation: one exact BFS per source, all in one Spark job
+  * ([[distanceHistogram]]). The graph's deduplicated, loop-free edges
+  * are collected, their ids compacted to 0..V-1 and laid out as a CSR
+  * adjacency in the calling JVM, which is broadcast once; each task runs a
+  * plain BFS from each of its sources and returns the ordered pairs at
+  * each exact distance, and the caller sums the histograms. No path
+  * arrays (the reference's, Analytics.scala:235-280) and no per-level
+  * rounds: state is O(V + E) broadcast plus O(V) per task, for the
+  * all-pairs BFS's O(V·(V+E)) work.
   *
-  * Scale: all-pairs BFS is inherently O(pairs) state — fine for the
-  * bounded analytics graph it serves (reference materialized 76M pairs);
-  * at 100-TB graph scale the same API should switch to HyperANF-style
-  * approximation (approx_count_distinct over neighborhoods).
+  * Scale: the adjacency must fit in one JVM. Beyond that the same API
+  * switches to the HyperANF approximation (HyperANF.scala), O(2^lgK)
+  * sketch state per vertex.
   */
 object HopPlot {
 
   final case class HopRow(d: Int, g_d: Long, pct: Double)
 
+  /** Undirected graph on vertices 0..V-1: the neighbors of v are
+    * `targets(offsets(v) until offsets(v + 1))`. */
+  private final case class Csr(offsets: Array[Int], targets: Array[Int])
+
   /** Hop-plot rows for an undirected graph given by `edges`(src,dst).
     *
     * @param maxD       hard distance cap (reference caps at 20)
-    * @param coverage   stop once g(d)/total >= coverage (reference: 0.90);
-    *                   1.0 computes the full curve to the fixpoint.
-    * @param totalPairs known connected-pair count (unordered). When given
-    *                   (from ConnectedComponents.componentSizes or a
-    *                   nodepairs file, S3), the BFS SHORT-CIRCUITS at the
-    *                   coverage threshold — the scale path: components
-    *                   cost O(diameter) cheap rounds, the all-pairs BFS
-    *                   O(pairs) state per round. Without it the full
-    *                   fixpoint is computed and is itself the denominator.
+    * @param coverage   keep rows up to the first whose pct >= coverage
+    *                   (reference: 0.90); 1.0 keeps every row.
+    * @param totalPairs known connected-pair count (unordered), the pct
+    *                   denominator (ConnectedComponents.componentSizes or
+    *                   a nodepairs file, S3). Without it the pairs within
+    *                   the reported rows are the denominator.
     */
   def hopPlotRows(
       spark: SparkSession,
       edges: DataFrame,
       maxD: Int = 20,
       coverage: Double = 1.0,
-      totalPairs: Option[Long] = None): Seq[HopRow] = {
-    // the loop is sized from the ordered-pair count this first
-    // materialization takes anyway, so the BFS runs no count of its own
-    val (pairs, n, _) = org.apache.spark.sql.GraftColumnBridge.ckptCounted(
-      graft.graph.CitationGraph.bidirectional(edges))
-    Superstep.run(spark, "hopplot", n) { loop =>
-      bfs(loop, loop.own(pairs), n, maxD, coverage, totalPairs)
+      totalPairs: Option[Long] = None): Seq[HopRow] =
+    rows(distanceHistogram(spark, edges), maxD, coverage, totalPairs)
+
+  /** Ordered connected pairs of `edges` (undirected) at each exact
+    * distance: element d counts the pairs at distance d, element 0 is 0,
+    * the last element is nonzero; empty for a graph without edges. Its
+    * sum is twice Σ C(size, 2) over the connected components. */
+  def distanceHistogram(spark: SparkSession, edges: DataFrame): Array[Long] = {
+    val adj = csr(spark, edges)
+    val v = adj.offsets.length - 1
+    if (v == 0) Array.emptyLongArray
+    else {
+      val sc = spark.sparkContext
+      val bc = sc.broadcast(adj)
+      try {
+        // slices from the session's setting, not the host's cores, so a
+        // call runs the same tasks on every host
+        val slices = math.min(v, spark.conf.get("spark.sql.shuffle.partitions").toInt)
+        val parts = sc.runJob(sc.parallelize(0 until v, slices), new SourceBfs(bc))
+        val hist = new Array[Long](parts.map(_.length).max)
+        parts.foreach(p => p.indices.foreach(d => hist(d) += p(d)))
+        hist.take(hist.lastIndexWhere(_ > 0) + 1)
+      } finally bc.destroy()
     }
   }
 
-  /** [[hopPlotRows]] over `edges` of known size `rows`: the ordered
-    * pairs are materialized inside the pinned loop too. */
-  private[analytics] def hopPlotRows(spark: SparkSession, edges: DataFrame,
-      rows: Long, maxD: Int, coverage: Double,
-      totalPairs: Option[Long]): Seq[HopRow] =
-    Superstep.run(spark, "hopplot", rows) { loop =>
-      val (pairs, n, _) = loop.ckpt(graft.graph.CitationGraph.bidirectional(edges))
-      bfs(loop, pairs, n, maxD, coverage, totalPairs)
+  /** The deduplicated, loop-free undirected edges of `edges` as a CSR
+    * adjacency over compacted ids (rank in the sorted distinct ids). */
+  private def csr(spark: SparkSession, edges: DataFrame): Csr = {
+    import spark.implicits._
+    // each undirected edge once; both directions go into the adjacency
+    val und = graft.graph.CitationGraph.bidirectional(edges)
+      .filter(col("src") < col("dst")).as[(Long, Long)].collect()
+    require(und.length <= Int.MaxValue / 2,
+      s"hop-plot adjacency of ${und.length} edges exceeds one array")
+    val ids = (und.map(_._1) ++ und.map(_._2)).distinct
+    java.util.Arrays.sort(ids)
+    def ix(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
+    val a = und.map(e => ix(e._1))
+    val b = und.map(e => ix(e._2))
+    val offsets = new Array[Int](ids.length + 1)
+    a.indices.foreach { i => offsets(a(i) + 1) += 1; offsets(b(i) + 1) += 1 }
+    (1 to ids.length).foreach(v => offsets(v) += offsets(v - 1))
+    val next = java.util.Arrays.copyOf(offsets, ids.length)
+    val targets = new Array[Int](2 * und.length)
+    a.indices.foreach { i =>
+      targets(next(a(i))) = b(i); next(a(i)) += 1
+      targets(next(b(i))) = a(i); next(b(i)) += 1
     }
+    Csr(offsets, targets)
+  }
 
-  /** Level-synchronous BFS from the materialized ordered `pairs`. */
-  private def bfs(loop: Superstep.Loop, pairs: DataFrame, nPairs: Long,
-      maxD: Int, coverage: Double, totalPairs: Option[Long]): Seq[HopRow] = {
-    loop.input(nPairs)
-    // uncached: a cached m-partitioned copy was never read, each level re-shuffled it;
-    // pairs checkpointed on src, joined in place, ran g_eff_diameter slower at sf0.1
-    val nbr = pairs.select(col("src").as("m"), col("dst").as("nb"))
-    var frontier = pairs
-    var visited = pairs
-    val perD = scala.collection.mutable.ArrayBuffer[(Int, Long)]()
-    var newCount = nPairs
-    if (newCount > 0) perD += 1 -> newCount // empty graph → empty hop-plot
-    var cum = newCount
-    var d = 1
-    def coverageReached: Boolean = totalPairs.exists { t =>
-      coverage < 1.0 && (cum / 2).toDouble / t.toDouble >= coverage
+  /** One task's BFS runs: for each source of its partition, the ordered
+    * pairs (source, t) at each exact distance, summed. A named class, not
+    * a lambda, so Spark's closure cleaner has no bytecode to scan. */
+  private final class SourceBfs(adj: Broadcast[Csr])
+      extends (Iterator[Int] => Array[Long]) with Serializable {
+    def apply(sources: Iterator[Int]): Array[Long] = {
+      val Csr(offsets, targets) = adj.value
+      val dist = Array.fill(offsets.length - 1)(-1)
+      val queue = new Array[Int](offsets.length - 1)
+      var hist = new Array[Long](8)
+      while (sources.hasNext) {
+        val s = sources.next()
+        dist(s) = 0
+        queue(0) = s
+        var head = 0
+        var tail = 1
+        while (head < tail) {
+          val u = queue(head)
+          head += 1
+          val du = dist(u) + 1
+          var i = offsets(u)
+          while (i < offsets(u + 1)) {
+            val w = targets(i)
+            if (dist(w) < 0) {
+              dist(w) = du
+              queue(tail) = w
+              tail += 1
+              if (du == hist.length) hist = java.util.Arrays.copyOf(hist, 2 * du)
+              hist(du) += 1
+            }
+            i += 1
+          }
+        }
+        // reset only what this source reached: O(component), not O(V)
+        var k = 0
+        while (k < tail) { dist(queue(k)) = -1; k += 1 }
+      }
+      hist
     }
-    while (newCount > 0 && d < maxD && !coverageReached) {
-      d += 1
-      val cand = frontier.join(nbr, col("dst") === col("m"))
-        .select(col("src"), col("nb").as("dst"))
-        .filter(col("src") =!= col("dst"))
-        .distinct()
-      val (fresh, nFresh, _) = loop.step(
-        cand.join(visited, Seq("src", "dst"), "left_anti"))
-      newCount = nFresh
-      if (newCount > 0) {
-        val (nextVisited, _, _) = loop.ckpt(visited.union(fresh))
-        // `pairs` (round 1's frontier and visited) stays until the loop
-        // returns: every level's neighbor side reads it
-        if (frontier ne pairs) loop.free(frontier, visited)
-        frontier = fresh
-        visited = nextVisited
-        perD += d -> newCount
-        cum += newCount
-      } else loop.free(fresh)
-    }
-    if (newCount > 0) loop.unconverged()
+  }
 
-    val total = totalPairs.getOrElse(perD.map(_._2).sum / 2) // unordered
-    var c = 0L
-    val rows = perD.map { case (dd, n) =>
-      c += n
-      // unordered pair counts; pct via double division + half-up 6dp,
-      // matching DuckDB round(x, 6)
-      val g = c / 2
-      val pct = BigDecimal(g.toDouble / total.toDouble)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      HopRow(dd, g, pct)
-    }.toSeq
-    coverageCut(rows, coverage)
+  /** Rows d = 1..maxD of a [[distanceHistogram]]: g(d) unordered, pct
+    * against `totalPairs` or, without it, the pairs within these rows;
+    * cut at `coverage`. */
+  private[analytics] def rows(hist: Array[Long], maxD: Int, coverage: Double,
+      totalPairs: Option[Long]): Seq[HopRow] = {
+    val g = hist.drop(1).take(maxD).scanLeft(0L)(_ + _).tail.map(_ / 2)
+    val total = totalPairs.getOrElse(g.lastOption.getOrElse(0L))
+    // pct via double division + half-up 6dp, matching DuckDB round(x, 6)
+    val all = g.toSeq.zipWithIndex.map { case (gd, i) =>
+      HopRow(i + 1, gd, BigDecimal(gd.toDouble / total.toDouble)
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+    }
+    coverageCut(all, coverage)
   }
 
   private def coverageCut(rows: Seq[HopRow], coverage: Double): Seq[HopRow] =

@@ -7,7 +7,8 @@ import org.apache.spark.sql.GraftColumnBridge.{CountTrue, Fold}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.storage.StorageLevel
 
-/** The skeleton every superstep loop in graft.analytics runs on.
+/** The skeleton the round loops of graft.analytics and pipeline.Coreset
+  * run on (the exact hop-plot is one job, not a loop: HopPlot).
   *
   * [[run]] pins the session conf for the loop's duration:
   *   - adaptive re-planning is off, because a plan whose partitioning is

@@ -128,24 +128,30 @@ object GraftColumnBridge {
       case p => throw new IllegalStateException(
         s"localCheckpoint did not plan a LogicalRDD: ${p.getClass.getName}")
     }
-    val zero = if (fold == Max) Long.MinValue else 0L
-    val parts = c.sparkSession.sparkContext.runJob(rdd,
-      (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
-        var n = 0L
-        var s = zero
-        while (it.hasNext) {
-          val r = it.next(); n += 1L
-          if (idx >= 0 && !r.isNullAt(idx)) fold match {
-            case CountTrue => if (r.getBoolean(idx)) s += 1L
-            case Sum => s += r.getLong(idx)
-            case Max => s = math.max(s, r.getLong(idx))
-          }
-        }
-        (n, s)
-      })
+    val parts = c.sparkSession.sparkContext.runJob(rdd, new CountFold(idx, fold))
     val n = parts.map(_._1).sum
-    val s = if (fold == Max) parts.map(_._2).foldLeft(zero)(math.max)
+    val s = if (fold == Max) parts.map(_._2).foldLeft(Long.MinValue)(math.max)
       else parts.map(_._2).sum
     (c, n, s)
+  }
+
+  /** One partition's (rows, `fold` over column `idx`, or 0 when `idx` is
+    * -1) for [[ckptCounted]]. A named class, not a lambda, so Spark's
+    * closure cleaner does not re-scan this object's bytecode every call. */
+  private final class CountFold(idx: Int, fold: Fold)
+      extends (Iterator[catalyst.InternalRow] => (Long, Long)) with Serializable {
+    def apply(it: Iterator[catalyst.InternalRow]): (Long, Long) = {
+      var n = 0L
+      var s = if (fold == Max) Long.MinValue else 0L
+      while (it.hasNext) {
+        val r = it.next(); n += 1L
+        if (idx >= 0 && !r.isNullAt(idx)) fold match {
+          case CountTrue => if (r.getBoolean(idx)) s += 1L
+          case Sum => s += r.getLong(idx)
+          case Max => s = math.max(s, r.getLong(idx))
+        }
+      }
+      (n, s)
+    }
   }
 }

@@ -2,13 +2,11 @@ package graft
 
 import graft.analytics.{ConnectedComponents, HopPlot}
 
-/** Stress the iterative BFS beyond toy graphs: a deterministic
-  * pseudo-random graph large enough that the visited set holds ~10⁶
-  * ordered pairs across many rounds — exercising the localCheckpoint
-  * lineage discipline and the anti-join state growth the reference
-  * struggled with (SURVEY.md §7.6). Invariants, not goldens: monotone
-  * g(d), fixpoint total == Σ C(component,2) from the independent
-  * connected-components computation, and coverage short-circuit
+/** Stress the all-pairs BFS beyond toy graphs: a deterministic
+  * pseudo-random graph with ~2·10⁶ connected ordered pairs, the state
+  * growth the reference struggled with (SURVEY.md §7.6). Invariants, not
+  * goldens: monotone g(d), total == Σ C(component,2) from the
+  * independent connected-components computation, and coverage-cut
   * consistency.
   */
 class HopPlotScaleSpec extends SparkSpec {

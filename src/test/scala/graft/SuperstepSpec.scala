@@ -130,12 +130,12 @@ class SuperstepSpec extends SparkSpec {
   }
 
   /** Jobs of one warm `diameter(…, 1998)` call on the toy fixture: the
-    * snapshot is materialized once, both loops run pinned on one
-    * partition, the components loop joins its edges in place rather than
-    * broadcasting them every round, and the pair total is summed inside
-    * that loop (29 with a floor of 4 partitions and a broadcast a round). */
-  private val DiameterJobs = 21
+    * snapshot's ordered pairs are collected under adaptive execution (6
+    * jobs) and one BFS job over the broadcast adjacency gives the whole
+    * distance histogram. */
+  private val DiameterJobs = 7
 
-  /** Tasks of the same call. */
-  private val DiameterTasks = 31
+  /** Tasks of the same call: the BFS job's slices are the session's
+    * shuffle partitions (4) capped at the vertex count, on any host. */
+  private val DiameterTasks = 10
 }
